@@ -54,25 +54,25 @@ def simhash_vote_col(h: Column, k: int) -> Column:
 
 
 def winnow_fp_udf(k: int, w: int):
-    """Arrow/numpy twin of the winnowing Column expression
-    (operators.textstats.winnow_fingerprints): per document, poly-hash
-    every char k-gram and keep the min of each w-window, distinct.
+    """Winnowing kernel behind operators.textstats.winnow_fingerprints:
+    per document, poly-hash every char k-gram and keep the min of each
+    w-window, distinct.
 
-    Pure int64 arithmetic so it is BIT-IDENTICAL to the Column path and
-    the DuckDB oracle: codepoints come from a utf-32 view (== Spark
-    ``ascii``/DuckDB ``ord``), the k-char fold is k vectorized
-    multiply-add-mod passes over the gram array, the window min is w
-    shifted ``np.minimum`` passes.  This exists because the Column version
-    nests three lambda HOFs (transform→aggregate→transform) which Spark
-    evaluates interpreted — ~4k fold steps per document.
+    Pure int64 arithmetic so it is BIT-IDENTICAL to the DuckDB oracle
+    (gate_textdata._o_winnow_fp): codepoints come from a utf-32 view
+    (== DuckDB ``ord``), the k-char fold is k vectorized multiply-add-mod
+    passes over the gram array, the window min is w shifted
+    ``np.minimum`` passes — one numpy pass per document instead of the
+    ~4k interpreted lambda fold steps a nested-HOF Column expression
+    costs.
 
     Case contract: the kernel does NOT lowercase — the caller normalizes
     case in the Spark plan (``F.lower``, as winnow_fingerprints does), so
-    all three paths (arrow / column / DuckDB ``lower()``) see the same JVM
-    case mapping.  A Python ``str.lower()`` here would diverge for
-    codepoints with full-vs-simple case mappings (e.g. U+0130 'İ' → 'i̇'
-    two codepoints in Python, one in some engines) and break the
-    advertised bit-parity; the non-ASCII parity pytest pins this.
+    the fingerprints follow the JVM case mapping.  A Python
+    ``str.lower()`` here would diverge for codepoints with
+    full-vs-simple case mappings (e.g. U+0130 'İ' → 'i̇' two codepoints
+    in Python, one in some engines); the non-ASCII parity pytest pins
+    this against the DuckDB spec over Spark-lowered text.
     """
     P, B, S0 = S.POLY_P, S.POLY_BASE, S.POLY_SEED0
 

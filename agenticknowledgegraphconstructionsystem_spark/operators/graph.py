@@ -226,7 +226,6 @@ def pagerank_fixed_point(
     dst: str = "dst",
     iters: int = 8,
     tol: int | None = None,
-    co_partition: bool = False,
 ) -> DataFrame:
     """(src, dst) directed edge list (pre-deduplicated) → (node, pr)
     after ``iters`` power iterations, pr an int64 fixed-point score.
@@ -257,42 +256,11 @@ def pagerank_fixed_point(
     engines, partitionings, and runs.  Floors leak a little mass per
     round (scores sum to slightly under S), identically in both engines.
     """
-    # ``co_partition=True`` — exchange fusion for LARGE node sets: every
-    # per-iteration operator keys on a node id, so the loop's static
-    # inputs are pinned ONCE to the same explicit hash partitioning
-    # (HashPartitioning(node-ish key, nparts); an explicit numPartitions
-    # is never AQE-coalesced, and cut_lineage(preserve_partitioning=True)
-    # keeps it across checkpoints), after which the contribs join
-    # (e_src == node) reads BOTH sides exchange-free and only the dst-sum
-    # aggregation moves data: ONE exchange per iteration instead of three.
-    # Results are partitioning-independent (integer arithmetic) —
-    # pytest-pinned bit-identical either way.
-    #
-    # Default FALSE, and this is a measured negative at gate scale, not a
-    # guess (round-6 interleaved A/B, sf0.1, min-of-3: co-partitioned
-    # 45.0 s vs AQE-adaptive 30.0 s, ratio 1.50 attributable; control
-    # queries at parity): the co-mention graphs behind the gates have
-    # ~10²-10³ nodes, where AQE turns all three per-iteration shuffles
-    # into broadcasts of tiny tables — strictly better than SMJ sorts
-    # over 32 pinned partitions.  The fusion pays off only when the score
-    # vector itself is too big to broadcast (10⁸+ nodes on a cluster),
-    # which no local bench can exhibit honestly; see PLANS.md round 6 for
-    # the large-graph probe.
-    _pp = bool(co_partition)
-
-    def _cut(d: DataFrame) -> DataFrame:
-        return cut_lineage(d, preserve_partitioning=_pp)
-
-    def _pin(d: DataFrame, col: str) -> DataFrame:
-        return d.repartition(nparts, col) if _pp else d
-
-    nparts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     nodes = (
         edges.select(F.col(src).alias("node"))
         .unionByName(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .transform(lambda d: _pin(d, "node"))
-        .transform(_cut)
+        .transform(cut_lineage)
     )
     n = nodes.count()
     if n == 0:
@@ -301,19 +269,18 @@ def pagerank_fixed_point(
     e = (
         edges.join(out_deg, src)
         .select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"), "out_deg")
-        .transform(lambda d: _pin(d, "e_src"))
-        .transform(_cut)
+        .transform(cut_lineage)
     )
     base = ((DAMP_DEN - DAMP_NUM) * PAGERANK_SCALE) // (DAMP_DEN * n)
     scores = nodes.withColumn(
         "pr", F.lit(PAGERANK_SCALE // n).cast("long")
-    ).transform(_cut)
+    ).transform(cut_lineage)
     has_out = out_deg.select(F.col(src).alias("node"))
     # the dangling SET is static even though its mass changes: when it is
     # empty (always true for symmetrized graphs) the per-iteration scalar
     # aggregate is pure overhead — one membership check up front replaces
     # `iters` driver round-trips (measured 16.7 s → ~8 s at sf0.1)
-    dangling_nodes = nodes.join(has_out, "node", "left_anti").transform(_cut)
+    dangling_nodes = nodes.join(has_out, "node", "left_anti").transform(cut_lineage)
     any_dangling = bool(dangling_nodes.head(1))
     global LAST_PAGERANK_ITERS
     LAST_PAGERANK_ITERS = 0
@@ -357,7 +324,7 @@ def pagerank_fixed_point(
         # (contribs join + delta join), so an uncut even-round layer would
         # be evaluated twice.
         if any_dangling or tol is not None or it % 2 == 1 or it == iters - 1:
-            new_scores = new_scores.transform(_cut)
+            new_scores = new_scores.transform(cut_lineage)
         if tol is not None and (it % 2 == 1 or it == iters - 1):
             delta = (
                 new_scores.alias("n")
@@ -393,7 +360,7 @@ def hits_scores(
     Scores are doubles: the per-round sums are float partial-sum-order
     dependent, so HITS is pytest-verified against an independent numpy
     power iteration (rank order and per-score tolerance) rather than
-    hash-gated — the documented clustering.py / streaming precedent.
+    hash-gated — the documented streaming precedent.
     Max-normalization (not L2) keeps every round's scalar a plain
     ``max`` aggregate.
 

@@ -169,44 +169,6 @@ def auto_band_pairs(
     return exact_pairs.unionByName(star_pairs).distinct()
 
 
-def tfidf_cosine_edges(
-    entities: DataFrame, threshold: float = 0.5, num_hashes: int = 16
-) -> DataFrame:
-    """→ (name_a, name_b, cosine): MinHash-LSH blocking + TF-IDF cosine
-    scoring over char-3gram shingles (the north_star's scoring function).
-
-    idf = ln(N / df) per shingle; each name's vector is its distinct
-    shingles weighted by idf (tf = 1 after array_distinct).  Cosine is
-    computed only on the LSH candidate pairs via a shared-shingle join —
-    the full vector space never materializes pairwise.
-    """
-    sh = name_shingles(entities)
-    n_names = sh.select("name").distinct().count()
-    idf = sh.groupBy("shingle").agg(
-        F.log(F.lit(float(n_names)) / F.count("*")).alias("idf")
-    )
-    vec = sh.join(idf, "shingle")  # (name, shingle, idf); tf == 1
-    norms = vec.groupBy("name").agg(
-        F.sqrt(F.sum(F.col("idf") * F.col("idf"))).alias("norm")
-    )
-    cand = candidate_pairs(minhash_signatures(sh, num_hashes))
-    va = vec.select(F.col("name").alias("name_a"), "shingle", F.col("idf").alias("idf_a"))
-    vb = vec.select(F.col("name").alias("nb"), F.col("shingle").alias("shingle_b"), F.col("idf").alias("idf_b"))
-    dots = (
-        cand.join(va, "name_a")
-        .join(vb, (F.col("name_b") == F.col("nb")) & (F.col("shingle") == F.col("shingle_b")))
-        .groupBy("name_a", "name_b")
-        .agg(F.sum(F.col("idf_a") * F.col("idf_b")).alias("dot"))
-    )
-    return (
-        dots.join(norms.select(F.col("name").alias("name_a"), F.col("norm").alias("norm_a")), "name_a")
-        .join(norms.select(F.col("name").alias("name_b"), F.col("norm").alias("norm_b")), "name_b")
-        .withColumn("cosine", F.col("dot") / (F.col("norm_a") * F.col("norm_b")))
-        .where(F.col("cosine") >= threshold)
-        .select("name_a", "name_b", "cosine")
-    )
-
-
 #: df cap for the exact-blocking candidate path: char-3grams present in
 #: more than this many entity NAMES are excluded from *pairing* (not from
 #: the Jaccard verify).  Far above any gate/test-scale df, so the oracle
@@ -441,28 +403,21 @@ def connected_components(
 def canonicalize(
     entities: DataFrame,
     threshold: float = 0.5,
-    scorer: str = "jaccard",
     blocking: str = "lsh",
     max_iter: int = 20,
     mode: str = "all_pairs",
 ) -> DataFrame:
     """→ (name, canonical_name, component).  Canonical member = highest
     mention_count, tie-break lexicographically smallest name.  Singleton
-    entities map to themselves.  scorer: 'jaccard' (exact set overlap) or
-    'tfidf_cosine' (idf-weighted, favors matches on rare shingles);
-    blocking: see :func:`similarity_edges`; max_iter: CC round bound
-    (pointer jumping makes 20 cover diameter ~2^20 — see
+    entities map to themselves.  Edges are exact char-3gram Jaccard
+    >= ``threshold``; blocking: see :func:`similarity_edges`; max_iter:
+    CC round bound (pointer jumping makes 20 cover diameter ~2^20 — see
     :func:`connected_components`); mode: 'all_pairs' (exact),
     'representative' (linear-cost dense-family escape hatch — see
     :func:`representative_band_pairs`), or 'auto' (exact below
     DEFAULT_REP_BUCKET members per LSH bucket, star above — see
     :func:`auto_band_pairs`)."""
-    if scorer == "tfidf_cosine":
-        edges = tfidf_cosine_edges(entities, threshold).withColumnRenamed(
-            "cosine", "jaccard"
-        )
-    else:
-        edges = similarity_edges(entities, threshold, blocking=blocking, mode=mode)
+    edges = similarity_edges(entities, threshold, blocking=blocking, mode=mode)
     comp = connected_components(edges, max_iter=max_iter)
     members = entities.join(comp, "name", "left").withColumn(
         "component", F.coalesce(F.col("component"), F.xxhash64("name"))
@@ -470,13 +425,15 @@ def canonicalize(
     # canonical member = highest mention_count, tie-break smallest name —
     # ONE map-side-combinable aggregate: min(struct(-mc, name)) orders by
     # mention_count DESC then name ASC, so b.nm IS the canonical name.
+    # A NULL count is coalesced to 0: struct ordering puts NULL first, so
+    # an uncoalesced NULL would win the election over every real count.
     # (Replaces the former three-step max-struct → top-count join → min
     # agg: same deterministic winner, two fewer shuffles and one fewer
     # evaluation of the members subtree.)
     canon = members.groupBy("component").agg(
         F.min(
             F.struct(
-                (-F.col("mention_count")).alias("negmc"),
+                (-F.coalesce(F.col("mention_count"), F.lit(0))).alias("negmc"),
                 F.col("name").alias("nm"),
             )
         ).alias("b")

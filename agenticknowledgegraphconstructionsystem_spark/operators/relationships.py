@@ -43,38 +43,6 @@ def seminal_url(mentions: DataFrame) -> DataFrame:
     return mentions.agg(F.min("url").alias("seminal_url"))
 
 
-def hub_shared_concepts(mentions: DataFrame) -> DataFrame:
-    """J3 hub-and-spoke: shared concepts between each doc and the seminal
-    doc, both sides relevance >= 0.4 (run-relationship-discovery.ts:87).
-
-    Output: (url, name, src_rel_pct, sem_rel_pct, avg2_pct) where
-    avg2_pct = src+sem (2× the average, exact integers).
-    """
-    m = mentions.where(F.col("relevance_pct") >= S.MIN_RELEVANCE_PCT).select(
-        "url", "name", "relevance_pct"
-    )
-    sem = (
-        m.join(F.broadcast(seminal_url(mentions)), m.url == F.col("seminal_url"))
-        .select(
-            F.col("name").alias("sem_name"),
-            F.col("relevance_pct").alias("sem_rel_pct"),
-            "seminal_url",
-        )
-    )
-    return (
-        m.join(F.broadcast(sem), m.name == sem.sem_name)
-        .where(F.col("url") != F.col("seminal_url"))
-        .select(
-            "url",
-            "seminal_url",
-            "name",
-            F.col("relevance_pct").alias("src_rel_pct"),
-            "sem_rel_pct",
-            (F.col("relevance_pct") + F.col("sem_rel_pct")).alias("avg2_pct"),
-        )
-    )
-
-
 def _bucket_agg(shared: DataFrame, group_cols: list[str]) -> DataFrame:
     """D3 bucket counts per source doc — one map-side-combinable pass."""
     return shared.groupBy(*group_cols).agg(
@@ -158,28 +126,6 @@ def classify_from_flags():
     kw_found = F.lit(False)
     for t in S.RELATIONSHIP_TYPES:
         kw_found = kw_found | F.col(f"kw_{t}")
-    return rtype, kw_found
-
-
-def classify_cols(lower_text):
-    """Back-compat single-expression form (small inputs only — prefer
-    keyword_flag_cols + classify_from_flags on big corpora)."""
-    fallback = (
-        F.when(F.col("hi") >= 3, F.lit("builds_on"))
-        .when(F.col("hi") >= 1, F.lit("extends"))
-        .when(F.col("med") >= 2, F.lit("evaluates"))
-        .when(F.col("med") >= 1, F.lit("addresses"))
-        .when(F.col("lo") >= 1, F.lit("cites"))
-        .otherwise(F.lit(None).cast("string"))
-    )
-    rtype = fallback
-    for t in reversed(S.RELATIONSHIP_TYPES):
-        rtype = F.when(_keyword_hit(lower_text, S.TYPE_KEYWORDS[t]), F.lit(t)).otherwise(
-            rtype
-        )
-    kw_found = F.lit(False)
-    for t in S.RELATIONSHIP_TYPES:
-        kw_found = kw_found | _keyword_hit(lower_text, S.TYPE_KEYWORDS[t])
     return rtype, kw_found
 
 

@@ -204,12 +204,12 @@ def ivf_ann_topk(
     the ``n_centroids`` corpus rows with the smallest affine hash of
     their id (semantics.affine_hash — reproducible in DuckDB, so the
     whole operator is oracle-checkable).  Pass ``centroids`` (a
-    (centroid_id, centroid) table, e.g. from ``clustering.kmeans_fit``)
-    to use TRAINED centroids instead — the plan shape is identical (a
-    broadcast of the centroid table, one narrow assignment pass, and a
-    probe join that touches n_probe/n_centroids of the data instead of a
-    full scan), but on clustered data the lists align with the clusters
-    and probe recall rises (test_ivf_trained_centroids).
+    (centroid_id, centroid) table, e.g. trained offline) to use them
+    instead — the plan shape is identical (a broadcast of the centroid
+    table, one narrow assignment pass, and a probe join that touches
+    n_probe/n_centroids of the data instead of a full scan), but on
+    clustered data the lists align with the clusters and probe recall
+    rises (test_ivf_supplied_centroids).
     """
     c = corpus.select(
         F.col(id_col).alias("cid_src"),

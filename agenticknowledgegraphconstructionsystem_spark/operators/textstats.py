@@ -132,7 +132,6 @@ def winnow_fingerprints(
     text_col: str = "text",
     k: int = 8,
     w: int = 4,
-    engine: str = "arrow",
 ) -> "DataFrame":
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03 — the MOSS scheme): hash every char k-gram with the portable
@@ -147,57 +146,22 @@ def winnow_fingerprints(
     contribute their whole text as the single gram; empty/NULL texts are
     excluded (no content to fingerprint).
 
-    engine='arrow' (default): vectorized int64 numpy kernel
-    (functions.hashing.winnow_fp_udf) — bit-identical to engine='column'
-    (pure built-in expressions, the DuckDB-oracle reference semantics);
-    the Column form nests three lambda HOFs which Spark evaluates
-    interpreted, so the kernel is the hot path and the Column form the
-    cross-engine specification.  Parity is pytest-pinned.
+    The per-document work is the vectorized int64 numpy kernel
+    (functions.hashing.winnow_fp_udf); the cross-engine specification is
+    the td_winnow_fp DuckDB twin (gate_textdata._o_winnow_fp), and parity
+    with it is pytest-pinned.
     """
-    t = F.lower(F.col(text_col))
-    if engine == "arrow":
-        from ..functions.hashing import winnow_fp_udf
+    from ..functions.hashing import winnow_fp_udf
 
-        fp_udf = winnow_fp_udf(k, w)
-        # NO .distinct(): the kernel already emits np.unique(sel) per
-        # document, so (key, fp) rows are distinct as long as ``key`` is
-        # unique in ``docs`` (the documents-table contract every caller
-        # holds).  The former distinct was a full exchange of the entire
-        # fingerprint table doing nothing — the downstream df-cut /
-        # size aggregations shuffle on their own keys regardless.
-        return docs.where(F.col(text_col).isNotNull() & (F.length(t) > 0)).select(
-            F.col(key), F.explode(fp_udf(t)).alias("fp")
-        )
-    # lower(text) bound to a column before the k-gram lambda (HOF-binding
-    # lesson, PLANS.md round 5): embedded in the lambda it would re-lower
-    # the whole document per gram position; the length() reference in the
-    # hashing projection keeps CollapseProject from re-inlining.  The _h
-    # projection below was already safe — size() + the slice lambda are
-    # two references.
-    bound = docs.where(F.col(text_col).isNotNull() & (F.length(t) > 0)).select(
-        F.col(key), t.alias("_t")
-    )
-    tb = F.col("_t")
-    n_grams = F.greatest(F.length(tb) - (k - 1), F.lit(1))
-    hashes = F.transform(
-        F.sequence(F.lit(1), n_grams),
-        lambda i: F.aggregate(
-            F.transform(F.split(tb.substr(i, F.lit(k)), ""), lambda c: F.ascii(c).cast("long")),
-            F.lit(S.POLY_SEED0).cast("long"),
-            lambda acc, c: (acc * F.lit(S.POLY_BASE) + c) % F.lit(S.POLY_P),
-        ),
-    )
-    n_windows = F.greatest(F.size(F.col("_h")) - (w - 1), F.lit(1))
-    sel = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n_windows),
-            lambda j: F.array_min(F.slice(F.col("_h"), j, w)),
-        )
-    )
-    return (
-        bound.select(F.col(key), hashes.alias("_h"))
-        .select(F.col(key), F.explode(sel).alias("fp"))
-        .distinct()
+    t = F.lower(F.col(text_col))
+    fp_udf = winnow_fp_udf(k, w)
+    # NO .distinct(): the kernel already emits np.unique(sel) per
+    # document, so (key, fp) rows are distinct as long as ``key`` is
+    # unique in ``docs`` (the documents-table contract every caller
+    # holds); a distinct would be a full exchange of the fingerprint
+    # table doing nothing.
+    return docs.where(F.col(text_col).isNotNull() & (F.length(t) > 0)).select(
+        F.col(key), F.explode(fp_udf(t)).alias("fp")
     )
 
 

@@ -853,12 +853,6 @@ def threshold_fraction(threshold: float) -> tuple[int, int]:
     return fr.numerator, fr.denominator
 
 
-def simhash_bit_vote(h: int, k: int) -> int:
-    """+1 / -1 vote of token-hash ``h`` for simhash bit ``k`` (threshold at
-    P/2, expressed as 2·x >= P so no division enters any engine)."""
-    return 1 if 2 * affine_hash(h, SIMHASH_A[k], SIMHASH_B[k]) >= POLY_P else -1
-
-
 def rhp_planes(dim: int, num_planes: int, seed: int = 7) -> list[list[float]]:
     """Random-hyperplane LSH planes — seeded Gaussian, generated once in
     Python and rendered as float literals into BOTH the Spark plan and the

@@ -18,9 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
-def cut_lineage(
-    df: DataFrame, eager: bool = True, preserve_partitioning: bool = False
-) -> DataFrame:
+def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     """Truncate ``df``'s lineage for iterative algorithms (PageRank /
     connected-components rounds, triangle-edge reuse, incremental deltas).
 
@@ -33,33 +31,10 @@ def cut_lineage(
     On a 1000-executor run of the O(log d) pointer-jumping loop, a single
     lost executor under localCheckpoint kills the job — reliable
     checkpoints make each round restartable from storage instead.
-
-    ``preserve_partitioning``: under AQE, a checkpoint's LogicalRDD
-    captures UnknownPartitioning (the AdaptiveSparkPlanExec hides the
-    final plan's outputPartitioning), so every downstream consumer
-    re-shuffles — the silent killer of exchange reuse across loop
-    iterations (measured: the co-partitioned pagerank join re-exchanged
-    BOTH checkpointed sides).  Setting this flag materializes the
-    checkpoint with AQE disabled for just that job, so the LogicalRDD
-    carries the real HashPartitioning and AQE-on consumers read it
-    exchange-free (verified both directions).  Use it when the cut
-    output's partitioning is deliberately pinned (explicit
-    ``repartition(n, key)``) for reuse; leave it off where AQE's runtime
-    re-planning of the producing job matters more.
     """
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    restore: str | None = None
-    if preserve_partitioning:
-        restore = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        if sc.getCheckpointDir() is not None:
-            return df.checkpoint(eager)
-        return df.localCheckpoint(eager)
-    finally:
-        if restore is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", restore)
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager)
+    return df.localCheckpoint(eager)
 
 
 #: rows per spread partition (env ``SPARK_GRAFT_SPREAD_ROWS``): sized so a

@@ -66,20 +66,6 @@ def test_pagerank_mass_bounded_and_deterministic(spark):
     assert all(v > 0 for v in a.values())
 
 
-def test_pagerank_co_partition_bit_identical(spark):
-    """co_partition=True (pinned exchange fusion for huge node sets) is a
-    PHYSICAL strategy only: scores must be bit-identical to the adaptive
-    default on a graph with a dangling node and on the oracle graph."""
-    edges = [(2, 1), (3, 1), (5, 1), (1, 2), (2, 3), (3, 4), (5, 4)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    base = {r["node"]: r["pr"] for r in pagerank_fixed_point(df, iters=6).collect()}
-    co = {
-        r["node"]: r["pr"]
-        for r in pagerank_fixed_point(df, iters=6, co_partition=True).collect()
-    }
-    assert co == base == _oracle(edges, 6)
-
-
 def test_triangle_counts_known_graph(spark):
     from agenticknowledgegraphconstructionsystem_spark.operators.graph import (
         triangle_counts,

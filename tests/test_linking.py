@@ -1,5 +1,6 @@
 """D10/D11 — MinHash-LSH entity linking + connected-components
-canonicalization."""
+canonicalization, plus per-doc incremental ingest (which re-runs the
+canonical election over the grown entity table)."""
 
 from __future__ import annotations
 
@@ -12,7 +13,9 @@ from agenticknowledgegraphconstructionsystem_spark.operators.linking import (
     repoint_mentions,
     similarity_edges,
 )
+from agenticknowledgegraphconstructionsystem_spark.plans.pipeline import Pipeline
 from agenticknowledgegraphconstructionsystem_spark.semantics import char_ngrams
+from agenticknowledgegraphconstructionsystem_spark.sources.pages import synthetic_pages
 
 
 def _ents(spark, names_counts):
@@ -74,6 +77,20 @@ def test_canonicalize_picks_highest_mention_count(spark):
     assert mapping["hash-join"] == "hash join"
     assert mapping["hashjoin"] == "hash join"
     assert mapping["lonely"] == "lonely"  # singleton maps to itself
+
+
+def test_canonicalize_null_mention_count_never_wins(spark):
+    """A NULL mention_count ranks as 0: min(struct(-mc, name)) would
+    otherwise sort the NULL first and elect it canonical."""
+    ents = spark.createDataFrame(
+        [("spark", None), ("sparks", 3), ("hash join", None), ("hash-join", None)],
+        "name string, mention_count long",
+    )
+    mapping = {r["name"]: r["canonical_name"] for r in canonicalize(ents).collect()}
+    assert mapping["spark"] == "sparks"
+    assert mapping["sparks"] == "sparks"
+    # all-NULL component: every count ties at 0, smallest name wins
+    assert mapping["hash-join"] == mapping["hash join"] == "hash join"
 
 
 def _partition(mapping_rows):
@@ -177,8 +194,6 @@ def test_auto_mode_exact_below_threshold_star_above(spark):
 
 
 def test_pipeline_link_mode_validated(spark, tmp_path):
-    from agenticknowledgegraphconstructionsystem_spark.plans.pipeline import Pipeline
-
     with pytest.raises(ValueError, match="link_mode"):
         Pipeline(spark, str(tmp_path / "kg"), link_mode="bogus")
     Pipeline(spark, str(tmp_path / "kg2"), link_mode="auto")  # accepted
@@ -195,3 +210,45 @@ def test_repoint_mentions(spark):
     )
     got = {r["url"]: r["name"] for r in repoint_mentions(mentions, mapping).collect()}
     assert got == {"u1": "spark", "u2": "other"}
+
+
+@pytest.mark.slow
+def test_incremental_ingest(spark, tmp_path):
+    all_pages = synthetic_pages(spark, 60)
+    batch1 = all_pages.where("url < 'https://example.org/paper/00040'")
+
+    p = Pipeline(spark, str(tmp_path / "inc"), run_id="i1")
+    p.ingest_increment(batch1)
+    r1 = p.run(batch1)
+    t1 = r1["triples"].count()
+    assert "extract" not in p._recomputed  # ingest committed it
+
+    # second increment: full set, only the 20 new urls get extracted
+    p2 = Pipeline(spark, str(tmp_path / "inc"), run_id="i2")
+    new_docs = p2.ingest_increment(all_pages)
+    assert new_docs.count() == 20
+    assert p2.store.read("extract").count() == 60
+    r2 = p2.run(all_pages)
+    assert "extract" not in p2._recomputed
+    # mentions advanced INCREMENTALLY: the delta's mentions were appended
+    # at ingest time, the committed 40-doc detection was never re-run
+    assert "mentions" not in p2._recomputed
+    assert "entities" in p2._recomputed  # corpus-level aggregates rebuilt
+    # the appended mention lineage rows record delta-sized input (20 docs)
+    lin = p2.lineage().where("stage = 'mentions' and run_id = 'i2'")
+    assert lin.count() >= 1
+    assert {r["input_rows"] for r in lin.collect()} == {20}
+
+    # equals a from-scratch run over all 60 docs
+    p3 = Pipeline(spark, str(tmp_path / "full"), run_id="f")
+    r3 = p3.run(all_pages)
+    t2 = {(r["subj"], r["pred"], r["obj"]) for r in r2["triples"].collect()}
+    t3 = {(r["subj"], r["pred"], r["obj"]) for r in r3["triples"].collect()}
+    assert t2 == t3
+    assert t1 <= len(t2)
+
+    # a no-op increment (all urls already extracted) invalidates NOTHING
+    p4 = Pipeline(spark, str(tmp_path / "inc"), run_id="i3")
+    assert p4.ingest_increment(all_pages).count() == 0
+    assert p4.store.is_committed("triples")
+    assert p4.store.is_committed("canonical_map")

@@ -1,4 +1,4 @@
-"""D1 — mention detection: native Columns == Arrow UDF == Python oracle;
+"""D1 — mention detection: native Columns == Python oracle;
 P7/P8 cleaning semantics."""
 
 from __future__ import annotations
@@ -9,7 +9,6 @@ from agenticknowledgegraphconstructionsystem_spark import semantics as S
 from agenticknowledgegraphconstructionsystem_spark.operators.extract import extract_docs
 from agenticknowledgegraphconstructionsystem_spark.operators.mentions import (
     clean_mentions,
-    detect_mentions_arrow,
     detect_mentions_native,
 )
 from agenticknowledgegraphconstructionsystem_spark.sources.pages import synthetic_pages
@@ -19,11 +18,9 @@ def _key(r):
     return (r["url"], r["name"], r["concept_type"], r["relevance_pct"], r["pos"], r["context"])
 
 
-def test_native_equals_arrow_equals_oracle(spark):
+def test_native_equals_oracle(spark):
     docs = extract_docs(synthetic_pages(spark, 96))
     nat = sorted(map(_key, detect_mentions_native(docs).collect()))
-    arr = sorted(map(_key, detect_mentions_arrow(docs).collect()))
-    assert nat == arr
     exp = []
     for r in docs.collect():
         for m in S.detect_mentions(r["extracted_text"]):

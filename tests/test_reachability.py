@@ -1,0 +1,138 @@
+"""Dead-module guard: every module of the package must be reachable by
+static imports from a production entry point — the pipeline, the gate
+queries, the benches, ``__spark_entry__.py``, or the operational scripts.
+
+AST-only (no Spark, no package import): walks ``import`` / ``from ...
+import`` statements anywhere in each file, function-local imports
+included.  A module nothing in production imports is dead code; delete
+it with its tests instead of keeping it alive from a test file.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PKG = "agenticknowledgegraphconstructionsystem_spark"
+
+ENTRY_GLOBS = (
+    f"{PKG}/plans/pipeline.py",
+    f"{PKG}/gate*.py",
+    "bench.py",
+    "bench_extra.py",
+    "perfbench/*.py",
+    "__spark_entry__.py",
+    "scripts/check_gate.py",
+    "scripts/ab_bench.py",
+    "scripts/run_pipeline.py",
+    "scripts/gen_sf.py",
+    "scripts/scaling_bench.py",
+)
+
+# The media-codec tier is unreached as well, but its ~110 codec tests
+# leave with it, so it is deleted in slices.  This set may only shrink:
+# a module listed here that disappears or becomes reachable fails
+# test_pending_deletions_are_current until it is taken off.
+PENDING_DELETION = frozenset(
+    f"{PKG}.{m}"
+    for m in (
+        "functions.flac",
+        "functions.gif",
+        "functions.jpeg",
+        "functions.mediameta",
+        "functions.tiff",
+        "functions.vp8",
+        "functions.vp8_tables",
+        "functions.vp8l",
+        "operators.multimodal",
+    )
+)
+
+
+def _module_name(path: Path) -> str | None:
+    rel = path.relative_to(ROOT).with_suffix("")
+    if rel.parts[0] != PKG:
+        return None
+    parts = rel.parts[:-1] if rel.name == "__init__" else rel.parts
+    return ".".join(parts)
+
+
+def _package_modules() -> dict[str, Path]:
+    out = {}
+    for p in (ROOT / PKG).rglob("*.py"):
+        out[_module_name(p)] = p
+    return out
+
+
+def _imports(path: Path, modules: dict[str, Path]) -> set[str]:
+    """Package modules ``path`` imports (absolute or relative)."""
+    name = _module_name(path)
+    if name is None:
+        package = None
+    elif path.name == "__init__.py":
+        package = name
+    else:
+        package = name.rpartition(".")[0]
+    found: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            targets = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                if package is None:
+                    continue
+                base = package.split(".")
+                base = base[: len(base) - (node.level - 1)]
+                mod = ".".join(base + ([node.module] if node.module else []))
+            else:
+                mod = node.module or ""
+            # ``from pkg.sub import name``: name may itself be a submodule
+            targets = [mod] + [f"{mod}.{a.name}" for a in node.names]
+        else:
+            continue
+        for t in targets:
+            # importing a.b.c also runs a/__init__ and a.b/__init__
+            parts = t.split(".")
+            for i in range(1, len(parts) + 1):
+                cand = ".".join(parts[:i])
+                if cand in modules:
+                    found.add(cand)
+    return found
+
+
+def unreached_modules() -> list[str]:
+    modules = _package_modules()
+    entries = [p for g in ENTRY_GLOBS for p in sorted(ROOT.glob(g))]
+    seen: set[str] = set()
+    todo: list[Path] = list(entries)
+    for p in entries:
+        n = _module_name(p)
+        if n is not None:
+            seen.add(n)
+    while todo:
+        for m in _imports(todo.pop(), modules):
+            if m not in seen:
+                seen.add(m)
+                todo.append(modules[m])
+    return sorted(set(modules) - seen)
+
+
+def test_entry_points_exist():
+    for g in ENTRY_GLOBS:
+        assert list(ROOT.glob(g)), f"entry point {g} matches no file"
+
+
+def test_every_package_module_is_reachable():
+    dead = sorted(set(unreached_modules()) - PENDING_DELETION)
+    assert not dead, (
+        "modules no production entry point imports (delete them, with their "
+        f"tests): {', '.join(dead)}"
+    )
+
+
+def test_pending_deletions_are_current():
+    stale = sorted(PENDING_DELETION - set(unreached_modules()))
+    assert not stale, (
+        f"no longer pending deletion (gone or now reachable): {', '.join(stale)}"
+    )

@@ -1,8 +1,8 @@
 """Round-2 hardening: LSH hot-bucket caps under skew, repointed-mention
-dedup, canonicalization precision/recall fixture (scorer choice is
-measured, not assumed), embedding near-dup parity, and sessionize
-property-tested against a single-process pandas oracle with duplicate +
-out-of-order events across micro-batch boundaries."""
+dedup, canonicalization precision/recall fixture, embedding near-dup
+parity, and sessionize property-tested against a single-process pandas
+oracle with duplicate + out-of-order events across micro-batch
+boundaries."""
 
 from __future__ import annotations
 
@@ -27,7 +27,6 @@ from agenticknowledgegraphconstructionsystem_spark.operators.linking import (
     canonicalize,
     dedup_repointed_mentions,
     similarity_edges,
-    tfidf_cosine_edges,
 )
 from agenticknowledgegraphconstructionsystem_spark.operators.similarity import (
     embedding_near_duplicates,
@@ -244,25 +243,6 @@ def test_canonicalize_alias_precision_recall(spark):
         assert not merged(a, b), (a, b)
 
 
-def test_jaccard_remains_measured_default_scorer(spark):
-    """Scorer choice is measured, not assumed: on the alias fixture the
-    exact-Jaccard scorer must dominate TF-IDF cosine at the default 0.5
-    threshold (tp here: 6 vs 3 when measured on the full gazetteer ∪
-    aliases).  If TF-IDF ever wins this comparison, flip the pipeline
-    default — this test is the tripwire."""
-    ents = _fixture_entities(spark)
-    true_pairs = {tuple(sorted(p)) for p in MERGEABLE_ALIASES | KNOWN_MISSES}
-    decoys = {tuple(sorted(p)) for p in DECOYS}
-
-    def score(edges_df):
-        got = {tuple(sorted((r["name_a"], r["name_b"]))) for r in edges_df.collect()}
-        return len(got & true_pairs) - len(got & decoys)
-
-    j = score(similarity_edges(ents, threshold=0.5))
-    t = score(tfidf_cosine_edges(ents, threshold=0.5))
-    assert j >= t, (j, t)
-
-
 def test_similarity_edges_exact_matches_lsh(spark):
     """blocking='exact' and blocking='lsh' agree on the fixture (LSH recall
     loss at 16 minhashes is ~(1-j)^16 — nothing here sits near enough the
@@ -273,7 +253,7 @@ def test_similarity_edges_exact_matches_lsh(spark):
     assert exact == lsh
 
 
-def test_winnow_fingerprints_properties(spark):
+def test_winnow_fingerprints_properties(spark, winnow_oracle):
     """Winnowing guarantees (Schleimer et al. SIGMOD'03): identical docs →
     identical fingerprint sets; a PREFIX-shifted copy retains every
     fingerprint of the original (shift tolerance the md5 fingerprint lacks
@@ -301,17 +281,8 @@ def test_winnow_fingerprints_properties(spark):
     assert len(by[4]) == 1
     n_grams = len("the quick brown fox jumps over the lazy dog") - 7
     assert len(by[0]) <= n_grams  # winnowing selects a subset of grams
-    # engine parity: the vectorized int64 kernel == the Column/oracle
-    # reference semantics, row for row
-    col = {
-        (r["doc_id"], r["fp"])
-        for r in winnow_fingerprints(docs, k=8, w=4, engine="column").collect()
-    }
-    arrow = {
-        (r["doc_id"], r["fp"])
-        for r in winnow_fingerprints(docs, k=8, w=4, engine="arrow").collect()
-    }
-    assert col == arrow
+    # the vectorized int64 kernel == the td_winnow_fp DuckDB spec, row for row
+    assert {(d, fp) for d, fps in by.items() for fp in fps} == winnow_oracle(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -435,6 +406,53 @@ def test_ivf_ann_recall(spark):
         got.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     for q in (0, 1, 2):
         assert len(got.get(q, set()) & set(brute_topk(q))) >= 2, (q, got.get(q))
+
+
+def test_ivf_supplied_centroids(spark):
+    """A caller-supplied (centroid_id, centroid) table drops into
+    ivf_ann_topk's centroids= slot: with lists aligned to planted
+    clusters, 1-probe recall vs exact brute force matches or beats the
+    hash-sample default and is essentially perfect."""
+    import numpy as np
+
+    from agenticknowledgegraphconstructionsystem_spark.operators.similarity import (
+        cosine_topk,
+        ivf_ann_topk,
+    )
+
+    # orthogonal unit centers + small Gaussian noise: intra-cluster
+    # cosine >> inter-cluster
+    k, n_per, dim = 6, 40, 32
+    rng = np.random.RandomState(7)
+    centers = np.eye(k, dim)
+    rows = [
+        (c * n_per + j, [float(x) for x in p])
+        for c in range(k)
+        for j, p in enumerate(centers[c] + 0.15 * rng.randn(n_per, dim))
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    queries = emb.where(F.col("vec_id") % n_per == 0)  # one per cluster
+    truth = {
+        (r["query_id"], r["neighbor_id"])
+        for r in cosine_topk(emb, queries, k=5).collect()
+    }
+
+    def recall(centroids):
+        got = {
+            (r["query_id"], r["neighbor_id"])
+            for r in ivf_ann_topk(
+                emb, queries, k=5, n_centroids=k, n_probe=1, centroids=centroids
+            ).collect()
+        }
+        return len(got & truth) / len(truth)
+
+    supplied = spark.createDataFrame(
+        [(c, [float(x) for x in centers[c]]) for c in range(k)],
+        "centroid_id long, centroid array<double>",
+    )
+    r_supplied = recall(supplied)
+    assert r_supplied >= recall(None)
+    assert r_supplied >= 0.95
 
 
 # ---------------------------------------------------------------------------

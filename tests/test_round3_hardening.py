@@ -1,8 +1,8 @@
 """Round-3 hardening: advisor + judge items.
 
 * threshold_fraction denominator bound (int64 overflow guard),
-* winnowing non-ASCII case parity (arrow kernel vs Column spec after the
-  Python-str.lower removal),
+* winnowing non-ASCII case parity (arrow kernel vs the DuckDB spec after
+  the Python-str.lower removal),
 * connected-components pointer jumping: a 31-node chain converges inside
   the default round budget, the non-convergence warning fires (and does
   not NameError) at a degenerate max_iter,
@@ -52,10 +52,11 @@ def test_threshold_fraction_rejects_non_terminating():
 # -- winnowing non-ASCII parity ----------------------------------------------
 
 
-def test_winnow_arrow_column_parity_non_ascii(spark):
-    """The arrow kernel must match the Column spec byte-for-byte AFTER the
-    shared F.lower in the plan — including dotted-I (U+0130, whose Python
-    str.lower mapping differs from the JVM's) and astral codepoints."""
+def test_winnow_arrow_oracle_parity_non_ascii(spark, winnow_oracle):
+    """The arrow kernel must match the td_winnow_fp DuckDB spec
+    byte-for-byte AFTER the shared F.lower in the plan — including
+    dotted-I (U+0130, whose Python str.lower mapping differs from the
+    JVM's) and astral codepoints."""
     texts = [
         "İstanbul DENEME İİİ mixed ASCII tail for windows",
         "ΣΊΣΥΦΟΣ greek final sigma Σ at end Σ",
@@ -66,14 +67,10 @@ def test_winnow_arrow_column_parity_non_ascii(spark):
         [Row(doc_id=i, text=t) for i, t in enumerate(texts)]
     )
     arrow = {
-        (r["doc_id"], r["fp"])
-        for r in winnow_fingerprints(docs, engine="arrow").collect()
+        (r["doc_id"], r["fp"]) for r in winnow_fingerprints(docs).collect()
     }
-    column = {
-        (r["doc_id"], r["fp"])
-        for r in winnow_fingerprints(docs, engine="column").collect()
-    }
-    assert arrow == column
+    assert arrow == winnow_oracle(docs)
+    assert {d for d, _ in arrow} == set(range(len(texts)))
 
 
 # -- connected components: pointer jumping + warning --------------------------
