@@ -8,19 +8,27 @@ Stage DAG (SURVEY §7, stages enum FIXTURES.md §5):
     (edges/relationships/triples) → validate
 
 Each stage commits through :class:`StageStore` (Iceberg-snapshot semantics
-over parquet) and appends lineage rows — one per output partition:
-(run_id, stage, partition_id, input_rows, output_rows, wall_ms, status,
-committed_at) — the set-at-a-time lift of the reference's per-paper
-``extraction_logs`` (db_init.py:150-159).  A killed run re-enters at the
-first uncommitted stage; committed stages are read back, not recomputed
-(D8 resume, database.ts:66-81).
+over parquet) and appends lineage rows (run_id, stage, partition_id,
+input_rows, output_rows, wall_ms, status, committed_at) — one per
+non-empty write task, ``partition_id`` being its ``part-NNNNN`` id and
+``output_rows`` read from the footers that write produced (no Spark
+job); ``input_rows`` is -1 where unknown.  A stage that raises commits
+nothing and logs one ``failed`` row (partition_id -1, output_rows 0).
+The set-at-a-time lift of the reference's per-paper ``extraction_logs``
+(db_init.py:150-159).  A killed run re-enters at the first uncommitted
+stage; committed stages are read back, not recomputed (D8 resume,
+database.ts:66-81).
 """
 
 from __future__ import annotations
 
 import os
 import time
+import uuid
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,7 +39,7 @@ from ..operators.entities import (
     build_entities,
     build_entities_with_context,
 )
-from ..operators.extract import extract_docs
+from ..operators.extract import extract_docs, with_stats
 from ..operators.linking import (
     canonicalize,
     dedup_repointed_mentions,
@@ -45,7 +53,7 @@ from ..operators.validation import (
     entity_findings,
     relationship_findings,
 )
-from ..sources.io import StageStore
+from ..sources.io import StageStore, resume_inputs, written_rows
 
 STAGES = (
     "extract",
@@ -80,7 +88,6 @@ class Pipeline:
         link: bool = True,
         link_threshold: float = 0.5,
         link_mode: str = "all_pairs",
-        dedup_docs: bool = False,
         dedup_mode: str | None = None,
         dedup_threshold: float = 0.5,
         graph_metrics: bool = False,
@@ -114,8 +121,7 @@ class Pipeline:
           a crawl copy with an added banner/prefix still collapses.
 
         ``None`` (default) skips the stage for exact reference parity (the
-        reference ingests whatever arrives).  ``dedup_docs=True`` is the
-        older spelling of ``dedup_mode="exact"``.  Like every stage it
+        reference ingests whatever arrives).  Like every stage it
         commits through StageStore with per-partition lineage and resume.
 
         ``curate=True`` adds the training-data curation stage after dedup:
@@ -184,7 +190,7 @@ class Pipeline:
         # — the web-scale default shape; 'all_pairs' keeps the exact gate
         # semantics and stays the constructor default
         self.link_mode = link_mode
-        self.dedup_mode = dedup_mode or ("exact" if dedup_docs else None)
+        self.dedup_mode = dedup_mode
         self.dedup_threshold = dedup_threshold
         self.graph_metrics = graph_metrics
         self.link_graph = link_graph
@@ -199,26 +205,42 @@ class Pipeline:
         self._recomputed: list[str] = []
 
     # -- lineage ---------------------------------------------------------
-    def _lineage_rows(self, stage: str, out: DataFrame, input_rows: int, wall_ms: int):
-        per_part = (
-            out.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("output_rows"))
-            .select(
-                F.lit(self.run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                "partition_id",
-                F.lit(input_rows).cast("long").alias("input_rows"),
-                F.col("output_rows").cast("long"),
-                F.lit(wall_ms).cast("long").alias("wall_ms"),
-                F.lit("success").alias("status"),
-                F.current_timestamp().alias("committed_at"),
-            )
+    def _lineage_rows(
+        self, stage: str, input_rows: int, wall_ms: int, failed: bool = False
+    ) -> None:
+        """Add one pyarrow-written file to ``_lineage/`` (no Spark job): a
+        row per non-empty write task of the stage's newest data dir, or one
+        ``failed`` row for a stage that raised."""
+        if failed:
+            parts = {-1: 0}
+        else:
+            newest = self.store.manifest(stage)["paths"][-1]
+            written = written_rows(os.path.join(self.store.base_dir, stage, newest))
+            parts = {task: n for task, n in sorted(written.items()) if n}
+        if not parts:
+            return
+        k, now = len(parts), datetime.now(timezone.utc)
+        table = pa.table(
+            {
+                "run_id": [self.run_id] * k,
+                "stage": [stage] * k,
+                "partition_id": pa.array(list(parts), pa.int32()),
+                "input_rows": [input_rows] * k,
+                "output_rows": list(parts.values()),
+                "wall_ms": [wall_ms] * k,
+                "status": ["failed" if failed else "success"] * k,
+                "committed_at": pa.array([now] * k, pa.timestamp("us", tz="UTC")),
+            }
         )
-        per_part.write.mode("append").parquet(f"{self.store.base_dir}/_lineage")
+        lineage_dir = os.path.join(self.store.base_dir, "_lineage")
+        os.makedirs(lineage_dir, exist_ok=True)
+        name = f"{stage}-{uuid.uuid4().hex}.parquet"
+        # written under a dot name Spark skips, then renamed into view
+        pq.write_table(table, os.path.join(lineage_dir, "." + name))
+        os.replace(os.path.join(lineage_dir, "." + name), os.path.join(lineage_dir, name))
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.store.base_dir}/_lineage")
+        return self.spark.read.parquet(os.path.join(self.store.base_dir, "_lineage"))
 
     def export_summary_csv(self, path: str) -> None:
         """S6 (fetch_citing_papers.py:65-82): entity summary as CSV.  The
@@ -249,61 +271,43 @@ class Pipeline:
             .orderBy("item_kind", "item_key")
         )
         n_items = per_item.count()
+        report = {"run_id": self.run_id}
         if n_items > max_items:
             per_item.write.mode("overwrite").json(path + ".items")
-            report = {
-                "run_id": self.run_id,
-                "totals": {
-                    "entities": self._results["entities"].count(),
-                    "relationships": self._results["relationships"].count(),
-                    "problematic_items": n_items,
-                },
-                "items": None,
-                "items_path": path + ".items",
-            }
-            with open(path, "w") as f:
-                _json.dump(report, f, indent=2, sort_keys=True)
-            return report
-        items = [
-            {
-                "kind": r["item_kind"],
-                "key": r["item_key"],
-                "is_valid": not bool(r["has_error"]),
-                "issues": [{"rule": i["rule"], "severity": i["severity"]} for i in r["issues"]],
-            }
-            for r in per_item.collect()
-        ]
-        report = {
-            "run_id": self.run_id,
-            "totals": {
-                "entities": self._results["entities"].count(),
-                "relationships": self._results["relationships"].count(),
-                "problematic_items": len(items),
-            },
-            "items": items,
+            report.update(items=None, items_path=path + ".items")
+        else:
+            report["items"] = [
+                {
+                    "kind": r["item_kind"],
+                    "key": r["item_key"],
+                    "is_valid": not bool(r["has_error"]),
+                    "issues": [{"rule": i["rule"], "severity": i["severity"]} for i in r["issues"]],
+                }
+                for r in per_item.collect()
+            ]
+        report["totals"] = {
+            "entities": self._results["entities"].count(),
+            "relationships": self._results["relationships"].count(),
+            "problematic_items": n_items,
         }
         with open(path, "w") as f:
             _json.dump(report, f, indent=2, sort_keys=True)
         return report
 
     # -- stage runner ----------------------------------------------------
-    def _stage(
-        self,
-        name: str,
-        build,
-        input_rows: int = -1,
-        partition_by: list[str] | None = None,
-    ) -> DataFrame:
+    def _stage(self, name: str, build, partition_by: list[str] | None = None) -> DataFrame:
         if self.store.is_committed(name):
             return self.store.read(name)
-        t0 = time.time()
-        df = build()
-        out = self.store.commit(name, df, self.run_id, partition_by=partition_by)
+        t0, out = time.time(), None
+        try:
+            out = self.store.commit(name, build(), self.run_id, partition_by=partition_by)
+        finally:
+            wall_ms = int((time.time() - t0) * 1000)
+            self._lineage_rows(name, -1, wall_ms, failed=out is None)
         self._recomputed.append(name)
-        self._lineage_rows(name, out, input_rows, int((time.time() - t0) * 1000))
         return out
 
-    def _dedup_docs(self, docs: DataFrame) -> DataFrame:
+    def _exact_dedup(self, docs: DataFrame) -> DataFrame:
         """Exact content dedup: keep the min-url row per extracted_text
         hash (semi join against the keeper set — one shuffle on the
         128-bit hash, perfectly balanced keys).  Rows with NULL text all
@@ -319,7 +323,7 @@ class Pipeline:
             docs.where(F.col("extracted_text").isNull())
         )
 
-    def _near_dedup_docs(self, docs: DataFrame) -> DataFrame:
+    def _near_dedup(self, docs: DataFrame) -> DataFrame:
         """Near-duplicate corpus dedup: exact pass first (catches identical
         short docs the shingle/fingerprint blockers can't see), then
         near-dup pairs at >= dedup_threshold Jaccard, connected components
@@ -337,7 +341,7 @@ class Pipeline:
             winnow_near_duplicates,
         )
 
-        base = self._dedup_docs(docs)
+        base = self._exact_dedup(docs)
         with_text = base.where(F.col("extracted_text").isNotNull())
         if self.dedup_mode == "minhash":
             pairs = minhash_near_duplicates(
@@ -370,7 +374,6 @@ class Pipeline:
         from ..operators.repetition import repetition_report
 
         if self.strip_boilerplate:
-            from ..operators.extract import with_stats
             from ..operators.lines import strip_boilerplate_lines
 
             cleaned = strip_boilerplate_lines(
@@ -400,12 +403,10 @@ class Pipeline:
             )
             kept = kept.join(contaminated, "url", "left_anti")
         redacted = pii_columns(F.col("extracted_text"))["text_redacted"]
-        from ..operators.extract import with_stats as _with_stats
-
         # redaction rewrites extracted_text (a 20-char email → '<EMAIL>'),
         # so the S8 stats are recomputed — same contract as the
         # boilerplate-strip branch above: stats never go stale
-        return _with_stats(kept.withColumn("extracted_text", redacted))
+        return with_stats(kept.withColumn("extracted_text", redacted))
 
     # -- per-doc incremental ingest (D8 at row granularity) ---------------
     def ingest_increment(self, pages: DataFrame) -> DataFrame:
@@ -435,8 +436,6 @@ class Pipeline:
         * a no-op increment (every url already extracted) invalidates
           NOTHING — downstream outputs are provably unchanged.
         """
-        from ..sources.io import resume_inputs
-
         if not self.store.is_committed("extract"):
             new_docs = extract_docs(pages)
             self.store.commit("extract", new_docs, self.run_id)
@@ -471,27 +470,23 @@ class Pipeline:
         for stage in STAGES:
             if stage not in keep:
                 self.store.uncommit(stage)
-        self.store.append("extract", new_docs, n_new)
+        self.store.append("extract", new_docs)
         if incremental_mentions:
             t0 = time.time()
-            delta_m = clean_mentions(detect_mentions_native(new_docs)).transform(cut_lineage)
-            n_delta = delta_m.count()
-            self.store.append("mentions", delta_m, n_delta)
-            self._lineage_rows(
-                "mentions", delta_m, n_new, int((time.time() - t0) * 1000)
-            )
+            self.store.append("mentions", clean_mentions(detect_mentions_native(new_docs)))
+            self._lineage_rows("mentions", n_new, int((time.time() - t0) * 1000))
         return new_docs
 
     # -- the pipeline ----------------------------------------------------
     def run(self, pages: DataFrame) -> dict[str, DataFrame]:
         docs = self._stage("extract", lambda: extract_docs(pages))
         if self.dedup_mode in ("minhash", "winnow"):
-            docs = self._stage("dedup", lambda: self._near_dedup_docs(docs))
+            docs = self._stage("dedup", lambda: self._near_dedup(docs))
             from ..operators.dedup import unpersist_tracked
 
             unpersist_tracked()  # stage is committed; free cached fp/sig blocks
         elif self.dedup_mode == "exact":
-            docs = self._stage("dedup", lambda: self._dedup_docs(docs))
+            docs = self._stage("dedup", lambda: self._exact_dedup(docs))
         if self.curate:
             docs = self._stage("curate", lambda: self._curate_docs(docs))
         raw_mentions = self._stage(

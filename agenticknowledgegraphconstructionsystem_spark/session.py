@@ -51,22 +51,18 @@ def _scan_rows(df: DataFrame) -> int | None:
     """Total parquet rows behind ``df``'s scan, from file footers on the
     driver (no Spark job).  None when the inputs are not local parquet
     files — callers fall back to the full shuffle-partition spread."""
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow as pa
+
+    from .sources.io import parquet_rows
+
+    files = [urlparse(f) for f in df.inputFiles()]
+    if not files or any(u.scheme not in ("file", "") for u in files):
+        return None
     try:
-        files = df.inputFiles()
-        if not files:
-            return None
-        from urllib.parse import unquote, urlparse
-
-        import pyarrow.parquet as pq
-
-        total = 0
-        for f in files:
-            u = urlparse(f)
-            if u.scheme not in ("file", ""):
-                return None
-            total += pq.ParquetFile(unquote(u.path)).metadata.num_rows
-        return total
-    except Exception:
+        return sum(parquet_rows(unquote(u.path)) for u in files)
+    except (pa.ArrowInvalid, OSError):  # not parquet / not readable here
         return None
 
 

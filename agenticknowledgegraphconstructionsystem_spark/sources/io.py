@@ -22,8 +22,10 @@ import os
 import shutil
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 #: real-cluster DDL the shim stands in for (SURVEY §2.1 S13: indexes →
@@ -49,6 +51,24 @@ ICEBERG_DDL = {
         WHEN MATCHED THEN UPDATE SET *
         WHEN NOT MATCHED THEN INSERT *""",
 }
+
+
+def parquet_rows(path: str) -> int:
+    """Rows of one local parquet file, from its footer (no Spark job)."""
+    return pq.ParquetFile(path).metadata.num_rows
+
+
+def written_rows(data_dir: str) -> dict[int, int]:
+    """Rows per write task of a parquet data dir Spark just wrote, from
+    the file footers: ``{task id: rows}``, keyed by the ``part-NNNNN``
+    number and summed across Hive ``key=value`` subdirs."""
+    rows: dict[int, int] = {}
+    for dirpath, _dirs, files in os.walk(data_dir):
+        for name in files:
+            if name.startswith("part-") and name.endswith(".parquet"):
+                task = int(name.split("-")[1])
+                rows[task] = rows.get(task, 0) + parquet_rows(os.path.join(dirpath, name))
+    return rows
 
 
 class StageStore:
@@ -175,23 +195,22 @@ class StageStore:
         ``partition_by`` writes a Hive-partitioned layout (the parquet
         analog of an Iceberg partition spec): consumers filtering on a
         partition column read only its directories — Catalyst shows the
-        pruning as ``PartitionFilters`` on the scan.  The declared column
-        order and types survive the round-trip (partition-directory
-        values are string-encoded on disk and would otherwise re-infer
-        as int and migrate to the end of the schema)."""
+        pruning as ``PartitionFilters`` on the scan.
+
+        The manifest records the frame's schema, so reads skip Spark's
+        schema-inference job, and partitioned snapshots keep their
+        declared column order and types (partition-directory values are
+        string-encoded on disk and would otherwise re-infer as int and
+        migrate to the end of the schema)."""
         t0 = time.time()
         snap_id = self._next_id(stage)
         rel = f"snap-{snap_id}"
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(os.path.join(self._path(stage), rel))
-        out = self.spark.read.parquet(os.path.join(self._path(stage), rel))
-        if partition_by:
-            out = out.select(
-                *[F.col(f.name).cast(f.dataType) for f in df.schema.fields]
-            )
-        n = out.count()
+        path = os.path.join(self._path(stage), rel)
+        writer.parquet(path)
+        n = sum(written_rows(path).values())
         prev = self.manifest(stage) if self.is_committed(stage) else None
         manifest = {
             "stage": stage,
@@ -202,17 +221,14 @@ class StageStore:
             "snapshot_id": snap_id,
             "kind": "overwrite",
             "paths": [rel],
-            **(
-                {"partition_by": partition_by, "schema": df.schema.jsonValue()}
-                if partition_by
-                else {}
-            ),
+            "schema": df.schema.jsonValue(),
+            **({"partition_by": partition_by} if partition_by else {}),
             **(meta or {}),
         }
         self._write_manifest(stage, manifest, prev)
-        return out
+        return self._load(stage, manifest)
 
-    def append(self, stage: str, df: DataFrame, added_rows: int | None = None) -> int:
+    def append(self, stage: str, df: DataFrame) -> int:
         """Iceberg-style append: land a delta data dir, then publish a new
         snapshot referencing previous dirs + the delta.  Existing files are
         never rewritten, so every retained snapshot stays readable.
@@ -229,14 +245,12 @@ class StageStore:
             )
         snap_id = self._next_id(stage)
         rel = f"delta-{snap_id}"
-        df.write.mode("overwrite").parquet(os.path.join(self._path(stage), rel))
-        if added_rows is None:
-            added_rows = self.spark.read.parquet(
-                os.path.join(self._path(stage), rel)
-            ).count()
+        path = os.path.join(self._path(stage), rel)
+        df.write.mode("overwrite").parquet(path)
+        added = sum(written_rows(path).values())
         manifest = {
             **{k: v for k, v in prev.items() if k != "history"},
-            "rows": int(prev.get("rows", 0)) + int(added_rows),
+            "rows": int(prev.get("rows", 0)) + added,
             "committed_at": time.time(),
             "appended_at": time.time(),
             "snapshot_id": snap_id,
@@ -244,7 +258,7 @@ class StageStore:
             "paths": list(prev.get("paths", [])) + [rel],
         }
         self._write_manifest(stage, manifest, prev)
-        return int(added_rows)
+        return added
 
     def rollback(self, stage: str, snapshot_id: int) -> None:
         """Make a retained snapshot current again (Iceberg
@@ -268,20 +282,19 @@ class StageStore:
 
     # -- reads -------------------------------------------------------------
     def read(self, stage: str, as_of: int | None = None) -> DataFrame:
-        """Read the current snapshot, or any retained one via ``as_of``.
-        Partitioned snapshots are restored to their declared column order
-        and types (the manifest carries the schema — see commit)."""
-        snap = self._resolve(stage, as_of)
-        paths = [os.path.join(self._path(stage), rel) for rel in snap["paths"]]
-        out = self.spark.read.parquet(*paths)
-        if snap.get("schema"):
-            from pyspark.sql import types as T
+        """Read the current snapshot, or any retained one via ``as_of``."""
+        return self._load(stage, self._resolve(stage, as_of))
 
-            sch = T.StructType.fromJson(snap["schema"])
-            out = out.select(
-                *[F.col(f.name).cast(f.dataType) for f in sch.fields]
-            )
-        return out
+    def _load(self, stage: str, snap: dict) -> DataFrame:
+        """A snapshot's data dirs as one DataFrame, read with the schema
+        its manifest records (see commit)."""
+        paths = [os.path.join(self._path(stage), rel) for rel in snap["paths"]]
+        if not snap.get("schema"):  # a store written before manifests kept it
+            return self.spark.read.parquet(*paths)
+        sch = T.StructType.fromJson(snap["schema"])
+        out = self.spark.read.schema(sch).parquet(*paths)
+        # partition columns are read last: restore the declared order
+        return out.select(*sch.fieldNames()) if snap.get("partition_by") else out
 
     def uncommit(self, stage: str) -> None:
         """Test hook: simulate a crash after stage k (delete the commit)."""

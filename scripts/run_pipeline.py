@@ -35,11 +35,6 @@ def main() -> None:
     ap.add_argument("--run-id", default="run0")
     ap.add_argument("--no-link", action="store_true")
     ap.add_argument(
-        "--dedup-docs",
-        action="store_true",
-        help="corpus-hygiene stage: exact content dedup after extraction",
-    )
-    ap.add_argument(
         "--dedup-mode",
         choices=["exact", "minhash", "winnow"],
         help="corpus-hygiene stage mode; minhash/winnow add near-dup "
@@ -155,7 +150,6 @@ def main() -> None:
         link=not args.no_link,
         link_threshold=args.link_threshold,
         link_mode=args.link_mode,
-        dedup_docs=args.dedup_docs,
         dedup_mode=args.dedup_mode,
         dedup_threshold=args.dedup_threshold,
         graph_metrics=args.graph_metrics,

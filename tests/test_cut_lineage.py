@@ -12,7 +12,11 @@ import textwrap
 
 import pytest
 
-from agenticknowledgegraphconstructionsystem_spark.session import cut_lineage
+from agenticknowledgegraphconstructionsystem_spark.session import (
+    _scan_rows,
+    cut_lineage,
+    spread_scan,
+)
 
 
 def test_dispatch_local_vs_reliable(spark, monkeypatch):
@@ -36,6 +40,18 @@ def test_dispatch_local_vs_reliable(spark, monkeypatch):
     )
     cut_lineage(df)
     assert calls == ["local", "reliable"]
+
+
+def test_spread_scan_json_takes_full_spread(spark, tmp_path):
+    """Parquet inputs are counted from their footers; a JSON input has no
+    footer, so spread_scan takes the full shuffle-partition spread."""
+    spark.range(3).write.parquet(str(tmp_path / "p"))
+    assert _scan_rows(spark.read.parquet(str(tmp_path / "p"))) == 3
+    spark.range(3).write.json(str(tmp_path / "j"))
+    df = spark.read.json(str(tmp_path / "j"))
+    assert _scan_rows(df) is None
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert spread_scan(df, "id").rdd.getNumPartitions() == cap
 
 
 @pytest.mark.slow

@@ -322,7 +322,7 @@ def test_embedding_near_duplicates_parity(spark):
 
 
 @pytest.mark.slow
-def test_pipeline_dedup_docs_stage(spark, tmp_path):
+def test_pipeline_exact_dedup_stage(spark, tmp_path):
     """Corpus-hygiene stage: exact dups collapse to the min-url keeper,
     null-text rows all survive, and the stage is committed/resumable."""
     from agenticknowledgegraphconstructionsystem_spark.plans.pipeline import Pipeline
@@ -337,7 +337,7 @@ def test_pipeline_dedup_docs_stage(spark, tmp_path):
         ],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    p = Pipeline(spark, str(tmp_path / "kg_dedup"), dedup_docs=True, link=False)
+    p = Pipeline(spark, str(tmp_path / "kg_dedup"), dedup_mode="exact", link=False)
     out = p.run(pages)
     urls = {r["url"] for r in out["docs"].select("url").collect()}
     assert urls == {"u1", "u3", "u4", "u5"}  # u2 deduped, nulls kept
