@@ -63,21 +63,9 @@ def probe_image_dims(payload: bytes) -> tuple[str, int, int]:
             (seglen,) = struct.unpack_from(">H", payload, pos + 2)
             pos += 2 + seglen
         raise ValueError("JPEG without an SOF frame header")
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from .vp8l import webp_dimensions
-
-        dims = webp_dimensions(payload)
-        if dims is not None:
-            return "webp", dims[0], dims[1]
-        raise ValueError("WebP without a parseable size header")
     if payload[:6] in (b"GIF87a", b"GIF89a") and len(payload) >= 10:
         w, h = struct.unpack_from("<HH", payload, 6)
         return "gif", w, h
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        from .tiff import tiff_dimensions
-
-        w, h = tiff_dimensions(payload)
-        return "tiff", w, h
     raise ValueError("unrecognized image payload")
 
 

@@ -8,13 +8,9 @@ has two honest tiers:
   stdlib + numpy alone — 24-bit BI_RGB BMP (:func:`decode_bmp`), 8-bit
   RGB/RGBA non-interlaced PNG (:func:`decode_png` — DEFLATE is stdlib
   zlib), baseline JPEG (functions/jpeg.py — full sequential-DCT decode:
-  Huffman → dequant → IDCT → chroma upsample → YCbCr), lossless WebP
-  (functions/vp8l.py — full VP8L: all four transforms, color cache,
-  meta prefix codes, 2-D LZ77) and lossy WebP (functions/vp8.py — full
-  RFC 6386 VP8 keyframe decode; both differentially fuzzed against
-  libwebp),
-  16-bit PCM WAV (:func:`decode_wav`) and Y4M video (:func:`decode_y4m`)
-  — pixel/sample/frame values pytest-pinned — and raises
+  Huffman → dequant → IDCT → chroma upsample → YCbCr), GIF
+  (functions/gif.py), 16-bit PCM WAV (:func:`decode_wav`) and Y4M video
+  (:func:`decode_y4m`) — pixel/sample/frame values pytest-pinned — and raises
   ``NotImplementedError`` for anything else (MP3/H.264/...
   need libvips/librosa/ffmpeg, which this container does not ship).
 * ``decode_images(..., fake=True)`` substitutes a deterministic
@@ -320,13 +316,10 @@ def decode_image_any(
 ) -> tuple[int, int, list[list[tuple[int, int, int]]]]:
     """Magic-byte dispatch over the real-decode image tier: BMP
     (:func:`decode_bmp`), PNG (:func:`decode_png`), baseline or
-    progressive JPEG (functions/jpeg.py), lossless (functions/vp8l.py)
-    / lossy (functions/vp8.py) WebP, GIF87a/89a (functions/gif.py,
-    first composited frame), or baseline TIFF (functions/tiff.py)
-    → (w, h, rows).  Raises ValueError for anything else;
-    arithmetic-coded JPEG, animated WebP, and beyond-baseline TIFF
-    (fax/tiles/JPEG-in-TIFF) raise NotImplementedError from their
-    codecs."""
+    progressive JPEG (functions/jpeg.py), or GIF87a/89a (functions/gif.py,
+    first composited frame) → (w, h, rows).  Raises ValueError for
+    anything else; arithmetic-coded JPEG raises NotImplementedError from
+    its codec."""
     if payload[:2] == b"BM":
         return decode_bmp(payload)
     if payload[:8] == _PNG_SIG:
@@ -335,19 +328,11 @@ def decode_image_any(
         from ..functions.jpeg import decode_jpeg
 
         return decode_jpeg(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from ..functions.vp8l import decode_webp
-
-        return decode_webp(payload)
     if payload[:6] in (b"GIF87a", b"GIF89a"):
         from ..functions.gif import decode_gif
 
         return decode_gif(payload)
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        from ..functions.tiff import decode_tiff
-
-        return decode_tiff(payload)
-    raise ValueError("not a BMP, PNG, JPEG, WebP, GIF, or TIFF payload")
+    raise ValueError("not a BMP, PNG, JPEG, or GIF payload")
 
 
 def _bmp_features(payload: bytes, dim: int) -> tuple[int, int, int, list[float]]:
@@ -379,10 +364,8 @@ def decode_images(media: DataFrame, dim: int = 16, fake: bool = True) -> DataFra
     ``fake=False`` really decodes uncompressed 24-bit BMP payloads
     (stdlib ``struct``, :func:`decode_bmp`), 8-bit RGB/RGBA
     non-interlaced PNG (stdlib ``zlib``, :func:`decode_png`), baseline
-    JPEG (functions/jpeg.py), both WebP forms (functions/vp8l.py,
-    functions/vp8.py), GIF (functions/gif.py) and baseline TIFF
-    (functions/tiff.py), and raises ``NotImplementedError`` for
-    unrecognized formats."""
+    JPEG (functions/jpeg.py) and GIF (functions/gif.py), and raises
+    ``NotImplementedError`` for unrecognized formats."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -399,8 +382,8 @@ def decode_images(media: DataFrame, dim: int = 16, fake: bool = True) -> DataFra
                     except ValueError as e:
                         raise NotImplementedError(
                             "real decode supports uncompressed 24-bit BMP, "
-                            "8-bit RGB/RGBA PNG, baseline JPEG, WebP, GIF, "
-                            "and baseline TIFF (stdlib+numpy); other "
+                            "8-bit RGB/RGBA PNG, baseline JPEG, and GIF "
+                            "(stdlib+numpy); other "
                             "formats need PIL/libvips — "
                             f"payload rejected: {e}"
                         ) from e
@@ -431,11 +414,10 @@ def resize_images(
     media: DataFrame, width: int = 32, height: int = 32, fake: bool = True
 ) -> DataFrame:
     """mapInPandas image resize.  ``fake=False`` really resizes
-    uncompressed 24-bit BMP, 8-bit RGB/RGBA PNG, baseline JPEG, and
-    lossless-WebP payloads — :func:`decode_image_any` → nearest-neighbor
-    resample → re-encode in the SAME container (BMP→BMP, PNG→PNG,
-    JPEG→JPEG — the JPEG leg is lossy twice, like any thumbnailer;
-    WebP→WebP via the literal-only VP8L encoder), all stdlib+numpy —
+    uncompressed 24-bit BMP, 8-bit RGB/RGBA PNG, and baseline JPEG
+    payloads — :func:`decode_image_any` → nearest-neighbor resample →
+    re-encode in the SAME container (BMP→BMP, PNG→PNG, JPEG→JPEG — the
+    JPEG leg is lossy twice, like any thumbnailer), all stdlib+numpy —
     and raises ``NotImplementedError`` for other formats.  The fake path
     emits a deterministic pseudo-thumbnail (content digest tiled to
     width·height bytes) so batch shape, schema, and payload-size
@@ -446,7 +428,6 @@ def resize_images(
     def _resize_bmp(p: bytes) -> bytes:
         is_png = p[:8] == _PNG_SIG
         is_jpeg = p[:3] == b"\xff\xd8\xff"
-        is_webp = p[:4] == b"RIFF" and p[8:12] == b"WEBP"
         w0, h0, rows = decode_image_any(p)
         out_rows = [
             [rows[y * h0 // height][x * w0 // width] for x in range(width)]
@@ -458,12 +439,6 @@ def resize_images(
             from ..functions.jpeg import encode_jpeg
 
             return encode_jpeg(out_rows)
-        if is_webp:
-            from ..functions.vp8l import encode_webp_lossless
-
-            return encode_webp_lossless(
-                [[(r, g, b, 255) for r, g, b in row] for row in out_rows]
-            )
         return encode_bmp(out_rows)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -37,14 +37,14 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager)
 
 
-#: rows per spread partition (env ``SPARK_GRAFT_SPREAD_ROWS``): sized so a
-#: compute-heavy per-row stage (mention detection, shingling) gets full
-#: core utilization at 10x-gate scale while a tiny input skips the
-#: exchange entirely — the scale-adaptive middle ground between "always
-#: repartition to 2x cores" (pure overhead at sf<=0.1: measured +0.7 s on
-#: td_dedup_rate, +2.5 s on td_emb_near_dup) and "never" (single-task
-#: scans at sf1: measured 7.8 s mention detection on one core).
-SPREAD_ROWS_PER_PART = int(os.environ.get("SPARK_GRAFT_SPREAD_ROWS", "512"))
+#: rows per spread partition: sized so a compute-heavy per-row stage
+#: (mention detection, shingling) gets full core utilization at 10x-gate
+#: scale while a tiny input skips the exchange entirely — the
+#: scale-adaptive middle ground between "always repartition to 2x cores"
+#: (pure overhead at sf<=0.1: measured +0.7 s on td_dedup_rate, +2.5 s on
+#: td_emb_near_dup) and "never" (single-task scans at sf1: measured 7.8 s
+#: mention detection on one core).
+SPREAD_ROWS_PER_PART = 512
 
 
 def _scan_rows(df: DataFrame) -> int | None:
@@ -66,7 +66,7 @@ def _scan_rows(df: DataFrame) -> int | None:
         return None
 
 
-def spread_scan(df: DataFrame, *key_cols: str, nparts: int | None = None) -> DataFrame:
+def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:
     """Restore parallelism lost to unsplittable input layout.
 
     The corpus parquet files ship as a SINGLE row group per file (verified
@@ -92,21 +92,16 @@ def spread_scan(df: DataFrame, *key_cols: str, nparts: int | None = None) -> Dat
     Hash-repartition on deterministic key columns, never round-robin:
     a keyed exchange skips the sort-before-repartition pass that
     round-robin pays for retry-stability, and the explicit numPartitions
-    is never AQE-coalesced.  ``SPARK_GRAFT_SCAN_SPREAD=0`` disables it
-    for deployments whose inputs are already well-laid-out (many row
-    groups / many files), where the extra exchange is pure cost.
+    is never AQE-coalesced.
     """
-    if os.environ.get("SPARK_GRAFT_SCAN_SPREAD", "1") == "0":
+    cap = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    rows = _scan_rows(df)
+    if rows is None:
+        nparts = cap
+    else:
+        nparts = min(cap, (rows + SPREAD_ROWS_PER_PART - 1) // SPREAD_ROWS_PER_PART)
+    if nparts <= 1:
         return df
-    if nparts is None:
-        cap = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        rows = _scan_rows(df)
-        if rows is None:
-            nparts = cap
-        else:
-            nparts = min(cap, (rows + SPREAD_ROWS_PER_PART - 1) // SPREAD_ROWS_PER_PART)
-        if nparts <= 1:
-            return df
     from pyspark.sql import functions as F
 
     return df.repartition(nparts, *[F.col(c) for c in key_cols])

@@ -40,3 +40,25 @@ def winnow_oracle():
         return got
 
     return run
+
+
+@pytest.fixture(scope="session")
+def unsupported_image_headers():
+    """Well-formed 5x3 headers of image formats the media tier neither
+    probes nor decodes: a little-endian TIFF (IFD at byte 8, ImageWidth
+    tag 256 = 5, ImageLength tag 257 = 3) and a 25-byte lossless WebP
+    (RIFF/WEBP/VP8L, signature 0x2f, 14-bit w-1 = 4 and h-1 = 2)."""
+    import struct
+
+    tiff = (
+        b"II*\x00"
+        + struct.pack("<IH", 8, 2)
+        + struct.pack("<HHII", 256, 3, 1, 5)
+        + struct.pack("<HHII", 257, 3, 1, 3)
+        + struct.pack("<I", 0)
+    )
+    webp = (
+        b"RIFF" + struct.pack("<I", 17) + b"WEBP"
+        + b"VP8L" + struct.pack("<I", 5) + b"\x2f" + struct.pack("<I", 4 | 2 << 14)
+    )
+    return [tiff, webp]

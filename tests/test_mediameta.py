@@ -10,7 +10,6 @@ from pyspark.sql import Row
 
 from agenticknowledgegraphconstructionsystem_spark.functions.gif import encode_gif
 from agenticknowledgegraphconstructionsystem_spark.functions.jpeg import encode_jpeg
-from agenticknowledgegraphconstructionsystem_spark.functions.tiff import encode_tiff
 from agenticknowledgegraphconstructionsystem_spark.functions.mediameta import (
     build_mp4,
     parse_mp4,
@@ -26,7 +25,7 @@ from agenticknowledgegraphconstructionsystem_spark.operators.multimodal import (
 )
 
 
-def test_probe_image_dims_all_formats():
+def test_probe_image_dims_all_formats(unsupported_image_headers):
     rows = [[(10, 20, 30)] * 5 for _ in range(3)]
     assert probe_image_dims(encode_bmp(rows)) == ("bmp", 5, 3)
     assert probe_image_dims(encode_png(rows)) == ("png", 5, 3)
@@ -42,8 +41,10 @@ def test_probe_image_dims_all_formats():
     gif = encode_gif((5, 3), [{"rows": [[0] * 5] * 3}],
                      global_palette=[(1, 2, 3), (4, 5, 6)])
     assert probe_image_dims(gif) == ("gif", 5, 3)
-    tif = encode_tiff([[(1, 2, 3)] * 5] * 3)
-    assert probe_image_dims(tif) == ("tiff", 5, 3)
+    # TIFF and WebP headers are not probed: unrecognized like any other bytes
+    for payload in unsupported_image_headers:
+        with pytest.raises(ValueError, match="unrecognized image payload"):
+            probe_image_dims(payload)
     with pytest.raises(ValueError):
         probe_image_dims(b"II*\x00\xff\xff\xff\xff broken IFD")
     with pytest.raises(ValueError):

@@ -1,6 +1,9 @@
 """Dead-module guard: every module of the package must be reachable by
 static imports from a production entry point — the pipeline, the gate
 queries, the benches, ``__spark_entry__.py``, or the operational scripts.
+And the other way round: every package import anywhere in the repo must
+name a module and a top-level name that still exist, so deleting code
+cannot leave a script that no test runs importing it.
 
 AST-only (no Spark, no package import): walks ``import`` / ``from ...
 import`` statements anywhere in each file, function-local imports
@@ -30,7 +33,7 @@ ENTRY_GLOBS = (
     "scripts/scaling_bench.py",
 )
 
-# The media-codec tier is unreached as well, but its ~110 codec tests
+# The media-codec tier is unreached as well, but its ~90 codec tests
 # leave with it, so it is deleted in slices.  This set may only shrink:
 # a module listed here that disappears or becomes reachable fails
 # test_pending_deletions_are_current until it is taken off.
@@ -41,10 +44,6 @@ PENDING_DELETION = frozenset(
         "functions.gif",
         "functions.jpeg",
         "functions.mediameta",
-        "functions.tiff",
-        "functions.vp8",
-        "functions.vp8_tables",
-        "functions.vp8l",
         "operators.multimodal",
     )
 )
@@ -65,8 +64,10 @@ def _package_modules() -> dict[str, Path]:
     return out
 
 
-def _imports(path: Path, modules: dict[str, Path]) -> set[str]:
-    """Package modules ``path`` imports (absolute or relative)."""
+def _import_nodes(path: Path):
+    """(node, absolute module) for every import statement in ``path``;
+    the module is None for a plain ``import``.  Relative imports outside
+    the package are skipped."""
     name = _module_name(path)
     if name is None:
         package = None
@@ -74,23 +75,27 @@ def _imports(path: Path, modules: dict[str, Path]) -> set[str]:
         package = name
     else:
         package = name.rpartition(".")[0]
-    found: set[str] = set()
     for node in ast.walk(ast.parse(path.read_text(), str(path))):
         if isinstance(node, ast.Import):
-            targets = [a.name for a in node.names]
+            yield node, None
         elif isinstance(node, ast.ImportFrom):
-            if node.level:
-                if package is None:
-                    continue
+            if not node.level:
+                yield node, node.module or ""
+            elif package is not None:
                 base = package.split(".")
                 base = base[: len(base) - (node.level - 1)]
-                mod = ".".join(base + ([node.module] if node.module else []))
-            else:
-                mod = node.module or ""
+                yield node, ".".join(base + ([node.module] if node.module else []))
+
+
+def _imports(path: Path, modules: dict[str, Path]) -> set[str]:
+    """Package modules ``path`` imports (absolute or relative)."""
+    found: set[str] = set()
+    for node, mod in _import_nodes(path):
+        if mod is None:
+            targets = [a.name for a in node.names]
+        else:
             # ``from pkg.sub import name``: name may itself be a submodule
             targets = [mod] + [f"{mod}.{a.name}" for a in node.names]
-        else:
-            continue
         for t in targets:
             # importing a.b.c also runs a/__init__ and a.b/__init__
             parts = t.split(".")
@@ -135,4 +140,64 @@ def test_pending_deletions_are_current():
     stale = sorted(PENDING_DELETION - set(unreached_modules()))
     assert not stale, (
         f"no longer pending deletion (gone or now reachable): {', '.join(stale)}"
+    )
+
+
+IMPORTER_GLOBS = (
+    f"{PKG}/**/*.py",
+    "scripts/*.py",
+    "tests/*.py",
+    "bench*.py",
+    "perfbench/*.py",
+    "__spark_entry__.py",
+)
+
+
+def _top_level_names(path: Path) -> set[str]:
+    """Names bound at module level (through if/try/with blocks, not inside
+    functions or classes)."""
+    names: set[str] = set()
+    todo = list(ast.parse(path.read_text(), str(path)).body)
+    while todo:
+        node = todo.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                names.update(n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+        else:
+            for field in ("body", "orelse", "finalbody", "handlers"):
+                todo.extend(getattr(node, field, []))
+    return names
+
+
+def test_every_package_import_resolves():
+    modules = _package_modules()
+    names = {m: _top_level_names(p) for m, p in modules.items()}
+    broken = []
+    for p in sorted({p for g in IMPORTER_GLOBS for p in ROOT.glob(g)}):
+        where = p.relative_to(ROOT)
+        for node, mod in _import_nodes(p):
+            if mod is None:
+                missing = [
+                    a.name for a in node.names
+                    if a.name.split(".")[0] == PKG and a.name not in modules
+                ]
+            elif mod.split(".")[0] != PKG:
+                continue
+            elif mod not in modules:
+                missing = [mod]
+            else:
+                missing = [
+                    f"{mod}.{a.name}" for a in node.names
+                    if a.name != "*"
+                    and a.name not in names[mod]
+                    and f"{mod}.{a.name}" not in modules
+                ]
+            broken += [f"{where}:{node.lineno} {m}" for m in missing]
+    assert not broken, "imports of package modules or names that do not exist: " + (
+        ", ".join(broken)
     )
