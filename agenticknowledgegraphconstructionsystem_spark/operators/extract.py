@@ -67,8 +67,14 @@ def with_stats(docs: DataFrame) -> DataFrame:
 def extract_docs(pages: DataFrame) -> DataFrame:
     """pages → docs(url, warc_ts, lang, extracted_text, n_chars, n_words, n_pages).
 
-    Column-pruned before the UDF: only null-text rows ship their html bytes
-    through Arrow (the when() guard keeps the UDF off the fast path rows).
+    Column-pruned before the UDF (only url/warc_ts/lang/text/html are
+    read), but the when() guard does NOT keep the UDF off rows whose
+    ``text`` is present: Spark extracts the UDF into an ArrowEvalPython
+    node below the projection, so every row's html body is sent through
+    Arrow and parsed, and the guard only picks which value is kept.
+    Splitting the input into a NULL-text branch (through the UDF) and a
+    text branch (a union) was tried: Spark 4.1.2 still launches a Python
+    worker for the branch's tasks when it holds no rows.
     """
     extracted = F.when(
         F.col("text").isNotNull(), F.col("text")

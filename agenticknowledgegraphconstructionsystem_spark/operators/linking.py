@@ -416,7 +416,15 @@ def canonicalize(
     'representative' (linear-cost dense-family escape hatch — see
     :func:`representative_band_pairs`), or 'auto' (exact below
     DEFAULT_REP_BUCKET members per LSH bucket, star above — see
-    :func:`auto_band_pairs`)."""
+    :func:`auto_band_pairs`).
+
+    ``entities`` may hold a name more than once (``build_entities`` rows
+    are keyed by (name, concept_type)); it is collapsed to one row per
+    name with its max mention_count — the count the election would pick
+    anyway — so the mapping holds one row per name."""
+    entities = entities.groupBy("name").agg(
+        F.max("mention_count").alias("mention_count")
+    )
     edges = similarity_edges(entities, threshold, blocking=blocking, mode=mode)
     comp = connected_components(edges, max_iter=max_iter)
     members = entities.join(comp, "name", "left").withColumn(

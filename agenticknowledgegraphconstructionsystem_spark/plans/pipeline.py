@@ -17,11 +17,13 @@ nothing and logs one ``failed`` row (partition_id -1, output_rows 0).
 The set-at-a-time lift of the reference's per-paper ``extraction_logs``
 (db_init.py:150-159).  A killed run re-enters at the first uncommitted
 stage; committed stages are read back, not recomputed (D8 resume,
-database.ts:66-81).
+database.ts:66-81), and their inputs are not even planned: a resumed
+stage costs a manifest check and one lazy read.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 import uuid
@@ -285,9 +287,10 @@ class Pipeline:
                 }
                 for r in per_item.collect()
             ]
+        # the row counts each stage's commit recorded: no counting job
         report["totals"] = {
-            "entities": self._results["entities"].count(),
-            "relationships": self._results["relationships"].count(),
+            "entities": self.store.manifest("entities")["rows"],
+            "relationships": self.store.manifest("relationships")["rows"],
             "problematic_items": n_items,
         }
         with open(path, "w") as f:
@@ -492,12 +495,13 @@ class Pipeline:
         raw_mentions = self._stage(
             "mentions", lambda: clean_mentions(detect_mentions_native(docs))
         )
+        # a stage's derived inputs are built inside its build lambda, so a
+        # committed stage costs its manifest check and a lazy read, no plan
         if self.link:
-            raw_entities = build_entities(raw_mentions)
             mapping = self._stage(
                 "canonical_map",
                 lambda: canonicalize(
-                    raw_entities.select("name", "mention_count"),
+                    build_entities(raw_mentions).select("name", "mention_count"),
                     threshold=self.link_threshold,
                     mode=self.link_mode,
                 ),
@@ -520,8 +524,12 @@ class Pipeline:
         rels = self._stage(
             "relationships", lambda: discover_relationships(docs, mentions)
         )
-        rel_edges, _null_rels = upsert_relationship_edges(rels)
-        triples = self._stage("triples", lambda: build_triples(edges, rel_edges))
+
+        @functools.cache
+        def rel_edges() -> DataFrame:  # built once, by whichever stage computes
+            return upsert_relationship_edges(rels)[0]
+
+        triples = self._stage("triples", lambda: build_triples(edges, rel_edges()))
         findings = self._stage(
             "findings",
             lambda: entity_findings(entities, edges).unionByName(
@@ -531,7 +539,7 @@ class Pipeline:
         validated = self._stage(
             "validated_edges",
             lambda: apply_validated_flags(
-                rel_edges, findings.where(F.col("item_kind") == "relationship")
+                rel_edges(), findings.where(F.col("item_kind") == "relationship")
             ),
         )
         gm = None
@@ -560,13 +568,12 @@ class Pipeline:
                     pages, os.path.join(self.export_dir, "warc")
                 ),
             )
-            wet_docs = docs.select("url", "extracted_text").join(
-                pages.select("url", "warc_ts"), "url"
-            )
             et = self._stage(
                 "export_wet",
                 lambda: write_wet_shards(
-                    wet_docs,
+                    docs.select("url", "extracted_text").join(
+                        pages.select("url", "warc_ts"), "url"
+                    ),
                     os.path.join(self.export_dir, "wet"),
                     text_col="extracted_text",
                 ),

@@ -9,6 +9,8 @@ Design notes for the 100 TB target (tested on local[N]):
 * shuffle.partitions defaults to 2× cores locally; on a real cluster set it
   to ~2-3× total executor cores (or rely on AQE coalescing from a high
   initial value).
+* PySpark's DataFrame debugging (per-Column call-site capture) off — it
+  is driver time on every expression built, paid even when nothing fails.
 """
 
 from __future__ import annotations
@@ -140,6 +142,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # off: every Column function call would otherwise capture its
+        # Python call site (a stack walk, a conf read and two JVM calls),
+        # about doubling the driver's plan-building time.  Errors keep
+        # their class and JVM message but lose the call-site line.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

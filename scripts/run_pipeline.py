@@ -170,20 +170,24 @@ def main() -> None:
         assemble_shards=args.assemble_shards,
     )
     res = p.run(pages)
-    counts = {k: v.count() for k, v in res.items() if k in ("triples", "entities", "mentions")}
-    if "graph_metrics" in res:
-        counts["graph_nodes"] = res["graph_metrics"].count()
-    if "link_graph" in res:
-        counts["link_edges"] = res["link_graph"].count()
-        counts["host_nodes"] = res["host_rank"].count()
-    if "frontier" in res:
-        counts["frontier_urls"] = res["frontier"].count()
-        counts["cdx_records"] = res["cdx"].count()
-    if "export_warc" in res:
-        counts["export_warc_records"] = res["export_warc"].count()
-        counts["export_wet_records"] = res["export_wet"].count()
-    if "assembly" in res:
-        counts["assembly_rows"] = res["assembly"].count()
+    # committed stages report the row count their commit recorded; only
+    # the derived (re-pointed) mentions frame is counted
+    summary_keys = {
+        "triples": "triples",
+        "entities": "entities",
+        "graph_metrics": "graph_nodes",
+        "link_graph": "link_edges",
+        "host_rank": "host_nodes",
+        "frontier": "frontier_urls",
+        "cdx": "cdx_records",
+        "export_warc": "export_warc_records",
+        "export_wet": "export_wet_records",
+        "assembly": "assembly_rows",
+    }
+    counts = {"mentions": res["mentions"].count()}
+    for stage, key in summary_keys.items():
+        if stage in res:
+            counts[key] = p.store.manifest(stage)["rows"]
     if args.sql_views:
         from agenticknowledgegraphconstructionsystem_spark.sources.views import (
             register_views,

@@ -6,7 +6,9 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
+from agenticknowledgegraphconstructionsystem_spark.operators.entities import build_entities
 from agenticknowledgegraphconstructionsystem_spark.operators.linking import (
     canonicalize,
     connected_components,
@@ -91,6 +93,31 @@ def test_canonicalize_null_mention_count_never_wins(spark):
     assert mapping["sparks"] == "sparks"
     # all-NULL component: every count ties at 0, smallest name wins
     assert mapping["hash-join"] == mapping["hash join"] == "hash join"
+
+
+def test_canonicalize_one_row_per_name_across_concept_types(spark):
+    """build_entities keys rows by (name, concept_type), so a name typed
+    two ways arrives twice; the mapping still holds one row per name and
+    elects by the name's larger count ('spark': 1 as technology, 3 as
+    concept, beating 'sparks' at 2)."""
+    mentions = spark.createDataFrame(
+        [
+            ("u1", "spark", "technology"),
+            ("u2", "spark", "concept"),
+            ("u3", "spark", "concept"),
+            ("u4", "spark", "concept"),
+            ("u1", "sparks", "technology"),
+            ("u2", "sparks", "technology"),
+            ("u3", "hash join", "technology"),
+        ],
+        "url string, name string, concept_type string",
+    ).withColumn("relevance_pct", F.lit(50))
+    ents = build_entities(mentions).select("name", "mention_count")
+    assert ents.count() == 4
+    rows = canonicalize(ents).collect()
+    assert sorted(r["name"] for r in rows) == ["hash join", "spark", "sparks"]
+    mapping = {r["name"]: r["canonical_name"] for r in rows}
+    assert mapping == {"spark": "spark", "sparks": "spark", "hash join": "hash join"}
 
 
 def _partition(mapping_rows):

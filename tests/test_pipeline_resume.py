@@ -5,7 +5,9 @@ committed stages."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import AnalysisException
 
+from agenticknowledgegraphconstructionsystem_spark.plans import pipeline
 from agenticknowledgegraphconstructionsystem_spark.plans.pipeline import Pipeline
 from agenticknowledgegraphconstructionsystem_spark.sources.pages import synthetic_pages
 
@@ -59,6 +61,9 @@ def test_export_report(spark, tmp_path):
         on_disk = json.load(f)
     assert on_disk == report
     assert report["totals"]["entities"] > 0
+    # totals come from the commits' recorded row counts, and equal a count
+    assert report["totals"]["entities"] == p._results["entities"].count()
+    assert report["totals"]["relationships"] == p._results["relationships"].count()
     assert report["totals"]["problematic_items"] == len(report["items"])
     assert all(i["issues"] for i in report["items"])  # only problematic items
     # deterministic: exporting again yields identical bytes
@@ -90,3 +95,35 @@ def test_noop_rerun_recomputes_nothing(spark, tmp_path):
     res = p.run(pages)
     assert p._recomputed == []
     assert res["triples"].count() > 0
+
+
+def test_full_resume_plans_nothing_and_submits_no_job(spark, tmp_path, monkeypatch):
+    """A re-run over a store holding every stage builds no stage input
+    (the builders are patched to raise) and submits no Spark job."""
+    pages = synthetic_pages(spark, 20)
+    out = str(tmp_path / "kg")
+    Pipeline(spark, out, run_id="a").run(pages)
+
+    def refuse(*_args, **_kwargs):
+        raise AssertionError("a resumed run built a stage input")
+
+    for name in ("build_entities", "upsert_relationship_edges", "canonicalize"):
+        monkeypatch.setattr(pipeline, name, refuse)
+    sc = spark.sparkContext
+    sc.setJobGroup("full-resume", "re-run over a fully committed store")
+    try:
+        p = Pipeline(spark, out, run_id="b")
+        res = p.run(pages)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert p._recomputed == []
+    assert sc.statusTracker().getJobIdsForGroup("full-resume") == []
+    assert set(res) >= {"mentions", "triples", "validated_edges"}
+
+
+def test_session_call_site_capture_off(spark):
+    """get_spark turns off PySpark's per-Column call-site capture; an
+    analysis error still names the missing column."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    with pytest.raises(AnalysisException, match="no_such_column"):
+        spark.range(1).select("no_such_column")
