@@ -8,7 +8,9 @@ uses — one implementation, imported on driver and executors alike (ship via
 ``spark-submit --py-files`` on a real cluster).
 
 Content fallback mirrors P1 (entity-extraction-agent.ts:37): a pre-extracted
-``text`` column wins; only null-text rows pay the html parse.
+``text`` column wins.  The html parse is planned only when the parquet
+footers behind ``text`` cannot prove it NULL-free (see :func:`extract_docs`);
+when they can, no Python worker starts.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 from ..semantics import extract_text_from_html
+from ..session import _scan_nulls
 
 
 def _extract_any(payload) -> str | None:
@@ -67,23 +70,31 @@ def with_stats(docs: DataFrame) -> DataFrame:
 def extract_docs(pages: DataFrame) -> DataFrame:
     """pages → docs(url, warc_ts, lang, extracted_text, n_chars, n_words, n_pages).
 
-    Column-pruned before the UDF (only url/warc_ts/lang/text/html are
-    read), but the when() guard does NOT keep the UDF off rows whose
-    ``text`` is present: Spark extracts the UDF into an ArrowEvalPython
-    node below the projection, so every row's html body is sent through
-    Arrow and parsed, and the guard only picks which value is kept.
-    Splitting the input into a NULL-text branch (through the UDF) and a
-    text branch (a union) was tried: Spark 4.1.2 still launches a Python
-    worker for the branch's tasks when it holds no rows.
+    Footer rule: when ``pages.text`` is an unmodified parquet scan column
+    whose footer statistics count zero NULLs (:func:`session._scan_nulls`,
+    no Spark job), ``extracted_text`` is ``text`` and no UDF is planned.
+    Otherwise (any NULL, missing statistics, non-parquet input, or a
+    ``text`` the plan derives) it is ``text`` when present, else the html
+    parse.  The two plans agree on every NULL-free input.
+
+    The when() guard alone does NOT keep the UDF off rows whose ``text``
+    is present: Spark extracts the UDF into an ArrowEvalPython node below
+    the projection, so every row's html body is sent through Arrow and
+    parsed, and the guard only picks which value is kept.  Splitting the
+    input into a NULL-text branch (through the UDF) and a text branch (a
+    union) was tried: Spark 4.1.2 still launches a Python worker for the
+    branch's tasks when it holds no rows.
     """
-    extracted = F.when(
-        F.col("text").isNotNull(), F.col("text")
-    ).otherwise(extract_text_udf(F.col("html")))
+    text = F.col("text")
+    if _scan_nulls(pages, "text") != 0:
+        text = F.when(text.isNotNull(), text).otherwise(
+            extract_text_udf(F.col("html"))
+        )
     return with_stats(
         pages.select(
             "url",
             "warc_ts",
             "lang",
-            extracted.alias("extracted_text"),
+            text.alias("extracted_text"),
         )
     )

@@ -32,7 +32,7 @@ join against the name→canonical mapping.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..session import cut_lineage
@@ -291,22 +291,25 @@ def connected_components(
     previous label table keyed by that hash pulls in that node's own
     (possibly smaller) component — the distance information roughly doubles
     per round, giving O(log diameter) convergence instead of O(diameter)
-    (a 31-node chain converges in 4 checked rounds; pytest-pinned).  The
+    (a 31-node chain converges in 11 of the default 20 rounds;
+    pytest-pinned).  The
     default max_iter=20 therefore covers any component a real corpus can
     produce; :func:`canonicalize` exposes it for pathological graphs.
     cut_lineage every round cuts the lineage chain (reliable checkpoint
     under a configured checkpoint dir, localCheckpoint otherwise) (SURVEY §4:
     driver-side loop over DataFrame ops, checkpointed).
+    Each round's checkpoint job also observes how many labels moved, so
+    convergence costs no action of its own.
     """
     max_iter = max(int(max_iter), 1)  # the for/else warning needs >= 1 round
-    changed = -1  # unknown until the first convergence check
     # materialize the caller's edge pipeline ONCE before fanning out: the
-    # symmetrizing union references it twice and the labels/sym cuts below
-    # are separate jobs, so an uncut (typically expensive — LSH blocking +
+    # symmetrizing union references it twice and the labels cut below is
+    # a separate job, so an uncut (typically expensive — LSH blocking +
     # Jaccard verify) edge plan was re-evaluated ~4x before the first
     # round even ran (measured: CC over the same edges checkpointed 3.1 s
     # vs 7.7 s lazy at sf1) — the q_pagerank/q_triangles edge-build
-    # discipline, applied at the operator boundary.
+    # discipline, applied at the operator boundary.  ``sym`` itself is
+    # two projections of this cut, so it needs no cut of its own.
     edges = cut_lineage(edges)
     sym = edges.select(
         F.col("name_a").alias("src"), F.col("name_b").alias("dst")
@@ -319,7 +322,6 @@ def connected_components(
         .withColumn("component", F.xxhash64("name"))
         .transform(cut_lineage)
     )
-    sym = sym.transform(cut_lineage)
     for it in range(max_iter):
         # explicit salting + two-phase min per north_rule: a hot (high-
         # degree) vertex's incoming labels first reduce within
@@ -333,6 +335,8 @@ def connected_components(
             F.min("component").alias("pmin")
         )
         neighbor_min = partial.groupBy("dst").agg(F.min("pmin").alias("nbr_min"))
+        # ``_old`` carries the previous label through the round, so the
+        # convergence count rides the round's own checkpoint job
         new_labels = (
             labels.join(neighbor_min, labels.name == neighbor_min.dst, "left")
             .select(
@@ -340,6 +344,7 @@ def connected_components(
                 F.least(
                     F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
                 ).alias("component"),
+                F.col("component").alias("_old"),
             )
         )
         # pointer jump through the PREVIOUS (checkpointed) label table:
@@ -348,10 +353,11 @@ def connected_components(
         # (the label table is vocabulary-sized) buys log-round convergence.
         # Skipped for the first ``jump_from`` rounds (default 2):
         # short-diameter graphs (the common case — near-dup name clusters
-        # are dense) converge at the it=1 check from plain propagation
-        # alone and would pay the join for nothing (round-3 bench: +10%
-        # on kg_canonicalize_20x; same-session A/B pinned the saving); a
-        # long chain only starts profiting once labels are >2 hops stale.
+        # are dense) converge within the first rounds from plain
+        # propagation alone and would pay the join for nothing (round-3
+        # bench: +10% on kg_canonicalize_20x; same-session A/B pinned the
+        # saving); a long chain only starts profiting once labels are >2
+        # hops stale.
         if it >= jump_from:
             lref = labels.select(
                 F.xxhash64("name").alias("_lh"), F.col("component").alias("_lc")
@@ -364,26 +370,25 @@ def connected_components(
                         F.col("component"),
                         F.coalesce(F.col("_lc"), F.col("component")),
                     ).alias("component"),
+                    "_old",
                 )
             )
-        new_labels = new_labels.transform(cut_lineage)
-        # convergence check only on odd rounds: each check is a driver
-        # action (a full job); min-label propagation never un-converges,
-        # so checking every 2nd round halves the serial job count for a
-        # worst-case cost of one extra (cheap, already-converged) round
-        if it % 2 == 1 or it == max_iter - 1:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "name")
-                .where(F.col("n.component") != F.col("o.component"))
-                .count()
+        # convergence is checked every round at no extra job: the count
+        # of moved labels is observed by the eager cut that materializes
+        # the round anyway (min-label propagation never un-converges, so
+        # zero moved labels is the fixed point)
+        moved = Observation()
+        labels = (
+            new_labels.observe(
+                moved,
+                F.count(F.when(F.col("component") != F.col("_old"), 1)).alias("changed"),
             )
-            labels = new_labels
-            if changed == 0:
-                break
-        else:
-            changed = -1  # unknown this round
-            labels = new_labels
+            .transform(cut_lineage)
+            .select("name", "component")
+        )
+        changed = moved.get["changed"]
+        if changed == 0:
+            break
     else:
         # loop exhausted max_iter while labels were still moving: a
         # component with diameter > max_iter would be returned split
@@ -392,7 +397,7 @@ def connected_components(
 
         logging.getLogger(__name__).warning(
             "connected_components: not converged after %d iterations "
-            "(%d labels changing at last check; -1 = never checked); "
+            "(%d labels changing at the last round); "
             "components may be split — raise max_iter",
             max_iter,
             changed,

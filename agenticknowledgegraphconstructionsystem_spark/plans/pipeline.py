@@ -421,7 +421,8 @@ class Pipeline:
         Incremental shape (the 100 TB story — adding 0.1% of docs must
         not recompute the other 99.9%):
 
-        * **extract** — delta-only by construction (the resume anti-join).
+        * **extract** — delta-only by construction (the resume anti-join),
+          with lineage rows for the first commit and for each append.
         * **mentions** — per-doc, so the delta's mentions are detected and
           APPENDED to the committed mentions table (with lineage rows for
           the delta partitions); the full corpus is never re-detected.
@@ -439,9 +440,12 @@ class Pipeline:
         * a no-op increment (every url already extracted) invalidates
           NOTHING — downstream outputs are provably unchanged.
         """
+        t0 = time.time()
         if not self.store.is_committed("extract"):
-            new_docs = extract_docs(pages)
-            self.store.commit("extract", new_docs, self.run_id)
+            self.store.commit("extract", extract_docs(pages), self.run_id)
+            # extract is one row per page, so rows in = the commit's rows
+            n = self.store.manifest("extract")["rows"]
+            self._lineage_rows("extract", n, int((time.time() - t0) * 1000))
             return self.store.read("extract")
         committed = self.store.read("extract")
         todo = resume_inputs(pages, committed, "url")
@@ -474,6 +478,7 @@ class Pipeline:
             if stage not in keep:
                 self.store.uncommit(stage)
         self.store.append("extract", new_docs)
+        self._lineage_rows("extract", n_new, int((time.time() - t0) * 1000))
         if incremental_mentions:
             t0 = time.time()
             self.store.append("mentions", clean_mentions(detect_mentions_native(new_docs)))

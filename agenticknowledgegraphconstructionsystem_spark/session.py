@@ -49,23 +49,105 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
 SPREAD_ROWS_PER_PART = 512
 
 
-def _scan_rows(df: DataFrame) -> int | None:
-    """Total parquet rows behind ``df``'s scan, from file footers on the
-    driver (no Spark job).  None when the inputs are not local parquet
-    files — callers fall back to the full shuffle-partition spread."""
+def _footer_sum(files, per_file) -> int | None:
+    """Sum of ``per_file(local path)`` over ``files`` (URIs), read from
+    parquet footers with pyarrow (no Spark job).  None when there are no
+    files, one is not local or not readable parquet, or ``per_file``
+    returns None for one."""
     from urllib.parse import unquote, urlparse
 
     import pyarrow as pa
 
-    from .sources.io import parquet_rows
-
-    files = [urlparse(f) for f in df.inputFiles()]
+    files = [urlparse(f) for f in files]
     if not files or any(u.scheme not in ("file", "") for u in files):
         return None
-    try:
-        return sum(parquet_rows(unquote(u.path)) for u in files)
-    except (pa.ArrowInvalid, OSError):  # not parquet / not readable here
+    total = 0
+    for u in files:
+        try:
+            n = per_file(unquote(u.path))
+        except (pa.ArrowInvalid, OSError):  # not parquet / not readable here
+            return None
+        if n is None:
+            return None
+        total += n
+    return total
+
+
+def _scan_rows(df: DataFrame) -> int | None:
+    """Total parquet rows behind ``df``'s scan, from file footers on the
+    driver (no Spark job).  None when the inputs are not local parquet
+    files — callers fall back to the full shuffle-partition spread."""
+    from .sources.io import parquet_rows
+
+    return _footer_sum(df.inputFiles(), parquet_rows)
+
+
+#: logical plan nodes that pass every column through unchanged and only
+#: drop, reorder or repeat rows: a NULL-free scan column stays NULL-free
+_ROW_ONLY_NODES = frozenset({
+    "Filter", "Sort", "Repartition", "RepartitionByExpression",
+    "RebalancePartitions", "GlobalLimit", "LocalLimit", "Offset", "Tail",
+    "Sample", "Deduplicate",
+})
+
+
+def _scan_nulls(df: DataFrame, col: str) -> int | None:
+    """NULLs in the parquet scan column that ``df[col]`` is, unmodified,
+    summed from the files' footer statistics (no Spark job).  Zero proves
+    ``df[col]`` holds no NULL.
+
+    The column's ``exprId`` is followed from the root of the optimized
+    plan down to a ``LogicalRelation`` over parquet files.  Only a bare
+    attribute in a ``Project``, a row-only node (:data:`_ROW_ONLY_NODES`),
+    the left side of a semi/anti join and the carrying side of an inner
+    join pass it through.  Anything else (a new attribute of the same
+    name, a union, an outer join, an aggregate, an in-memory or RDD
+    relation) returns None, as do non-local or non-parquet files, a file
+    without the column and a row group without a null count."""
+    from .sources.io import parquet_nulls
+
+    def attrs(seq):
+        return [seq.apply(i) for i in range(seq.size())]
+
+    def carries(plan, expr_id):
+        return any(a.exprId().id() == expr_id for a in attrs(plan.output()))
+
+    node = df._jdf.queryExecution().optimizedPlan()
+    ids = [a.exprId().id() for a in attrs(node.output()) if a.name() == col]
+    if len(ids) != 1:
         return None
+    target = ids[0]
+    while node.nodeName() != "LogicalRelation":
+        kind = node.nodeName()
+        join = node.joinType().sql() if kind == "Join" else None
+        if kind == "Project":
+            if not any(
+                e.getClass().getSimpleName() == "AttributeReference"
+                and e.exprId().id() == target
+                for e in attrs(node.projectList())
+            ):
+                return None
+            node = node.child()
+        elif kind in _ROW_ONLY_NODES:
+            node = node.child()
+        elif join in ("LEFT SEMI", "LEFT ANTI"):
+            node = node.left()
+        elif join == "INNER":
+            node = node.left() if carries(node.left(), target) else node.right()
+        else:
+            return None
+    rel = node.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+    ):
+        return None
+    names = [a.name() for a in attrs(node.output()) if a.exprId().id() == target]
+    if len(names) != 1:
+        return None
+    return _footer_sum(
+        rel.location().inputFiles(), lambda path: parquet_nulls(path, names[0])
+    )
 
 
 def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:

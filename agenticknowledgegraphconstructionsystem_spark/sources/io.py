@@ -58,6 +58,23 @@ def parquet_rows(path: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
+def parquet_nulls(path: str, column: str) -> int | None:
+    """NULLs in one top-level column of a local parquet file, summed from
+    its row groups' footer statistics (no Spark job).  None when the file
+    lacks the column or a row group records no null count."""
+    md = pq.ParquetFile(path).metadata
+    idx = [j for j in range(md.num_columns) if md.schema.column(j).path == column]
+    if len(idx) != 1:
+        return None
+    nulls = 0
+    for g in range(md.num_row_groups):
+        stats = md.row_group(g).column(idx[0]).statistics
+        if stats is None or not stats.has_null_count:
+            return None
+        nulls += stats.null_count
+    return nulls
+
+
 def written_rows(data_dir: str) -> dict[int, int]:
     """Rows per write task of a parquet data dir Spark just wrote, from
     the file footers: ``{task id: rows}``, keyed by the ``part-NNNNN``

@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from agenticknowledgegraphconstructionsystem_spark import semantics as S
 from agenticknowledgegraphconstructionsystem_spark.operators.extract import extract_docs
+from agenticknowledgegraphconstructionsystem_spark.session import _scan_nulls
 from agenticknowledgegraphconstructionsystem_spark.sources.pages import (
     PAGES_SCHEMA,
     synthetic_pages,
@@ -171,3 +174,77 @@ def test_warc_malformed_contracts():
     assert _parse_warc_date("not-a-date") == WARC_TS_SENTINEL
     assert _parse_warc_date("") == WARC_TS_SENTINEL
     assert _parse_warc_date("2025-01-02T12:30:00Z").year == 2025
+
+
+# -- footer rule: the html UDF is planned only when `text` may be NULL --------
+
+
+def _text_pages(spark, tmp_path, null_urls=()):
+    """Parquet pages whose ``text`` is the reference extraction of their
+    html (rows whose body extracts to None are left out), NULL for
+    ``null_urls``; → (pages DataFrame, {url: reference text})."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows, ref = [], {}
+    for r in synthetic_pages_rows(24):
+        text = S.extract_text_from_html(r["html"])
+        if text is None:
+            continue
+        ref[r["url"]] = text
+        rows.append(dict(r, text=None if r["url"] in null_urls else text))
+    path = str(tmp_path / f"pages-{len(null_urls)}.parquet")
+    pq.write_table(pa.Table.from_pylist(rows), path)
+    return spark.read.parquet(path), ref
+
+
+def _plans_udf(df) -> bool:
+    return "ArrowEvalPython" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_extract_null_free_text_plans_no_udf(spark, tmp_path):
+    pages, ref = _text_pages(spark, tmp_path)
+    assert _scan_nulls(pages, "text") == 0
+    docs = extract_docs(pages)
+    assert not _plans_udf(docs)
+    got = {r["url"]: r["extracted_text"] for r in docs.collect()}
+    assert got == ref
+    # row-only nodes and semi/anti/inner joins keep the proof
+    other = pages.select("url").where(F.col("url") > "https://example.org/paper/00003")
+    for derived in (
+        pages.where(F.col("lang") == "en").orderBy("url").limit(10),
+        pages.join(other, "url", "left_anti"),
+        pages.join(other, "url", "left_semi"),
+        other.join(pages.repartition(3), "url"),
+    ):
+        assert _scan_nulls(derived, "text") == 0
+        assert not _plans_udf(extract_docs(derived))
+
+
+def test_extract_one_null_text_plans_udf_byte_identical(spark, tmp_path):
+    url = "https://example.org/paper/00002"
+    pages, ref = _text_pages(spark, tmp_path, null_urls={url})
+    assert _scan_nulls(pages, "text") == 1
+    docs = extract_docs(pages)
+    assert _plans_udf(docs)
+    got = {r["url"]: r["extracted_text"] for r in docs.collect()}
+    assert got == ref
+
+
+def test_extract_derived_text_keeps_udf(spark, tmp_path):
+    """A ``text`` the plan derives, or one read from no parquet file, is
+    never proven NULL-free, however NULL-free the files below it are."""
+    pages, ref = _text_pages(spark, tmp_path)
+    # the gate's html-path shape: NULL-free file, text replaced by NULL
+    nulled = pages.withColumn("text", F.lit(None).cast("string"))
+    extra = spark.createDataFrame([("https://example.org/extra",)], "url string")
+    for derived in (
+        nulled,
+        pages.unionByName(pages),
+        extra.join(pages, "url", "left"),
+        spark.createDataFrame(pages.collect(), pages.schema),
+    ):
+        assert _scan_nulls(derived, "text") is None
+        assert _plans_udf(extract_docs(derived))
+    got = {r["url"]: r["extracted_text"] for r in extract_docs(nulled).collect()}
+    assert got == ref

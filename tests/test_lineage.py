@@ -60,8 +60,8 @@ def test_lineage_rows_match_manifest_and_count(spark, tmp_path):
 
 
 def test_lineage_rows_after_append(spark, tmp_path):
-    """ingest_increment appends the delta mentions; its lineage rows plus
-    the base commit's add up to the enlarged table."""
+    """ingest_increment commits, then appends, extract and the delta
+    mentions; each table's lineage rows add up to the enlarged table."""
     pages = synthetic_pages(spark, 30)
     out = str(tmp_path / "kg")
     p1 = Pipeline(spark, out, run_id="r1")
@@ -77,6 +77,8 @@ def test_lineage_rows_after_append(spark, tmp_path):
     m = p2.store.manifest("mentions")
     assert m["kind"] == "append" and m["rows"] > base_rows
     _assert_contract(p2, "mentions", p2.store.read("mentions"))
+    _assert_contract(p2, "extract", p2.store.read("extract"))
+    assert {r["input_rows"] for r in _lineage(p2, "extract")} == {20, 10}
     delta = _lineage(p2, "mentions", "r2")
     assert {r["input_rows"] for r in delta} == {10}
     assert sum(r["output_rows"] for r in delta) == m["rows"] - base_rows

@@ -67,6 +67,24 @@ def test_connected_components_chain_and_islands(spark):
     assert comp["a"] != comp["x"]
 
 
+def test_connected_components_runs_no_count(spark, monkeypatch):
+    """Convergence is observed on each round's checkpoint job: no round
+    pays a separate DataFrame.count() action."""
+    edges = spark.createDataFrame(
+        [Row(name_a=f"n{i}", name_b=f"n{i + 1}") for i in range(7)]
+        + [Row(name_a="x", name_b="y")]
+    )
+
+    def no_count(self):
+        raise AssertionError("connected_components ran DataFrame.count()")
+
+    monkeypatch.setattr(type(edges), "count", no_count)
+    comp = {r["name"]: r["component"] for r in connected_components(edges).collect()}
+    assert len(comp) == 10
+    assert len({comp[f"n{i}"] for i in range(8)}) == 1
+    assert comp["x"] == comp["y"] != comp["n0"]
+
+
 def test_canonicalize_picks_highest_mention_count(spark):
     ents = _ents(
         spark,

@@ -127,3 +127,41 @@ def test_session_call_site_capture_off(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     with pytest.raises(AnalysisException, match="no_such_column"):
         spark.range(1).select("no_such_column")
+
+
+def test_incremental_job_over_null_free_pages_builds_no_udf(spark, tmp_path, monkeypatch):
+    """Parquet pages whose footers count no NULL ``text``: a committed
+    base, then ingest_increment of the delta and a run, never build the
+    html-extraction UDF (patched to raise), so no Python worker starts."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from agenticknowledgegraphconstructionsystem_spark import semantics as S
+    from agenticknowledgegraphconstructionsystem_spark.operators import extract
+    from agenticknowledgegraphconstructionsystem_spark.sources.pages import (
+        synthetic_pages_rows,
+    )
+
+    rows = [
+        dict(r, text=S.extract_text_from_html(r["html"]))
+        for r in synthetic_pages_rows(30)
+    ]
+    rows = [r for r in rows if r["text"] is not None]
+    path = str(tmp_path / "pages.parquet")
+    pq.write_table(pa.Table.from_pylist(rows), path)
+    pages = spark.read.parquet(path)
+
+    def refuse(*_args, **_kwargs):
+        raise AssertionError("the html-extraction UDF was built")
+
+    monkeypatch.setattr(extract, "extract_text_udf", refuse)
+    cut = "https://example.org/paper/00020"
+    base_pages = pages.where(F.col("url") < cut)
+    out = str(tmp_path / "kg")
+    Pipeline(spark, out, run_id="base").ingest_increment(base_pages)
+    p = Pipeline(spark, out, run_id="delta")
+    assert p.ingest_increment(pages).count() == sum(r["url"] >= cut for r in rows)
+    res = p.run(pages)
+    assert p.store.manifest("extract")["rows"] == len(rows)
+    assert res["triples"].count() > 0
