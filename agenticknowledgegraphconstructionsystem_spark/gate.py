@@ -492,18 +492,16 @@ def q_open_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D10/D11 — entity linking + canonicalization (the rebuild's
     north-star feature; reference wish-list README.md:1442-1444 "Merge
-    'NeRF' and 'Neural Radiance Fields'").  Gate path: exact shared-shingle
-    blocking (recall exactly 1, still join-blocked) + exact char-3gram
-    Jaccard >= 0.5 + connected components + highest-mention_count /
-    smallest-name canonical election; the DuckDB oracle replays the
-    identical edges and components via WITH RECURSIVE min-label walk.  The
-    LSH blocking path is pinned separately by brute-force parity pytest."""
+    'NeRF' and 'Neural Radiance Fields'").  The pipeline's one linking
+    path: exact shared-shingle blocking (recall exactly 1, still
+    join-blocked) + exact char-3gram Jaccard >= 0.5 + connected components
+    + highest-mention_count / smallest-name canonical election; the DuckDB
+    oracle replays the identical edges and components via WITH RECURSIVE
+    min-label walk."""
     from .operators.linking import canonicalize
 
     ents = build_entities(_mentions(spark, sf_dir))
-    mapping = canonicalize(
-        ents.select("name", "mention_count"), threshold=0.5, blocking="exact"
-    )
+    mapping = canonicalize(ents.select("name", "mention_count"), threshold=0.5)
     return mapping.select("name", "canonical_name")
 
 

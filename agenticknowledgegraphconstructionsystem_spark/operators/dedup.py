@@ -133,8 +133,6 @@ def capped_band_pairs(
     banded: DataFrame,
     key: str,
     max_bucket: int | None,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
     dedup: bool = True,
 ) -> DataFrame:
     """LSH blocking self-join with a hot-bucket cap.
@@ -168,12 +166,12 @@ def capped_band_pairs(
             sizes.where(F.col("_bucket_sz") <= max_bucket),
             ["band_id", "band_hash"],
         ).drop("_bucket_sz")
-    a = banded.select(F.col(key).alias(id_a), "band_id", "band_hash")
-    b = banded.select(F.col(key).alias(id_b), "band_id", "band_hash")
+    a = banded.select(F.col(key).alias("id_a"), "band_id", "band_hash")
+    b = banded.select(F.col(key).alias("id_b"), "band_id", "band_hash")
     out = (
         a.join(b, ["band_id", "band_hash"])
-        .where(F.col(id_a) < F.col(id_b))
-        .select(id_a, id_b)
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
     )
     # ``dedup=False`` lets a caller whose per-pair work is cheap and
     # deterministic (e.g. a codegen'd cosine) defer the duplicate-collision

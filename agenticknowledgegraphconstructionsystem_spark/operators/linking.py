@@ -3,17 +3,16 @@
 The reference only dedups on exact name (``UNIQUE(name)``, db_init.py:56)
 and wish-lists real linking ("Merge 'NeRF' and 'Neural Radiance Fields'",
 README.md:1442-1444).  The north_rule requires it, so this module builds it
-Spark-first:
+Spark-first, as ONE path that the kg_canonicalize DuckDB twin replays
+(oracles.py):
 
-1. **MinHash-LSH blocking** over char-3-gram shingles of entity names —
-   hand-rolled with built-in functions only (``xxhash64`` per seed →
-   ``min`` per name → block on each minhash band).  Every step is a
-   map-side-combinable aggregation; no Python in the hot path, no
-   cartesian pair space.  Banding is r=1, b=K (one band per minhash): at
-   Jaccard 0.5 and K=16 the miss probability is (1-0.5)^16 ≈ 1.5e-5, and
-   false candidates are removed by the exact-Jaccard verify step.
+1. **Exact shared-shingle blocking** over char-3-gram shingles of entity
+   names: candidates are the name pairs sharing >= 1 shingle — recall
+   exactly 1, still join-blocked (never all pairs).  Shingles present in
+   more than ``max_df`` names are cut from *pairing* only, so a
+   stop-trigram cannot emit df² candidate rows.
 2. **Exact Jaccard verify** on the candidate pairs via a shingle
-   intersection count — candidates only, never all pairs.
+   intersection count, thresholded by integer cross-multiplication.
 3. **Connected components** by iterative min-label propagation (the
    GraphFrames-style algorithm, hand-rolled as join + min-agg per
    round with cut_lineage to cut lineage).  The min() aggregation is
@@ -58,117 +57,6 @@ def name_shingles(entities: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def minhash_signatures(shingles: DataFrame, num_hashes: int = 16) -> DataFrame:
-    """→ (name, band_id, band_hash): one row per (name, hash seed), where
-    band_hash = min over shingles of xxhash64(shingle, seed)."""
-    mins = shingles.groupBy("name").agg(
-        *[
-            F.min(F.xxhash64(F.col("shingle"), F.lit(seed))).alias(f"h{seed}")
-            for seed in range(num_hashes)
-        ]
-    )
-    bands = F.array(*[F.col(f"h{s}") for s in range(num_hashes)])
-    return mins.select(
-        "name", F.posexplode(bands).alias("band_id", "band_hash")
-    )
-
-
-def candidate_pairs(
-    signatures: DataFrame, max_bucket: int | None = None
-) -> DataFrame:
-    """LSH blocking: names sharing any (band_id, band_hash) bucket.
-
-    ``max_bucket`` (default: dedup.DEFAULT_MAX_BUCKET) caps degenerate
-    buckets — e.g. thousands of short names landing in one minhash band
-    would emit |bucket|² candidate rows before the verify step; capping
-    keeps the pair space linear in the bucket cap while the redundant
-    bands preserve recall (see dedup.capped_band_pairs for the audit
-    path)."""
-    from .dedup import DEFAULT_MAX_BUCKET, capped_band_pairs
-
-    if max_bucket is None:
-        max_bucket = DEFAULT_MAX_BUCKET
-    return capped_band_pairs(
-        signatures, "name", max_bucket, id_a="name_a", id_b="name_b"
-    )
-
-
-def representative_band_pairs(signatures: DataFrame) -> DataFrame:
-    """Hub-and-spoke candidates per LSH bucket: each member pairs with the
-    bucket REPRESENTATIVE (min name) only — a bucket of B members emits
-    B−1 candidate rows instead of B(B−1)/2.
-
-    This is the linear-cost escape hatch for dense alias families (the
-    round-4 verdict's one carried ``weak``): exact all-pair verification
-    inside a family of f mutually-similar names is O(f²) *by construction*
-    ("all pairs >= threshold" IS the answer set), which at web scale makes
-    mega-families (boilerplate names, numeric variants) the dominant cost.
-    With representative pairing the verified edge set is a star per
-    bucket; connected components supplies the transitive closure, so the
-    FAMILIES recovered are near-identical while the edge count drops from
-    quadratic to linear.
-
-    Semantics delta vs all-pairs (measured in test_linking + PLANS.md):
-    * recall — a true pair can be missed only if in EVERY shared band the
-      bucket rep is similar to neither member; banding redundancy
-      (num_hashes buckets per name) makes this rare.
-    * precision — two members within threshold of a rep but not of each
-      other merge through the star (CC would also merge them through any
-      chain, so this is the usual transitive-closure semantics, reached
-      through one more hop).
-    Since the rep is min(name) per bucket, pairs come out already
-    canonically ordered (name_a < name_b)."""
-    reps = signatures.groupBy("band_id", "band_hash").agg(
-        F.min("name").alias("name_a")
-    )
-    return (
-        signatures.join(reps, ["band_id", "band_hash"])
-        .where(F.col("name") != F.col("name_a"))
-        .select("name_a", F.col("name").alias("name_b"))
-        .distinct()
-    )
-
-
-#: bucket-size threshold for ``mode='auto'``: LSH buckets with at most
-#: this many members verify ALL in-bucket pairs (exact pair semantics);
-#: larger buckets switch to hub-and-spoke representative pairing (O(B)
-#: candidate rows).  Sized from the measured probes: organic alias
-#: families are small (the sf gates' largest bucket is ≪ 32, so the
-#: kg_canonicalize-style answer is byte-identical under auto), while the
-#: 100-member dense-family probe recovered identical partitions through
-#: the star path (P/R 1.0, PLANS.md round 5) — so anything the threshold
-#: diverts is exactly the regime the star path is proven on.
-DEFAULT_REP_BUCKET = 32
-
-
-def auto_band_pairs(
-    signatures: DataFrame, rep_bucket: int = DEFAULT_REP_BUCKET
-) -> DataFrame:
-    """Per-bucket strategy selection (``mode='auto'``): one bucket-size
-    aggregate splits the signature table; small buckets emit the exact
-    all-pair candidates, oversize buckets emit representative stars.
-    A web-scale vocabulary hits mega-families (boilerplate names, numeric
-    variants) without giving up exact semantics everywhere else — the
-    per-bucket analog of AQE's skew-join split.  Pairs from both branches
-    come out canonically ordered (name_a < name_b for the pair branch;
-    rep = min name for the star branch), then union-distinct."""
-    sizes = signatures.groupBy("band_id", "band_hash").agg(
-        F.count("*").alias("_sz")
-    )
-    sig = signatures.join(sizes, ["band_id", "band_hash"])
-    small = sig.where(F.col("_sz") <= rep_bucket).drop("_sz")
-    a = small.select(F.col("name").alias("name_a"), "band_id", "band_hash")
-    b = small.select(F.col("name").alias("name_b"), "band_id", "band_hash")
-    exact_pairs = (
-        a.join(b, ["band_id", "band_hash"])
-        .where(F.col("name_a") < F.col("name_b"))
-        .select("name_a", "name_b")
-    )
-    big = sig.where(F.col("_sz") > rep_bucket).drop("_sz")
-    star_pairs = representative_band_pairs(big)
-    return exact_pairs.unionByName(star_pairs).distinct()
-
-
 #: df cap for the exact-blocking candidate path: char-3grams present in
 #: more than this many entity NAMES are excluded from *pairing* (not from
 #: the Jaccard verify).  Far above any gate/test-scale df, so the oracle
@@ -191,64 +79,36 @@ def dropped_name_shingles(sh: DataFrame, max_df: int) -> DataFrame:
 def similarity_edges(
     entities: DataFrame,
     threshold: float = 0.5,
-    num_hashes: int = 16,
-    blocking: str = "lsh",
     max_df: int | None = DEFAULT_NAME_SHINGLE_MAX_DF,
-    mode: str = "all_pairs",
 ) -> DataFrame:
-    """→ (name_a, name_b, jaccard) for candidate pairs with exact char-3gram
-    Jaccard >= threshold.
+    """→ (name_a, name_b, jaccard) for the name pairs with exact char-3gram
+    Jaccard >= threshold.  Candidates are every pair sharing >= 1 shingle
+    (recall exactly 1, join-blocked, never all pairs).
 
-    blocking='lsh' (default): MinHash-band candidates — probabilistic
-    recall (miss prob (1-j)^num_hashes), bucket-capped, the corpus-scale
-    path.  blocking='exact': candidates = every pair sharing >= 1 shingle —
-    the oracle-checkable path; still join-blocked, never all-pairs.
-
-    mode='all_pairs' (default): every in-bucket pair is verified — exact
-    pair semantics, O(f²) inside a dense f-member alias family.
-    mode='representative' (lsh blocking only): members verify against the
-    bucket representative only (:func:`representative_band_pairs`) — O(f)
-    edges per family, transitivity restored by connected components; use
-    for web-scale vocabularies where mega-families dominate.
-    mode='auto' (lsh blocking only): per-bucket selection — buckets of at
-    most :data:`DEFAULT_REP_BUCKET` members keep exact all-pair
-    verification, larger buckets switch to the representative star
-    (:func:`auto_band_pairs`) — the production default shape for dirty
-    web vocabularies.
-
-    ``max_df`` (exact path only) is the hot-shingle cut: a shingle shared
-    by df names emits df² candidate rows, and at a 10^6-name vocabulary
-    stop-trigrams reach df ~ 10^5 → 10^10 rows from one shingle.  Shingles
-    with df > max_df are excluded from *pairing* only — the Jaccard verify
-    still counts them, so scores are unchanged; recall for j >= 0.5 pairs
-    survives via their rarer shared shingles (a pair whose ONLY shared
-    shingles are df-heavy boilerplate is exactly the pair the cut is meant
-    to reject).  Audit with :func:`dropped_name_shingles`; None disables.
-    The default cap is sized far above gate-scale dfs, so the
-    kg_canonicalize oracle sees the uncut pair space."""
+    ``max_df`` is the hot-shingle cut: a shingle shared by df names emits
+    df² candidate rows, and at a 10^6-name vocabulary stop-trigrams reach
+    df ~ 10^5 → 10^10 rows from one shingle.  Shingles with df > max_df
+    are excluded from *pairing* only — the Jaccard verify still counts
+    them, so scores are unchanged; recall for j >= 0.5 pairs survives via
+    their rarer shared shingles (a pair whose ONLY shared shingles are
+    df-heavy boilerplate is exactly the pair the cut is meant to reject).
+    Audit with :func:`dropped_name_shingles`; None disables.  The default
+    cap is sized far above gate-scale dfs, so the kg_canonicalize oracle
+    sees the uncut pair space."""
     sh = name_shingles(entities)
     sizes = sh.groupBy("name").agg(F.count("*").alias("sz"))
-    if blocking == "exact":
-        pair_sh = sh
-        if max_df is not None:
-            dfc = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
-            pair_sh = sh.join(
-                dfc.where(F.col("_df") <= max_df), "shingle"
-            ).drop("_df")
-        a = pair_sh.select(F.col("name").alias("name_a"), "shingle")
-        b = pair_sh.select(F.col("name").alias("name_b"), F.col("shingle").alias("shingle_x"))
-        cand = (
-            a.join(b, F.col("shingle") == F.col("shingle_x"))
-            .where(F.col("name_a") < F.col("name_b"))
-            .select("name_a", "name_b")
-            .distinct()
-        )
-    elif mode == "representative":
-        cand = representative_band_pairs(minhash_signatures(sh, num_hashes))
-    elif mode == "auto":
-        cand = auto_band_pairs(minhash_signatures(sh, num_hashes))
-    else:
-        cand = candidate_pairs(minhash_signatures(sh, num_hashes))
+    pair_sh = sh
+    if max_df is not None:
+        dfc = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
+        pair_sh = sh.join(dfc.where(F.col("_df") <= max_df), "shingle").drop("_df")
+    a = pair_sh.select(F.col("name").alias("name_a"), "shingle")
+    b = pair_sh.select(F.col("name").alias("name_b"), F.col("shingle").alias("shingle_x"))
+    cand = (
+        a.join(b, F.col("shingle") == F.col("shingle_x"))
+        .where(F.col("name_a") < F.col("name_b"))
+        .select("name_a", "name_b")
+        .distinct()
+    )
     sh_b = sh.select(
         F.col("name").alias("nb"), F.col("shingle").alias("shingle_b")
     )
@@ -279,9 +139,16 @@ def similarity_edges(
     )
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 20, jump_from: int = 2
-) -> DataFrame:
+#: CC rounds before pointer jumping starts: short-diameter graphs (the
+#: common case — near-dup name clusters are dense) converge within the
+#: first rounds from plain propagation alone and would pay the jump join
+#: for nothing (round-3 bench: +10% on kg_canonicalize_20x; same-session
+#: A/B pinned the saving); a long chain only starts profiting once labels
+#: are >2 hops stale.
+JUMP_FROM_ROUND = 2
+
+
+def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """→ (name, component) via min-label propagation + pointer jumping.
 
     component = min xxhash64 over the component's names.  Each round does
@@ -304,8 +171,8 @@ def connected_components(
     max_iter = max(int(max_iter), 1)  # the for/else warning needs >= 1 round
     # materialize the caller's edge pipeline ONCE before fanning out: the
     # symmetrizing union references it twice and the labels cut below is
-    # a separate job, so an uncut (typically expensive — LSH blocking +
-    # Jaccard verify) edge plan was re-evaluated ~4x before the first
+    # a separate job, so an uncut (typically expensive — shingle blocking
+    # + Jaccard verify) edge plan was re-evaluated ~4x before the first
     # round even ran (measured: CC over the same edges checkpointed 3.1 s
     # vs 7.7 s lazy at sf1) — the q_pagerank/q_triangles edge-build
     # discipline, applied at the operator boundary.  ``sym`` itself is
@@ -350,15 +217,9 @@ def connected_components(
         # pointer jump through the PREVIOUS (checkpointed) label table:
         # component is xxhash64 of some member node, so look that node up
         # and take ITS component if smaller — one extra equi-join per round
-        # (the label table is vocabulary-sized) buys log-round convergence.
-        # Skipped for the first ``jump_from`` rounds (default 2):
-        # short-diameter graphs (the common case — near-dup name clusters
-        # are dense) converge within the first rounds from plain
-        # propagation alone and would pay the join for nothing (round-3
-        # bench: +10% on kg_canonicalize_20x; same-session A/B pinned the
-        # saving); a long chain only starts profiting once labels are >2
-        # hops stale.
-        if it >= jump_from:
+        # (the label table is vocabulary-sized) buys log-round convergence;
+        # skipped for the first JUMP_FROM_ROUND rounds.
+        if it >= JUMP_FROM_ROUND:
             lref = labels.select(
                 F.xxhash64("name").alias("_lh"), F.col("component").alias("_lc")
             )
@@ -406,22 +267,14 @@ def connected_components(
 
 
 def canonicalize(
-    entities: DataFrame,
-    threshold: float = 0.5,
-    blocking: str = "lsh",
-    max_iter: int = 20,
-    mode: str = "all_pairs",
+    entities: DataFrame, threshold: float = 0.5, max_iter: int = 20
 ) -> DataFrame:
     """→ (name, canonical_name, component).  Canonical member = highest
     mention_count, tie-break lexicographically smallest name.  Singleton
     entities map to themselves.  Edges are exact char-3gram Jaccard
-    >= ``threshold``; blocking: see :func:`similarity_edges`; max_iter:
-    CC round bound (pointer jumping makes 20 cover diameter ~2^20 — see
-    :func:`connected_components`); mode: 'all_pairs' (exact),
-    'representative' (linear-cost dense-family escape hatch — see
-    :func:`representative_band_pairs`), or 'auto' (exact below
-    DEFAULT_REP_BUCKET members per LSH bucket, star above — see
-    :func:`auto_band_pairs`).
+    >= ``threshold`` (:func:`similarity_edges`); max_iter: CC round bound
+    (pointer jumping makes 20 cover diameter ~2^20 — see
+    :func:`connected_components`).
 
     ``entities`` may hold a name more than once (``build_entities`` rows
     are keyed by (name, concept_type)); it is collapsed to one row per
@@ -430,7 +283,7 @@ def canonicalize(
     entities = entities.groupBy("name").agg(
         F.max("mention_count").alias("mention_count")
     )
-    edges = similarity_edges(entities, threshold, blocking=blocking, mode=mode)
+    edges = similarity_edges(entities, threshold)
     comp = connected_components(edges, max_iter=max_iter)
     members = entities.join(comp, "name", "left").withColumn(
         "component", F.coalesce(F.col("component"), F.xxhash64("name"))

@@ -89,7 +89,6 @@ class Pipeline:
         run_id: str = "run0",
         link: bool = True,
         link_threshold: float = 0.5,
-        link_mode: str = "all_pairs",
         dedup_mode: str | None = None,
         dedup_threshold: float = 0.5,
         graph_metrics: bool = False,
@@ -184,14 +183,10 @@ class Pipeline:
         self.spark = spark
         self.store = StageStore(spark, out_dir)
         self.run_id = run_id
-        if link_mode not in ("all_pairs", "representative", "auto"):
-            raise ValueError(f"unknown link_mode: {link_mode!r}")
         self.link = link
+        # one linking path: exact shared-shingle blocking, the pair space
+        # the kg_canonicalize DuckDB twin verifies
         self.link_threshold = link_threshold
-        # 'auto' = per-LSH-bucket strategy selection (linking.auto_band_pairs)
-        # — the web-scale default shape; 'all_pairs' keeps the exact gate
-        # semantics and stays the constructor default
-        self.link_mode = link_mode
         self.dedup_mode = dedup_mode
         self.dedup_threshold = dedup_threshold
         self.graph_metrics = graph_metrics
@@ -508,7 +503,6 @@ class Pipeline:
                 lambda: canonicalize(
                     build_entities(raw_mentions).select("name", "mention_count"),
                     threshold=self.link_threshold,
-                    mode=self.link_mode,
                 ),
             )
             # merged surface forms leave duplicate (url, name) rows —

@@ -69,9 +69,9 @@ def main() -> None:
     merged["kg_pairwise_capped"] = _pairwise_capped
     merged["kg_detect_mentions"] = _detect
 
-    # the bench.py canonicalize specials (NOT the exact-blocking gate
-    # query of the same name): LSH blocking over the entity table, and
-    # the 20x-name-universe variant
+    # the bench.py canonicalize specials: the full mapping over the entity
+    # table (the gate query of the same name keeps name/canonical_name
+    # only), and the 20x-name-universe variant
     def _canon_ents(spark_, sf_dir_):
         from pyspark.sql import functions as F
 

@@ -50,13 +50,6 @@ def main() -> None:
         "--link-threshold", type=float, default=0.5, help="canonicalization Jaccard cut"
     )
     ap.add_argument(
-        "--link-mode",
-        choices=["all_pairs", "representative", "auto"],
-        default="all_pairs",
-        help="candidate strategy: exact all-pairs, representative stars, "
-        "or per-bucket auto (exact <=32-member buckets, stars above)",
-    )
-    ap.add_argument(
         "--graph-metrics",
         action="store_true",
         help="reporting stage: PageRank + triangle counts over the "
@@ -149,7 +142,6 @@ def main() -> None:
         run_id=args.run_id,
         link=not args.no_link,
         link_threshold=args.link_threshold,
-        link_mode=args.link_mode,
         dedup_mode=args.dedup_mode,
         dedup_threshold=args.dedup_threshold,
         graph_metrics=args.graph_metrics,

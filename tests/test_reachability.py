@@ -1,19 +1,23 @@
-"""Dead-module guard: every module of the package must be reachable by
+"""Dead-code guard: every module of the package must be reachable by
 static imports from a production entry point — the pipeline, the gate
 queries, the benches, ``__spark_entry__.py``, or the operational scripts.
 And the other way round: every package import anywhere in the repo must
 name a module and a top-level name that still exist, so deleting code
-cannot leave a script that no test runs importing it.
+cannot leave a script that no test runs importing it.  Inside a reached
+module, every top-level ``def`` must be named by production code outside
+its own body, or it is dead too.
 
 AST-only (no Spark, no package import): walks ``import`` / ``from ...
 import`` statements anywhere in each file, function-local imports
-included.  A module nothing in production imports is dead code; delete
-it with its tests instead of keeping it alive from a test file.
+included, and the identifiers production code uses.  A module or function
+nothing in production reaches is dead code; delete it with its tests
+instead of keeping it alive from a test file.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -200,4 +204,120 @@ def test_every_package_import_resolves():
             broken += [f"{where}:{node.lineno} {m}" for m in missing]
     assert not broken, "imports of package modules or names that do not exist: " + (
         ", ".join(broken)
+    )
+
+
+# Top-level defs of reached modules that production code does not name,
+# as "<module>.<def>" under the package.  This set may only shrink: a def
+# listed here that disappears or gains a production reference fails
+# test_pending_dead_defs_are_current until it is taken off.
+PENDING_DEAD_DEFS = frozenset(
+    (
+        "functions.pdf.build_pdf",
+        "operators.cdx.surt_key",
+        "operators.cdx.write_cdx_sorted",
+        "operators.decontam.decontaminate",
+        "operators.dedup.dropped_band_buckets",
+        "operators.dedup.ngram_jaccard_pairs",
+        "operators.lines.census_overflow",
+        "operators.linking.dropped_name_shingles",
+        "operators.pii.pii_summary",
+        "operators.repetition.filter_repetitive",
+        "operators.robots.robots_from_pages",
+        "operators.similarity.cosine_topk",
+        "operators.similarity.rhp_signature_col",
+        "operators.sketches.kmv_estimate",
+        "operators.sketches.kmv_merge",
+        "operators.sketches.kmv_sketch",
+        "operators.textstats.add_language",
+        "operators.textstats.add_quality",
+        "semantics.affine_hash",
+        "semantics.char_ngrams",
+        "semantics.extraction_stats",
+        "semantics.is_valid",
+        "semantics.poly_hash",
+        "semantics.should_flag_for_review",
+        "semantics.stable_id",
+        "semantics.word_ngrams",
+        "sources.warc.read_warc_responses",
+        "sources.warc.write_warc_http",
+        "streaming.ops.latest_entities",
+        "streaming.ops.latest_frontier",
+        "streaming.ops.run_available_now",
+        "streaming.ops.sessionize",
+        "streaming.ops.streaming_corpus_stats",
+        "streaming.ops.streaming_dedup",
+        "streaming.ops.streaming_docs_source",
+        "streaming.ops.streaming_entities",
+        "streaming.ops.streaming_events_source",
+        "streaming.ops.streaming_fp_collisions",
+        "streaming.ops.streaming_frontier",
+        "streaming.ops.streaming_mentions",
+        "streaming.ops.windowed_event_counts",
+    )
+)
+
+
+def _used_names(path: Path) -> set[str]:
+    """Identifiers ``path`` uses: names, attribute names and imported
+    names, each outside the body of a function of the same name (a
+    recursive call does not keep a def alive).  Docstrings and comments
+    are not uses."""
+    used: set[str] = set()
+
+    def walk(node: ast.AST, inside: frozenset[str]) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            inside = inside | {node.name}
+        if isinstance(node, ast.Name):
+            name = node.id
+        elif isinstance(node, ast.Attribute):
+            name = node.attr
+        else:
+            name = None
+        if name is not None and name not in inside:
+            used.add(name)
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            used.update(a.name.rpartition(".")[2] for a in node.names)
+        for child in ast.iter_child_nodes(node):
+            walk(child, inside)
+
+    walk(ast.parse(path.read_text(), str(path)), frozenset())
+    return used
+
+
+@functools.cache
+def unreferenced_defs() -> tuple[str, ...]:
+    """Top-level defs of reached package modules that no production file
+    (reached package modules and the entry points) names.  Matching is by
+    bare name, so a def shadowed by a same-named use elsewhere passes."""
+    modules = _package_modules()
+    unreached = set(unreached_modules())
+    live = {m: p for m, p in modules.items() if m not in unreached}
+    prod = set(live.values()) | {p for g in ENTRY_GLOBS for p in ROOT.glob(g)}
+    used: set[str] = set()
+    for p in prod:
+        used |= _used_names(p)
+    dead = []
+    for m, p in live.items():
+        for node in ast.parse(p.read_text(), str(p)).body:
+            if (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and node.name not in used
+            ):
+                dead.append(f"{m.removeprefix(PKG + '.')}.{node.name}")
+    return tuple(sorted(dead))
+
+
+def test_every_package_def_is_referenced():
+    dead = sorted(set(unreferenced_defs()) - PENDING_DEAD_DEFS)
+    assert not dead, (
+        "top-level defs no production code names (delete them, with their "
+        f"tests): {', '.join(dead)}"
+    )
+
+
+def test_pending_dead_defs_are_current():
+    stale = sorted(PENDING_DEAD_DEFS - set(unreferenced_defs()))
+    assert not stale, (
+        f"no longer pending deletion (gone or now referenced): {', '.join(stale)}"
     )

@@ -26,7 +26,6 @@ from agenticknowledgegraphconstructionsystem_spark.operators.dedup import (
 from agenticknowledgegraphconstructionsystem_spark.operators.linking import (
     canonicalize,
     dedup_repointed_mentions,
-    similarity_edges,
 )
 from agenticknowledgegraphconstructionsystem_spark.operators.similarity import (
     embedding_near_duplicates,
@@ -69,26 +68,6 @@ def test_dropped_buckets_are_auditable(spark):
     # all 16 bands of the identical-doc signature are over the cap
     assert len(dropped) == 16
     assert all(r["n_members"] == 60 for r in dropped)
-
-
-@pytest.mark.slow  # round-6 fast-gate rebalance: family keeps a fast representative
-def test_linking_candidate_pairs_capped(spark):
-    """A degenerate name-LSH bucket (40 members) must not emit its 780
-    pairs; pairs from healthy buckets survive."""
-    from agenticknowledgegraphconstructionsystem_spark.operators.linking import (
-        candidate_pairs,
-    )
-
-    rows = [Row(name=f"hot{i:02d}", band_id=0, band_hash=7) for i in range(40)]
-    rows += [
-        Row(name="alias a", band_id=1, band_hash=99),
-        Row(name="alias b", band_id=1, band_hash=99),
-    ]
-    sigs = spark.createDataFrame(rows)
-    got = {(r["name_a"], r["name_b"]) for r in candidate_pairs(sigs, max_bucket=10).collect()}
-    assert got == {("alias a", "alias b")}
-    full = candidate_pairs(sigs, max_bucket=10_000).count()
-    assert full == 40 * 39 // 2 + 1
 
 
 # ---------------------------------------------------------------------------
@@ -241,16 +220,6 @@ def test_canonicalize_alias_precision_recall(spark):
     # pure abbreviations fall below char-3gram overlap at j=0.5
     for a, b in KNOWN_MISSES:
         assert not merged(a, b), (a, b)
-
-
-def test_similarity_edges_exact_matches_lsh(spark):
-    """blocking='exact' and blocking='lsh' agree on the fixture (LSH recall
-    loss at 16 minhashes is ~(1-j)^16 — nothing here sits near enough the
-    threshold to flip)."""
-    ents = _fixture_entities(spark)
-    exact = {(r["name_a"], r["name_b"]) for r in similarity_edges(ents, blocking="exact").collect()}
-    lsh = {(r["name_a"], r["name_b"]) for r in similarity_edges(ents, blocking="lsh").collect()}
-    assert exact == lsh
 
 
 def test_winnow_fingerprints_properties(spark, winnow_oracle):

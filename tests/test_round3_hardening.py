@@ -143,7 +143,7 @@ def test_exact_blocking_hot_shingle_capped(spark):
     sh = name_shingles(ents)
     hot = dropped_name_shingles(sh, max_df=50).collect()
     assert {r["shingle"] for r in hot} >= {" zz", "zzz", "zz "}
-    edges = similarity_edges(ents, threshold=0.5, blocking="exact", max_df=50)
+    edges = similarity_edges(ents, threshold=0.5, max_df=50)
     assert edges.collect() == []
 
 
@@ -154,7 +154,7 @@ def test_exact_blocking_max_df_preserves_true_pairs(spark):
     rows = [Row(name=f"uniq{i:04d} zzzz", mention_count=1) for i in range(n)]
     rows += [Row(name="apache spark", mention_count=9), Row(name="apache sparks", mention_count=1)]
     ents = spark.createDataFrame(rows)
-    edges = similarity_edges(ents, threshold=0.5, blocking="exact", max_df=30)
+    edges = similarity_edges(ents, threshold=0.5, max_df=30)
     pairs = {(r["name_a"], r["name_b"]) for r in edges.collect()}
     assert ("apache spark", "apache sparks") in pairs
 
