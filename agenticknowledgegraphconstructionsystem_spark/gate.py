@@ -335,6 +335,27 @@ def q_extract_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def drain_to_parquet(
+    stream_df: DataFrame, out_dir: str, checkpoint_dir: str
+) -> None:
+    """Drain all currently-available input into a parquet sink with a
+    durable checkpoint: re-invoking after new input files land processes
+    ONLY the delta (the file-source offsets live in the checkpoint), and
+    the file sink's commit log makes the appends exactly-once across
+    crash/restart.  The batch pipeline's resume (StageStore manifests +
+    anti-join) and this checkpoint are the same idea at two granularities
+    — stage-level vs source-offset-level."""
+    q = (
+        stream_df.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
 def _stream_drained_mentions(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the first :data:`semantics.STREAM_GATE_DOCS` documents
     through the REAL Structured Streaming path — parquet file source →
@@ -355,8 +376,6 @@ def _stream_drained_mentions(spark: SparkSession, sf_dir: str) -> str:
 
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from .streaming.ops import drain_to_parquet
 
     rows = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")

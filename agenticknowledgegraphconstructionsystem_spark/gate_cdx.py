@@ -64,7 +64,7 @@ p AS (
   FROM documents
 )"""
 
-#: DuckDB restatement of cdx.surt_key on top of _sql_norm — label
+#: DuckDB restatement of cdx._staged_surt on top of _sql_norm — label
 #: reversal via list_reverse, query sort via list_sort (both engines
 #: compare strings bytewise on this ASCII fixture).
 _DUCK_SURT = f"""

@@ -264,7 +264,7 @@ UNION
 SELECT CAST(o_custkey AS BIGINT) FROM orders WHERE o_orderpriority = '1-URGENT'"""
 
 
-# events — tumbling-window aggregation (batch form of the streaming op)
+# events — tumbling-window aggregation
 def q_events_hourly(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
     return (
@@ -512,9 +512,8 @@ GROUP BY ROLLUP (l_returnflag, l_linestatus)"""
 
 
 def q_sessionize(spark, sf_dir):
-    """Gap-based sessionization (gaps-and-islands) over events — the batch
-    twin of the streaming sessionize operator, 30-minute gap.  Micros and
-    integer cents keep the compare exact."""
+    """Gap-based sessionization (gaps-and-islands) over events,
+    30-minute gap.  Micros and integer cents keep the compare exact."""
     from .operators.temporal import sessionize_batch
 
     ev = _t(spark, sf_dir, "events").select(

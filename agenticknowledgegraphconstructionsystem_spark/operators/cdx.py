@@ -22,54 +22,24 @@ Scale shape (100 TB): ``cdx_records`` is a pure projection (digest is
 one sha256 per payload inside the scan stage — zero exchanges);
 ``cdx_latest`` is ONE WindowGroupLimit exchange on surt (bounded
 per-group state); ``host_capture_stats`` is one map-side-combinable
-agg keyed by registered domain.  Writing the index sorted-by-(surt,ts)
-is a repartitionByRange + sortWithinPartitions — the standard Spark
-shape for producing range-partitioned index shards.
+agg keyed by registered domain.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import semantics as S
 from .urls import normalize_url, registered_domain, url_parts
 
 
-def surt_key(url: Column) -> Column:
-    """URL → SURT key (``org,example)/path?a=1&b=2``), or NULL for
-    non-http(s) input.  Applied on top of normalize_url so case, default
-    ports, fragments, and tracking params are already gone."""
-    nu = normalize_url(url)
-    p = url_parts(nu)
-    port = F.regexp_extract(p["authority"], r":([0-9]+)$", 1)
-    host = F.regexp_replace(
-        F.regexp_replace(p["authority"], r":[0-9]+$", ""), r"^www\.", ""
-    )
-    rev = F.array_join(F.reverse(F.split(host, r"\.")), ",")
-    # a non-default port survives normalize_url; SURT appends it AFTER
-    # the label reversal (org,example,h:8080) — pywb's form
-    rev = F.when(port == "", rev).otherwise(F.concat(rev, F.lit(":"), port))
-    q = F.array_join(
-        F.array_sort(F.filter(F.split(p["query"], "&"), lambda x: x != "")),
-        "&",
-    )
-    surt = F.concat(
-        rev,
-        F.lit(")"),
-        p["path"],
-        F.when(q == "", F.lit("")).otherwise(F.concat(F.lit("?"), q)),
-    )
-    return F.when(F.lower(p["scheme"]).isin(*S.LINK_SCHEMES), surt)
-
-
 def _staged_surt(pages: DataFrame, url_col: str) -> DataFrame:
-    """http(s) rows of ``pages`` + a ``surt`` column — the rows and
-    values :func:`surt_key` + a surt-not-null filter would yield, but
-    evaluated in STAGES through bound columns with the non-http drop on
-    the cheap raw-scheme test.
+    """http(s) rows of ``pages`` + a ``surt`` column (the SURT rule of the
+    module docstring over ``normalize_url``), evaluated in STAGES through
+    bound columns with the non-http drop on the cheap raw-scheme test.
 
-    The single-Column form composes normalize_url inside url_parts
+    A single-Column form composes normalize_url inside url_parts
     inside the port/host/query extractors, so the URL_PARSE_RE
     regexp_extract chain is textually duplicated ~40x per row (Catalyst
     inlines a once-referenced alias; a nested Column expression never
@@ -218,23 +188,3 @@ def host_capture_stats(
     )
 
 
-def write_cdx_sorted(
-    pages: DataFrame,
-    path: str,
-    n_shards: int = 32,
-    url_col: str = "url",
-    ts_col: str = "ts14",
-    payload_col: str = "html",
-) -> None:
-    """Materialize the index as range-partitioned parquet shards sorted
-    by (surt, ts) — the layout a CDX server range-scans.  ONE range
-    exchange + in-partition sort; each record moves once."""
-    recs = cdx_records(
-        pages, url_col=url_col, ts_col=ts_col, payload_col=payload_col
-    )
-    (
-        recs.repartitionByRange(n_shards, "surt", "ts")
-        .sortWithinPartitions("surt", "ts")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

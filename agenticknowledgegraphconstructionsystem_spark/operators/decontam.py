@@ -92,19 +92,3 @@ def contamination_report(
     )
 
 
-def decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    key: str = "doc_id",
-    text_col: str = "text",
-    n: int = DECONTAM_NGRAM,
-    min_overlap: int = 1,
-    bench_text_col: str = "text",
-) -> DataFrame:
-    """docs minus contaminated rows (left_anti on the report's flagged
-    keys) — the actual pipeline action after the audit report."""
-    flagged = contamination_report(
-        docs, benchmark, key=key, text_col=text_col, n=n,
-        min_overlap=min_overlap, bench_text_col=bench_text_col,
-    ).where(F.col("contaminated"))
-    return docs.join(flagged.select(key), key, "left_anti")

@@ -228,43 +228,6 @@ def _jaccard_verify(
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    key: str = "doc_id",
-    text_col: str = "text",
-    n: int = 5,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity for every pair sharing >=1 shingle.
-
-    This is the *oracle-checkable* exact path; at corpus scale prefer
-    :func:`minhash_near_duplicates` (LSH prunes the pair space).  Pairs
-    sharing no shingle never materialize — the join on shingle is the
-    blocker.
-    """
-    num, den = _threshold_fraction(threshold)
-    sh = _maybe_persist(word_ngram_shingles(docs, key, text_col, n), True)
-    sizes = sh.groupBy(key).agg(F.count("*").alias("sz"))
-    a = sh.select(F.col(key).alias("id_a"), "shingle")
-    b = sh.select(F.col(key).alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
-    return (
-        inter.join(sizes.select(F.col(key).alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
-        .join(sizes.select(F.col(key).alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
-        .where(F.col("inter") * den >= F.lit(num) * union)
-        .select(
-            "id_a", "id_b", "inter", "sz_a", "sz_b",
-            (F.col("inter") / union).alias("jaccard"),
-        )
-    )
-
-
 def minhash_banded_signatures(
     docs: DataFrame,
     key: str = "doc_id",

@@ -360,7 +360,7 @@ def hits_scores(
     Scores are doubles: the per-round sums are float partial-sum-order
     dependent, so HITS is pytest-verified against an independent numpy
     power iteration (rank order and per-score tolerance) rather than
-    hash-gated — the documented streaming precedent.
+    hash-gated.
     Max-normalization (not L2) keeps every round's scalar a plain
     ``max`` aggregate.
 

@@ -51,18 +51,3 @@ def redact_pii(
     )
 
 
-def pii_summary(
-    docs: DataFrame, key: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Corpus-level rollup: per category the total hits and how many
-    documents contain at least one — one map-side-combinable pass."""
-    rep = redact_pii(docs, key=key, text_col=text_col)
-    aggs = []
-    for cat, _pat, _rep in S.PII_PATTERNS:
-        aggs.append(F.sum(f"n_{cat}").cast("long").alias(f"total_{cat}"))
-        aggs.append(
-            F.sum((F.col(f"n_{cat}") > 0).cast("int"))
-            .cast("long")
-            .alias(f"docs_with_{cat}")
-        )
-    return rep.agg(*aggs)

@@ -166,12 +166,3 @@ def repetition_report(
     )
 
 
-def filter_repetitive(
-    docs: DataFrame, key: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """docs minus rows failing any Gopher repetition cap (left_anti on the
-    report's flagged keys) — the pipeline action after the audit."""
-    flagged = repetition_report(docs, key=key, text_col=text_col).where(
-        ~F.col("repetition_ok")
-    )
-    return docs.join(flagged.select(key), key, "left_anti")

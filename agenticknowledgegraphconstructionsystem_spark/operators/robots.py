@@ -38,23 +38,6 @@ from .. import semantics as S
 from .urls import registered_domain, url_parts
 
 
-def robots_from_pages(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
-    """Pull (domain, robots_txt) out of a crawl: pages whose path is
-    exactly /robots.txt; the body is the text column when filled (WET)
-    else the raw payload."""
-    path = url_parts(F.col(url_col))["path"]
-    body = F.coalesce(
-        F.col("text") if "text" in pages.columns else F.lit(None).cast("string"),
-        F.col(html_col).cast("string"),
-    )
-    return pages.where(path == "/robots.txt").select(
-        registered_domain(F.col(url_col)).alias("domain"),
-        body.alias("robots_txt"),
-    )
-
-
 def parse_robots(robots: DataFrame, agent: str = "*") -> DataFrame:
     """(domain, robots_txt) → (domain, rule, path_prefix) for the rules
     governing ``agent``: lines split/posexploded, comment tails

@@ -107,18 +107,6 @@ def cosine_topk(
     )
 
 
-def rhp_signature_col(vec_col, planes: list[list[float]]):
-    """Signature bits packed into a long: bit i = sign(v · plane_i)."""
-    sig = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        bit = F.when(_dot(F.col(vec_col).cast("array<double>"), plane) >= 0, F.lit(1)).otherwise(
-            F.lit(0)
-        )
-        sig = sig + bit.cast("long") * F.lit(1 << i).cast("long")
-    return sig
-
-
 def _band_arr(sig, num_planes: int, bands: int):
     rpb = num_planes // bands
     return F.array(

@@ -370,7 +370,7 @@ def crawl_schedule(
     ``host_pr`` at read time.  There is deliberately NO global
     row_number — a total order would funnel the corpus through one
     partition; the global ordering is a range sort at write/serve time
-    (the write_cdx_sorted discipline).
+    (repartitionByRange + sortWithinPartitions).
 
     Scale shape: one broadcast join against the host table (domains ≪
     urls), one optional domain-keyed join for robots verdicts, ONE

@@ -187,65 +187,6 @@ def mixture_sample(
     )
 
 
-def kmv_sketch(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    k: int = 64,
-) -> DataFrame:
-    """→ (group_col, hs: array<long>) — the materialized KMV sketch: the
-    k smallest distinct affine-scrambled value hashes per group, sorted
-    ascending.  This is the state a 10^12-row deployment persists per
-    partition / per day and later merges (:func:`kmv_merge`) instead of
-    re-scanning history; :func:`kmv_estimate` turns it into the same
-    number ``kmv_distinct`` computes in one shot."""
-    h = affine_col(poly_hash_col(F.col(value_col)), S.MINHASH_A[0], S.MINHASH_B[0])
-    hs = df.select(F.col(group_col), h.alias("h")).distinct()
-    w = Window.partitionBy(group_col).orderBy("h")
-    ranked = hs.select(
-        group_col, "h", F.row_number().over(w).alias("rn")
-    ).where(F.col("rn") <= k)
-    return ranked.groupBy(group_col).agg(
-        F.sort_array(F.collect_list("h")).alias("hs")
-    )
-
-
-def kmv_merge(sketches: DataFrame, group_col: str, k: int = 64) -> DataFrame:
-    """Union-merge KMV sketches: rows of (group_col, hs) — possibly many
-    per group, from different partitions/days/streams — collapse to one
-    merged sketch per group.  EXACT by construction: the k smallest of
-    the union of per-part k-minima equal the k smallest over the union
-    of the underlying value sets (any global top-k hash survives its own
-    part's top-k), so merge-then-estimate == estimate-over-everything
-    (pytest-pinned).  Explode → distinct → re-rank: bounded at
-    parts·k rows per group, never touching the raw values again."""
-    ex = (
-        sketches.select(F.col(group_col), F.explode("hs").alias("h"))
-        .distinct()
-    )
-    w = Window.partitionBy(group_col).orderBy("h")
-    ranked = ex.select(
-        group_col, "h", F.row_number().over(w).alias("rn")
-    ).where(F.col("rn") <= k)
-    return ranked.groupBy(group_col).agg(
-        F.sort_array(F.collect_list("h")).alias("hs")
-    )
-
-
-def kmv_estimate(sketches: DataFrame, group_col: str, k: int = 64) -> DataFrame:
-    """(group_col, hs) sketches → (group_col, kmv_distinct), the same
-    estimator :func:`kmv_distinct` applies in one shot: exact count when
-    the sketch holds fewer than k values, else (k-1)·P / h_k."""
-    m = F.size("hs")
-    hk = F.element_at("hs", k)
-    est = F.when(m < k, m.cast("long")).otherwise(
-        F.floor(F.lit((k - 1) * S.POLY_P) / hk)
-    )
-    return sketches.select(
-        group_col, est.cast("long").alias("kmv_distinct")
-    )
-
-
 def kmv_distinct(
     df: DataFrame,
     group_col: str,

@@ -25,14 +25,11 @@ def sessionize_batch(
     value_col: str = "value",
     order_tiebreak: str = "event_id",
 ) -> DataFrame:
-    """Gap-based sessionization, batch form — the deterministic twin of
-    ``streaming.ops.sessionize`` (same 30-minute default gap): a new
-    session starts at the first event of a key and whenever the gap to the
+    """Gap-based sessionization (30-minute default gap): a new session
+    starts at the first event of a key and whenever the gap to the
     previous event exceeds ``gap_minutes``.
 
-    → (user_id, session_start, session_end, n_events, sum_value) — the
-    streaming operator's output schema, so the stream/batch equivalence
-    property is directly testable.
+    → (user_id, session_start, session_end, n_events, sum_value).
 
     Mechanics: lag() marks session starts, a running sum over the marks
     numbers the sessions (the standard "gaps and islands" shape), one

@@ -57,10 +57,6 @@ def detect_language(text: Column) -> Column:
     return best_lang
 
 
-def add_language(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    return docs.withColumn("detected_lang", detect_language(F.col(text_col)))
-
-
 def quality_columns(text: Column) -> dict[str, Column]:
     """Deterministic integer quality metrics:
     n_chars, n_words, n_alpha, n_punct, stop_hits, mean_word_len_x100,
@@ -104,11 +100,6 @@ def quality_columns(text: Column) -> dict[str, Column]:
         "mean_word_len_x100": mean_word_len_x100,
         "quality_pct": alpha_component + wl_component + len_component,
     }
-
-
-def add_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    cols = quality_columns(F.col(text_col))
-    return docs.select("*", *[c.alias(n) for n, c in cols.items()])
 
 
 def token_counts(text: Column) -> dict[str, Column]:

@@ -298,55 +298,6 @@ def read_warc_pages(
     return files.mapInPandas(fn, PAGES_SCHEMA)
 
 
-#: Catalog schema for :func:`read_warc_responses` — the gating pass a
-#: real crawl runs before extraction: group by status/mime/charset,
-#: size the keep-set, THEN decode only what survives.
-WARC_RESPONSES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), False),
-        T.StructField("status", T.IntegerType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("charset", T.StringType(), True),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-    ]
-)
-
-
-def read_warc_responses(spark: SparkSession, path: str) -> DataFrame:
-    """WARC file(s) → one catalog row per ``response`` record: HTTP
-    status, media type (lowercased, parameters stripped), detected
-    charset (ladder steps 1-3; NULL = would fall to trial decode),
-    transport-normalized payload size and bytes.  Same binaryFile →
-    mapInPandas scale shape as :func:`read_warc_pages`."""
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .http_meta import detect_charset, http_payload_bytes
-
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                for url, date, body in parse_warc_raw(bytes(content)):
-                    status, ctype, raw = http_payload_bytes(body)
-                    mime = (
-                        ctype.split(";", 1)[0].strip().lower() if ctype else None
-                    )
-                    cs, _src = detect_charset(ctype, raw)
-                    rows.append(
-                        (url, _parse_warc_date(date), status, mime, cs,
-                         len(raw), raw)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "warc_ts", "status", "mime", "charset",
-                         "n_bytes", "payload"],
-            )
-
-    return files.mapInPandas(fn, WARC_RESPONSES_SCHEMA)
-
-
 def read_wet_pages(spark: SparkSession, path: str) -> DataFrame:
     """WET file(s) → the canonical pages DataFrame with the ``text``
     column FILLED (the pre-extracted fast path: extract_docs' P1 content
@@ -399,8 +350,8 @@ def write_warc_shards(
     index consumer can seek to ``offset``, read ``length`` bytes, and
     gunzip exactly one record — and return the location-bearing index
     (url, ts14, sha256 digest of the payload, filename, offset, length;
-    add the SURT key via ``operators.cdx.surt_key`` and sort via
-    ``cdx.write_cdx_sorted``'s discipline to serve it).
+    ``operators.cdx.cdx_records`` over the same pages adds the SURT key
+    to serve it).
 
     Determinism: shard membership is hash(url) (repartition), records
     sort by (url, ts) within each shard — two runs over the same input

@@ -1,7 +1,7 @@
 """CDX capture-index tier (operators/cdx.py): SURT rule edge cases,
 DuckDB twins over captures synthesized identically in both engines
-(the gate_cdx members), the sorted-shard writer, and the plan shape
-(records = pure projection, zero exchanges)."""
+(the gate_cdx members), and the plan shape (records = pure projection,
+zero exchanges)."""
 
 from __future__ import annotations
 
@@ -17,8 +17,6 @@ from agenticknowledgegraphconstructionsystem_spark.operators.cdx import (
     cdx_latest,
     cdx_records,
     host_capture_stats,
-    surt_key,
-    write_cdx_sorted,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -36,7 +34,7 @@ def _member_sql(name):
     return next(sql for g, _fn, sql, _cols in CDX_SUITE_MEMBERS if g == name)
 
 
-def test_surt_key_rules(spark):
+def test_surt_rules(spark):
     cases = {
         # www strips, host reverses, default port + tracking params gone,
         # query params sort
@@ -49,17 +47,15 @@ def test_surt_key_rules(spark):
         "http://h.example.net:8080/x": "net,example,h:8080)/x",
         # single-label host reverses to itself
         "https://localhost/x": "localhost)/x",
-        # non-http(s) and scheme-less → NULL
+        # non-http(s) and scheme-less captures drop from the index
         "ftp://x.org/f": None,
         "no-scheme": None,
     }
-    df = spark.createDataFrame([Row(u=u) for u in cases])
-    got = {
-        r["u"]: r["s"]
-        for r in df.select("u", surt_key(F.col("u")).alias("s")).collect()
-    }
-    for u, want in cases.items():
-        assert got[u] == want, u
+    pages = spark.createDataFrame(
+        [Row(url=u, ts14="20250301000000", html=b"<p>x</p>") for u in cases]
+    )
+    got = {r["url"]: r["surt"] for r in cdx_records(pages).collect()}
+    assert got == {u: want for u, want in cases.items() if want is not None}
 
 
 def test_cdx_records_match_duckdb_twin(spark):
@@ -95,26 +91,6 @@ def test_host_captures_match_duckdb_twin(spark):
     )
     assert got == _duck(_member_sql("host_captures"))
     assert len(got) == 3 and all(n >= u for _d, n, u, _f, _l in got)
-
-
-def test_write_cdx_sorted_roundtrip(spark, tmp_path):
-    """Shards come back complete and each shard is internally sorted by
-    (surt, ts) — the layout a CDX server range-scans."""
-    import glob
-
-    pages = cdx_pages(spark, SF_DIR)
-    out = str(tmp_path / "cdx")
-    write_cdx_sorted(pages, out, n_shards=4)
-    back = spark.read.parquet(out)
-    assert sorted(tuple(r) for r in back.collect()) == sorted(
-        tuple(r) for r in cdx_records(pages).collect()
-    )
-    for f in glob.glob(f"{out}/part-*.parquet"):
-        rows = [
-            (r["surt"], r["ts"])
-            for r in spark.read.parquet(f).select("surt", "ts").collect()
-        ]
-        assert rows == sorted(rows)
 
 
 def test_cdx_records_plan_zero_exchanges(spark):

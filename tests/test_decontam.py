@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from agenticknowledgegraphconstructionsystem_spark.gate_textdata import _sql_poly
 from agenticknowledgegraphconstructionsystem_spark.operators.decontam import (
     contamination_report,
-    decontaminate,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -54,7 +53,15 @@ def test_planted_contamination_flags_verbatim_only(spark):
     # paraphrase / short-phrase / clean: no 13-gram survives
     for d in (2, 3, 4):
         assert not rep[d]["contaminated"] and rep[d]["n_contaminated"] == 0
-    kept = sorted(r["doc_id"] for r in decontaminate(docs, bench).collect())
+    # the curation action: anti-join on the report's flagged keys
+    flagged = (
+        contamination_report(docs, bench)
+        .where(F.col("contaminated"))
+        .select("doc_id")
+    )
+    kept = sorted(
+        r["doc_id"] for r in docs.join(flagged, "doc_id", "left_anti").collect()
+    )
     assert kept == [2, 3, 4]
 
 

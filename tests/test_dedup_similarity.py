@@ -12,7 +12,6 @@ from pyspark.sql import Row
 from agenticknowledgegraphconstructionsystem_spark.operators.dedup import (
     exact_duplicates,
     minhash_near_duplicates,
-    ngram_jaccard_pairs,
     simhash_near_duplicates,
     simhash_signatures,
 )
@@ -52,17 +51,6 @@ def test_exact_duplicates(spark):
     assert got[0] == 2  # docs 0 and 3 share content, keeper = min id
     assert got[1] == 1 and got[2] == 1 and got[4] == 1
     assert 3 not in got
-
-
-def test_ngram_jaccard_matches_brute_force(spark):
-    got = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(_docs_df(spark), threshold=0.5).collect()
-    }
-    exp = _brute_jaccard()
-    assert set(got) == set(exp)
-    for k in exp:
-        assert abs(got[k] - exp[k]) < 1e-9
 
 
 def test_minhash_finds_near_dups(spark):

@@ -21,7 +21,6 @@ from agenticknowledgegraphconstructionsystem_spark.sources.http_meta import (
 )
 from agenticknowledgegraphconstructionsystem_spark.sources.warc import (
     read_warc_pages,
-    read_warc_responses,
     write_warc_http,
 )
 
@@ -199,22 +198,6 @@ def test_read_warc_pages_http_aware(spark, tmp_path):
     # the legacy non-aware reader keeps all six raw payloads
     raw = read_warc_pages(spark, str(tmp_path)).collect()
     assert len(raw) == 6
-
-
-def test_read_warc_responses_catalog(spark, tmp_path):
-    (tmp_path / "mixed.warc.gz").write_bytes(gzip.compress(_mixed_warc()))
-    got = {r["url"]: r for r in read_warc_responses(spark, str(tmp_path)).collect()}
-    assert len(got) == 6
-    assert got["https://a.example/404"]["status"] == 404
-    assert got["https://a.example/png"]["mime"] == "image/png"
-    assert got["https://a.example/1252"]["charset"] == "cp1252"
-    assert got["https://a.example/meta-koi8"]["charset"] == "koi8-r"
-    assert got["https://a.example/utf8"]["charset"] is None  # trial-decode tier
-    cg = got["https://a.example/chunked-gzip"]
-    # transport-normalized: payload is the plain html, size to match
-    assert bytes(cg["payload"]) == b"<section>coded transport</section>"
-    assert cg["n_bytes"] == len(b"<section>coded transport</section>")
-    assert cg["status"] == 200 and cg["mime"] == "text/html"
 
 
 def test_http_aware_identity_on_clean_pages(spark, tmp_path):

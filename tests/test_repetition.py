@@ -6,10 +6,10 @@ surface)."""
 from __future__ import annotations
 
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from agenticknowledgegraphconstructionsystem_spark import semantics as S
 from agenticknowledgegraphconstructionsystem_spark.operators.repetition import (
-    filter_repetitive,
     repetition_report,
 )
 
@@ -65,7 +65,14 @@ def test_planted_repetition_semantics(spark):
     e = rep[4]  # NULL text → all-zero metrics, kept
     assert e["n_lines"] == 0 and e["top2_char_pct"] == 0 and e["repetition_ok"]
 
-    kept = sorted(r["doc_id"] for r in filter_repetitive(_corpus(spark)).collect())
+    # the curation action: anti-join on the report's flagged keys
+    docs = _corpus(spark)
+    flagged = (
+        repetition_report(docs).where(~F.col("repetition_ok")).select("doc_id")
+    )
+    kept = sorted(
+        r["doc_id"] for r in docs.join(flagged, "doc_id", "left_anti").collect()
+    )
     assert kept == [2, 4]
 
 

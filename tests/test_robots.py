@@ -1,6 +1,5 @@
 """robots.txt tier (operators/robots.py): RFC 9309 group selection,
-line grammar, longest-match precedence — plus robots_from_pages
-plumbing and the plan-shape contract."""
+line grammar, longest-match precedence, and the plan-shape contract."""
 
 from __future__ import annotations
 
@@ -8,7 +7,6 @@ from pyspark.sql import functions as F
 
 from agenticknowledgegraphconstructionsystem_spark.operators.robots import (
     parse_robots,
-    robots_from_pages,
     robots_verdicts,
 )
 
@@ -98,34 +96,6 @@ def test_equal_length_tie_allow_wins(spark):
     pages = spark.createDataFrame([("https://t.example/x/1",)], "url string")
     [r] = robots_verdicts(pages, robots).collect()
     assert (r["disallowed"], r["rule"]) == (False, "allow")
-
-
-def test_robots_from_pages_plumbing(spark):
-    """robots.txt captures pull out of the crawl by exact path; WET-style
-    text wins over the raw payload; registered-domain keying."""
-    pages = spark.createDataFrame(
-        [
-            (
-                "https://www.a.example/robots.txt",
-                bytearray(b"User-agent: *\nDisallow: /raw"),
-                None,
-            ),
-            (
-                "https://b.example/robots.txt",
-                bytearray(b"ignored"),
-                "User-agent: *\nDisallow: /wet",
-            ),
-            ("https://a.example/page", bytearray(b"<p>x</p>"), None),
-        ],
-        "url string, html binary, text string",
-    )
-    got = {
-        r["domain"]: r["robots_txt"] for r in robots_from_pages(pages).collect()
-    }
-    assert got == {
-        "a.example": "User-agent: *\nDisallow: /raw",
-        "b.example": "User-agent: *\nDisallow: /wet",
-    }
 
 
 def test_parse_plan_sorts_domains_not_corpus(spark):

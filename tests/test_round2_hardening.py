@@ -1,18 +1,13 @@
 """Round-2 hardening: LSH hot-bucket caps under skew, repointed-mention
-dedup, canonicalization precision/recall fixture, embedding near-dup
-parity, and sessionize property-tested against a single-process pandas
-oracle with duplicate + out-of-order events across micro-batch
-boundaries."""
+dedup, canonicalization precision/recall fixture, and embedding near-dup
+parity."""
 
 from __future__ import annotations
 
 import pytest
 
-import datetime as dt
 import math
-import os
 import random
-from collections import defaultdict
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -422,226 +417,3 @@ def test_ivf_supplied_centroids(spark):
     r_supplied = recall(supplied)
     assert r_supplied >= recall(None)
     assert r_supplied >= 0.95
-
-
-# ---------------------------------------------------------------------------
-# sessionize property test vs a single-process pandas-free oracle
-# ---------------------------------------------------------------------------
-
-_GAP_US = 30 * 60 * 1_000_000
-_WM_US = 2 * 3600 * 1_000_000
-
-
-def _oracle_sessions(rows, final_max_ts):
-    """Single-process replay of the sessionize semantics: per user, walk
-    events in timestamp order, close a session when the gap exceeds 30 min;
-    the final open session is emitted only if the terminal watermark
-    (max ts - 2h) passed its event-time deadline (last + gap)."""
-    final_wm_us = int(final_max_ts.timestamp() * 1_000_000) - _WM_US
-    by_user = defaultdict(list)
-    for r in rows:
-        by_user[r.user_id].append(r)
-    out = set()
-    for u, evs in by_user.items():
-        evs = sorted(evs, key=lambda r: r.ts)
-        start = last = None
-        n, sv = 0, 0.0
-        sessions = []
-        for r in evs:
-            us = int(r.ts.timestamp() * 1_000_000)
-            if last is not None and us - last > _GAP_US:
-                sessions.append((start, last, n, sv, True))
-                start, n, sv = us, 0, 0.0
-            if start is None:
-                start = us
-            last = us
-            n += 1
-            sv += float(r.value)
-        # event-time timeout: watermark must pass deadline strictly
-        if last is not None:
-            closed_by_timeout = final_wm_us > (last // 1000 + _GAP_US // 1000) * 1000
-            sessions.append((start, last, n, sv, closed_by_timeout))
-        for s, e, n_, sv_, emitted in sessions:
-            if emitted:
-                out.add((u, s, e, n_, sv_))
-    return out
-
-
-def _collect_sessions(df):
-    return {
-        (
-            r["user_id"],
-            int(r["session_start"].timestamp() * 1_000_000),
-            int(r["session_end"].timestamp() * 1_000_000),
-            r["n_events"],
-            r["sum_value"],
-        )
-        for r in df.collect()
-    }
-
-
-def _session_rows(seed=11, n_users=3, n_events=30):
-    """Deterministic scrambled event set: per-user increasing timestamps
-    with occasional > gap jumps, integer-valued floats (exact sums), plus
-    exact duplicate rows; returned in shuffled (out-of-order) sequence."""
-    from agenticknowledgegraphconstructionsystem_spark.streaming.ops import EVENTS_SCHEMA  # noqa: F401
-
-    rng = random.Random(seed)
-    base = dt.datetime(2025, 3, 1, 0, 0, 0)
-    rows = []
-    eid = 0
-    for u in range(n_users):
-        t = base + dt.timedelta(minutes=rng.randrange(0, 10))
-        for _ in range(n_events):
-            step = rng.choice([1, 3, 7, 20, 45, 90])  # minutes; 45/90 close sessions
-            t = t + dt.timedelta(minutes=step)
-            rows.append(
-                Row(
-                    event_id=eid,
-                    ts=t,
-                    user_id=u,
-                    event_type="a",
-                    value=float(rng.randrange(1, 50)),
-                    props="{}",
-                )
-            )
-            eid += 1
-    dups = [rows[i] for i in rng.sample(range(len(rows)), 5)]
-    # duplicates share ts+value with their originals: order-insensitive
-    all_rows = rows + dups
-    rng.shuffle(all_rows)
-    return all_rows
-
-
-def test_streaming_dedup_drops_duplicates(spark, tmp_path):
-    from agenticknowledgegraphconstructionsystem_spark.streaming.ops import (
-        EVENTS_SCHEMA,
-        run_available_now,
-        streaming_dedup,
-    )
-
-    base = dt.datetime(2025, 2, 1)
-    rows = []
-    for i in range(20):
-        r = Row(
-            event_id=i % 8,  # ids repeat -> duplicates
-            ts=base + dt.timedelta(minutes=i),
-            user_id=i % 3,
-            event_type="a",
-            value=float(i),
-            props="{}",
-        )
-        rows.append(r)
-    path = str(tmp_path / "dedup_ev")
-    spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode("overwrite").parquet(path)
-    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(path)
-    out = run_available_now(streaming_dedup(stream), "dedup_stream").collect()
-    ids = [r["event_id"] for r in out]
-    assert sorted(ids) == sorted(set(range(8)))
-    # first occurrence wins (min ts per key)
-    by_id = {r["event_id"]: r for r in out}
-    for i in range(8):
-        assert by_id[i]["value"] == float(i)
-
-
-@pytest.mark.slow  # round-6 fast-gate rebalance: family keeps a fast representative
-def test_streaming_fp_collisions(spark, tmp_path):
-    """Stateful streaming near-dup: fingerprint state persists across
-    micro-batches — a later near-copy collides against the batch-1
-    original; unrelated docs emit nothing."""
-    import glob
-    import shutil
-
-    from agenticknowledgegraphconstructionsystem_spark.streaming.ops import (
-        run_available_now,
-        streaming_fp_collisions,
-    )
-
-    schema = "url string, text string"
-    b0 = [
-        Row(url="a1", text="the quick brown fox jumps over the lazy dog tonight"),
-        Row(url="a2", text="the quick brown fox jumps over the lazy dog tonight"),  # in-batch dup
-        Row(url="b1", text="completely unrelated material discussing shuffle internals"),
-    ]
-    b1 = [
-        Row(url="c1", text="PREFIX the quick brown fox jumps over the lazy dog tonight"),  # cross-batch near-copy
-        Row(url="d1", text="yet another disjoint body covering watermark semantics"),
-    ]
-    d = tmp_path / "fp_stream"
-    os.makedirs(d, exist_ok=True)
-    now = dt.datetime.now().timestamp()
-    for i, batch in enumerate([b0, b1]):
-        tmp = str(tmp_path / f"fp_stage{i}")
-        spark.createDataFrame(batch, schema).coalesce(1).write.mode("overwrite").parquet(tmp)
-        (part,) = glob.glob(f"{tmp}/part-*.parquet")
-        dst = str(d / f"batch{i}.parquet")
-        shutil.copy(part, dst)
-        os.utime(dst, (now + 10 * i, now + 10 * i))
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(d))
-    )
-    rows = run_available_now(streaming_fp_collisions(stream), "fp_coll").collect()
-    pairs = {(r["url"], r["first_url"]) for r in rows}
-    assert ("a2", "a1") in pairs  # in-batch duplicate vs first-by-url
-    assert ("c1", "a1") in pairs  # cross-batch near-copy hits persisted state
-    assert all(u not in ("b1", "d1") for u, _ in pairs)  # disjoint docs silent
-    # collision volume for the near-copy ~= the shared fingerprint count
-    n_c1 = sum(1 for u, _ in ((r["url"], r["first_url"]) for r in rows) if u == "c1")
-    assert n_c1 >= 5
-
-
-def test_sessionize_matches_oracle_single_batch(spark, tmp_path):
-    from agenticknowledgegraphconstructionsystem_spark.streaming.ops import (
-        EVENTS_SCHEMA,
-        run_available_now,
-        sessionize,
-    )
-
-    rows = _session_rows()
-    path = str(tmp_path / "sess_prop")
-    spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode("overwrite").parquet(path)
-    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(path)
-    got = _collect_sessions(run_available_now(sessionize(stream), "sess_prop1"))
-    exp = _oracle_sessions(rows, max(r.ts for r in rows))
-    assert got == exp and len(got) > 0
-
-
-def test_sessionize_matches_oracle_across_micro_batches(spark, tmp_path):
-    """Events split time-ordered across two micro-batches
-    (maxFilesPerTrigger=1, mtime-ordered files): closed sessions from batch
-    1, state carried into batch 2, terminal timeouts — all must equal the
-    single-process oracle."""
-    from agenticknowledgegraphconstructionsystem_spark.streaming.ops import (
-        run_available_now,
-        sessionize,
-    )
-    from agenticknowledgegraphconstructionsystem_spark.streaming.ops import EVENTS_SCHEMA
-
-    import glob
-    import shutil
-
-    rows = _session_rows(seed=23)
-    cut = sorted(r.ts for r in rows)[len(rows) // 2]
-    early = [r for r in rows if r.ts <= cut]
-    late = [r for r in rows if r.ts > cut]
-    d = tmp_path / "sess_mb"
-    os.makedirs(d, exist_ok=True)
-    now = dt.datetime.now().timestamp()
-    for i, batch in enumerate([early, late]):
-        tmp = str(tmp_path / f"sess_stage{i}")
-        spark.createDataFrame(batch, EVENTS_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        (part,) = glob.glob(f"{tmp}/part-*.parquet")
-        dst = str(d / f"batch{i}.parquet")
-        shutil.copy(part, dst)
-        # order the file-source queue deterministically via modification time
-        os.utime(dst, (now + 10 * i, now + 10 * i))
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    got = _collect_sessions(run_available_now(sessionize(stream), "sess_prop2"))
-    exp = _oracle_sessions(rows, max(r.ts for r in rows))
-    assert got == exp and len(got) > 0

@@ -17,7 +17,6 @@ import logging
 
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from agenticknowledgegraphconstructionsystem_spark import semantics as S
 from agenticknowledgegraphconstructionsystem_spark.operators import dedup
@@ -173,149 +172,6 @@ def test_unpersist_tracked_releases(spark):
     assert dedup._PERSISTED == []
 
 
-# -- stream/batch near-dup equivalence (round-2 verdict item 7) ---------------
-
-
-def test_streaming_fp_collisions_subset_of_batch_winnow(spark, tmp_path):
-    """The streaming fp-collision detector and the batch winnow near-dup
-    path must not drift apart: on the same static corpus, every streaming
-    collision pair (grouped, unordered) is a candidate pair of
-    winnow_near_duplicates at threshold 0 (>= 1 shared fingerprint,
-    max_df disabled — streaming keeps no df statistics), and the
-    per-pair collision count never exceeds the batch intersection size."""
-    import datetime as dt
-    import glob
-    import os
-    import shutil
-
-    from agenticknowledgegraphconstructionsystem_spark.streaming.ops import (
-        run_available_now,
-        streaming_fp_collisions,
-    )
-
-    base = (
-        "the adaptive query execution layer rewrites shuffle plans at "
-        "runtime using observed partition statistics and skew hints"
-    )
-    alt = (
-        "watermark propagation across stateful operators bounds the "
-        "event time lag that late arriving records may exhibit downstream"
-    )
-    rows = [
-        Row(url="d01", text=base),
-        Row(url="d02", text="SITE BANNER. " + base),          # near-copy of d01
-        Row(url="d03", text=base + " trailing footer text."),  # near-copy of d01
-        Row(url="d04", text=alt),
-        Row(url="d05", text="prefix shift " + alt),           # near-copy of d04
-        Row(url="d06", text="entirely disjoint content about columnar codecs"),
-    ]
-    schema = "url string, text string"
-    # three mtime-ordered micro-batches
-    d = tmp_path / "eq_stream"
-    os.makedirs(d, exist_ok=True)
-    now = dt.datetime.now().timestamp()
-    for i, batch in enumerate([rows[:2], rows[2:4], rows[4:]]):
-        stage = str(tmp_path / f"eq_stage{i}")
-        spark.createDataFrame(batch, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        (part,) = glob.glob(f"{stage}/part-*.parquet")
-        dst = str(d / f"b{i}.parquet")
-        shutil.copy(part, dst)
-        os.utime(dst, (now + 10 * i, now + 10 * i))
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(d))
-    )
-    coll = run_available_now(streaming_fp_collisions(stream), "eq_fp_coll")
-    stream_pairs = {
-        (min(r["url"], r["first_url"]), max(r["url"], r["first_url"])): r["n"]
-        for r in coll.groupBy("url", "first_url").agg(F.count("*").alias("n")).collect()
-    }
-    assert stream_pairs, "fixture must produce streaming collisions"
-
-    batch_pairs = {
-        (r["id_a"], r["id_b"]): r["inter"]
-        for r in dedup.winnow_near_duplicates(
-            spark.createDataFrame(rows, schema),
-            key="url", text_col="text", threshold=0.0, max_df=None,
-        ).collect()
-    }
-    missing = set(stream_pairs) - set(batch_pairs)
-    assert not missing, f"streaming pairs unknown to batch path: {missing}"
-    for pair, n in stream_pairs.items():
-        assert n <= batch_pairs[pair], (pair, n, batch_pairs[pair])
-    # the planted near-copies are seen by BOTH paths
-    assert ("d01", "d02") in stream_pairs and ("d04", "d05") in stream_pairs
-
-
-def test_sessionize_batch_is_streaming_superset(spark, tmp_path):
-    """The batch gaps-and-islands sessionizer (operators/temporal.py, gated
-    vs DuckDB as rel_sessionize) and the stateful streaming sessionizer
-    must agree: streaming-emitted (closed) sessions are EXACTLY the batch
-    sessions whose gap timeout precedes the final watermark
-    (session_end + gap < max_ts - watermark_delay); sessions still open
-    when the finite input ends are the only difference."""
-    import datetime as dt
-
-    from agenticknowledgegraphconstructionsystem_spark.operators.temporal import (
-        sessionize_batch,
-    )
-    from agenticknowledgegraphconstructionsystem_spark.streaming.ops import (
-        EVENTS_SCHEMA,
-        run_available_now,
-        sessionize,
-    )
-
-    t0 = dt.datetime(2025, 3, 1, 12, 0, 0)
-
-    def ev(i, user, minutes, value):
-        return Row(
-            event_id=i, ts=t0 + dt.timedelta(minutes=minutes), user_id=user,
-            event_type="click", value=float(value), props="{}",
-        )
-
-    rows = [
-        # user 1: two sessions (gap 45 min > 30), then a trailing session
-        ev(0, 1, 0, 1), ev(1, 1, 10, 2), ev(2, 1, 55, 4), ev(3, 1, 60, 8),
-        ev(4, 1, 300, 16),
-        # user 2: one long session of closely spaced events, then another
-        ev(5, 2, 0, 1), ev(6, 2, 20, 2), ev(7, 2, 40, 4), ev(8, 2, 200, 8),
-        # user 3: single event
-        ev(9, 3, 0, 32),
-    ]
-    path = str(tmp_path / "sess_eq")
-    spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path)
-
-    def norm(df):
-        return {
-            (r["user_id"], r["session_start"], r["session_end"], r["n_events"],
-             r["sum_value"])
-            for r in df.collect()
-        }
-
-    batch = norm(
-        sessionize_batch(spark.createDataFrame(rows, EVENTS_SCHEMA))
-        .select("user_id", "session_start", "session_end", "n_events", "sum_value")
-    )
-    stream = norm(
-        run_available_now(
-            sessionize(spark.readStream.schema(EVENTS_SCHEMA).parquet(path)),
-            "sess_eq_stream",
-        )
-    )
-    assert stream <= batch, stream - batch
-    # the final watermark is max event time minus the 2 h watermark delay;
-    # exactly the batch sessions whose 30-min gap timeout precedes it close
-    watermark = max(r.ts for r in rows) - dt.timedelta(hours=2)
-    expected_closed = {
-        s for s in batch if s[2] + dt.timedelta(minutes=30) < watermark
-    }
-    assert stream == expected_closed
-    assert len(batch) == 6 and len(stream) == 4
-
-
 def test_as_of_join_semantics(spark):
     """Backward as-of: latest right row with ts <= left ts per key; equal
     timestamps match (<=); keys with no prior right row get NULL."""
@@ -344,47 +200,3 @@ def test_as_of_join_semantics(spark):
         (1, "c", None), # before any right row
         (2, "d", None), # key absent from right
     }
-
-
-def test_windowed_counts_match_batch_hourly(spark, tmp_path):
-    """The watermarked streaming tumbling-window aggregation drained in
-    complete mode must equal the batch date_trunc-hour aggregation on the
-    same static events (integer cents — exact)."""
-    import datetime as dt
-
-    from agenticknowledgegraphconstructionsystem_spark.streaming.ops import (
-        EVENTS_SCHEMA,
-        run_available_now,
-        windowed_event_counts,
-    )
-
-    t0 = dt.datetime(2025, 6, 1, 8, 0, 0)
-    rows = [
-        Row(event_id=i, ts=t0 + dt.timedelta(minutes=7 * i), user_id=i % 3,
-            event_type=("click", "view")[i % 2], value=float(i) + 0.25, props="{}")
-        for i in range(40)
-    ]
-    path = str(tmp_path / "hourly_eq")
-    spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path)
-    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(path)
-    got = {
-        (r["window_start"], r["event_type"], r["n"], r["sum_cents"])
-        for r in run_available_now(
-            windowed_event_counts(stream), "hourly_eq", output_mode="complete"
-        ).collect()
-    }
-    batch = spark.createDataFrame(rows, EVENTS_SCHEMA)
-    exp = {
-        (r["h"], r["event_type"], r["n"], r["sum_cents"])
-        for r in batch.groupBy(
-            F.date_trunc("hour", "ts").alias("h"), "event_type"
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.floor(F.col("value") * 100).cast("long")).alias("sum_cents"),
-        )
-        .collect()
-    }
-    assert got == exp and len(got) >= 8

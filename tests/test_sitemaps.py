@@ -290,39 +290,6 @@ def test_crawl_schedule_matches_duckdb_twin(spark):
                        for v in per.values())
 
 
-def test_streaming_frontier_matches_batch(spark, tmp_path):
-    """Stream-maintained frontier (incremental materialization): drain
-    the mixed corpus as a multi-file stream through the stateless
-    extraction pipeline → per-url state; the max-version rows must
-    equal discovered_urls on the same corpus run as one batch —
-    including the crawled flags and per-source counts."""
-    from agenticknowledgegraphconstructionsystem_spark.streaming.ops import (
-        latest_frontier,
-        run_available_now,
-        streaming_frontier,
-    )
-
-    pages = mixed_pages(spark, SF_DIR)
-    path = str(tmp_path / "pages_stream")
-    # 6 files + maxFilesPerTrigger=4 → >1 micro-batch, so cross-batch
-    # state accumulation is actually exercised
-    pages.repartition(6).write.mode("overwrite").parquet(path)
-    stream = (
-        spark.readStream.schema("url string, html string")
-        .option("maxFilesPerTrigger", 4)
-        .parquet(path)
-    )
-    emitted = run_available_now(
-        streaming_frontier(stream), "frontier_stream", output_mode="update"
-    )
-    got = {r["url"]: tuple(r)[1:] for r in latest_frontier(emitted).collect()}
-    want = {r["url"]: tuple(r)[1:] for r in discovered_urls(pages).collect()}
-    assert got == want and len(got) > 50
-    # non-vacuous: both crawled and frontier rows present
-    assert any(t[3] == 1 for t in got.values())
-    assert any(t[3] == 0 for t in got.values())
-
-
 def test_recrawl_schedule_rules(spark):
     """Cadence table, W3C-datetime prefix parse, invalid-date and
     unknown-cadence NULLs, due boundary (next_fetch == as_of is due)."""

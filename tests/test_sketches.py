@@ -69,50 +69,3 @@ def test_stratified_sample_topk_properties(spark):
     # string keys work too (shared _key_hash dispatch)
     sdf = spark.createDataFrame([Row(g="a", k=f"url{i}") for i in range(40)])
     assert stratified_sample_topk(sdf, "g", "k", k=5).count() == 5
-
-
-def test_kmv_merge_equals_single_shot(spark):
-    """The mergeability claim, substantiated: sketch each half of the
-    corpus separately (split by doc hash), union-merge, estimate — the
-    result is IDENTICAL to kmv_distinct over the whole corpus, in both
-    the exact (<k) and estimator branches."""
-    from pyspark.sql import functions as F
-
-    from agenticknowledgegraphconstructionsystem_spark.operators.sketches import (
-        kmv_distinct,
-        kmv_estimate,
-        kmv_merge,
-        kmv_sketch,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    toks = docs.where(F.col("text").isNotNull()).select(
-        "lang",
-        "doc_id",
-        F.explode(
-            F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != "")
-        ).alias("tok"),
-    )
-    # estimator branch: thousands of distinct (doc:token) pairs per lang
-    vals = toks.select(
-        "lang",
-        F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("tok")).alias("v"),
-    )
-    halves = [vals.where(F.col("doc_id") % 2 == i) for i in (0, 1)]
-    parts = kmv_sketch(halves[0], "lang", "v").unionByName(
-        kmv_sketch(halves[1], "lang", "v")
-    )
-    merged = kmv_estimate(kmv_merge(parts, "lang"), "lang")
-    single = kmv_distinct(vals, "lang", "v")
-    got = sorted(tuple(r) for r in merged.collect())
-    want = sorted(tuple(r) for r in single.collect())
-    assert got == want
-    # exact branch: < k distinct raw tokens per lang
-    parts_sm = kmv_sketch(
-        toks.where(F.col("doc_id") % 2 == 0), "lang", "tok"
-    ).unionByName(kmv_sketch(toks.where(F.col("doc_id") % 2 == 1), "lang", "tok"))
-    merged_sm = kmv_estimate(kmv_merge(parts_sm, "lang"), "lang")
-    single_sm = kmv_distinct(toks, "lang", "tok")
-    assert sorted(map(tuple, merged_sm.collect())) == sorted(
-        map(tuple, single_sm.collect())
-    )

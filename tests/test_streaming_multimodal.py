@@ -1,11 +1,9 @@
-"""Streaming (watermark/window, stateful sessionize, streaming detector)
-and multimodal plumbing tests."""
+"""Multimodal plumbing tests, and the checkpointed streaming drain behind
+the kg_stream_mentions gate."""
 
 from __future__ import annotations
 
 import pytest
-
-import datetime as dt
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -15,108 +13,6 @@ from agenticknowledgegraphconstructionsystem_spark.operators.multimodal import (
     frame_sample,
     media_from_documents,
 )
-from agenticknowledgegraphconstructionsystem_spark.streaming.ops import (
-    EVENTS_SCHEMA,
-    run_available_now,
-    sessionize,
-    streaming_events_source,
-    streaming_mentions,
-    windowed_event_counts,
-)
-
-
-def _write_events(spark, path):
-    base = dt.datetime(2025, 1, 1, 0, 0, 0)
-    rows = []
-    for i in range(40):
-        rows.append(
-            Row(
-                event_id=i,
-                ts=base + dt.timedelta(minutes=7 * i),
-                user_id=i % 3,
-                event_type="click" if i % 2 else "view",
-                value=float(i),
-                props='{"k": 1}',
-            )
-        )
-    spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(2).write.mode(
-        "overwrite"
-    ).parquet(path)
-    return rows
-
-
-def test_windowed_counts_match_batch(spark, tmp_path):
-    path = str(tmp_path / "ev")
-    _write_events(spark, path)
-    stream = streaming_events_source(spark, path)
-    agg = windowed_event_counts(stream, window="1 hour")
-    got = {
-        (str(r["window_start"]), r["event_type"]): (r["n"], r["sum_cents"])
-        for r in run_available_now(agg, "win_counts", "complete").collect()
-    }
-    batch = (
-        spark.read.parquet(path)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.floor(F.col("value") * 100).cast("long")).alias("s"),
-        )
-    )
-    exp = {
-        (str(r["w"]["start"]), r["event_type"]): (r["n"], r["s"])
-        for r in batch.collect()
-    }
-    assert got == exp and len(got) > 0
-
-
-def test_streaming_mentions_match_batch(spark, tmp_path):
-    from agenticknowledgegraphconstructionsystem_spark.operators.mentions import (
-        detect_mentions_native,
-    )
-    from agenticknowledgegraphconstructionsystem_spark.sources.pages import (
-        PAGES_SCHEMA,
-        synthetic_pages_rows,
-    )
-
-    rows = synthetic_pages_rows(30)
-    for r in rows:  # pre-extracted text path for the stream
-        r["text"] = r["html"].decode("utf-8", "replace")
-    path = str(tmp_path / "pages")
-    spark.createDataFrame(rows, PAGES_SCHEMA).write.mode("overwrite").parquet(path)
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(path)
-    got = {
-        (r["url"], r["name"], r["relevance_pct"])
-        for r in run_available_now(streaming_mentions(stream), "stream_m").collect()
-    }
-    batch_docs = spark.read.parquet(path).select(
-        "url", F.col("text").alias("extracted_text")
-    )
-    exp = {
-        (r["url"], r["name"], r["relevance_pct"])
-        for r in detect_mentions_native(batch_docs).collect()
-    }
-    assert got == exp and len(got) > 0
-
-
-def test_sessionize_closes_on_gap(spark, tmp_path):
-    base = dt.datetime(2025, 1, 1)
-    rows = [
-        # user 0: two bursts separated by a 2h gap -> first session closes
-        Row(event_id=1, ts=base, user_id=0, event_type="a", value=1.0, props="{}"),
-        Row(event_id=2, ts=base + dt.timedelta(minutes=10), user_id=0, event_type="a", value=2.0, props="{}"),
-        Row(event_id=3, ts=base + dt.timedelta(hours=3), user_id=0, event_type="a", value=3.0, props="{}"),
-        Row(event_id=4, ts=base, user_id=1, event_type="a", value=9.0, props="{}"),
-    ]
-    path = str(tmp_path / "sess")
-    spark.createDataFrame(rows, EVENTS_SCHEMA).write.mode("overwrite").parquet(path)
-    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(path)
-    out = {r["user_id"]: r for r in run_available_now(sessionize(stream), "sessions").collect()}
-    # user 0's first burst closes on the in-data gap; user 1's lone event
-    # closes via event-time timeout (watermark 01:00 > its 00:30 deadline);
-    # user 0's 03:00 event stays open (deadline 03:30 > watermark)
-    assert len(out) == 2
-    assert out[0]["n_events"] == 2 and out[0]["sum_value"] == 3.0
-    assert out[1]["n_events"] == 1 and out[1]["sum_value"] == 9.0
 
 
 def test_decode_images_plumbing(spark, tmp_path):
@@ -399,80 +295,6 @@ def test_bmp_wav_roundtrip_property():
     wav_case()
 
 
-@pytest.mark.slow
-def test_streaming_corpus_stats_matches_batch(spark, tmp_path):
-    from agenticknowledgegraphconstructionsystem_spark.operators.textstats import (
-        corpus_stats,
-    )
-    from agenticknowledgegraphconstructionsystem_spark.streaming.ops import (
-        run_available_now,
-        streaming_corpus_stats,
-        streaming_docs_source,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    path = str(tmp_path / "docs_stream")
-    # several files so the drain spans micro-batches
-    docs.repartition(6).write.mode("overwrite").parquet(path)
-    got = run_available_now(
-        streaming_corpus_stats(streaming_docs_source(spark, path)),
-        "corpus_stats_stream",
-        output_mode="complete",
-    )
-    want = corpus_stats(docs)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-
-def test_streaming_entities_match_batch(spark, tmp_path):
-    """Stream-maintained entities aggregate (incremental materialization):
-    drain a multi-file docs stream through detector → clean → stateful
-    entities; the max-version rows must equal build_entities on the same
-    corpus run as one batch — including EXACT distinct-url mention_count
-    (each url lands in exactly one micro-batch, so batch-local distincts
-    sum exactly — the streaming twin of the salt-by-url argument)."""
-    from agenticknowledgegraphconstructionsystem_spark.operators.entities import (
-        build_entities,
-    )
-    from agenticknowledgegraphconstructionsystem_spark.operators.mentions import (
-        clean_mentions,
-        detect_mentions_native,
-    )
-    from agenticknowledgegraphconstructionsystem_spark.streaming.ops import (
-        latest_entities,
-        run_available_now,
-        streaming_docs_source,
-        streaming_entities,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    path = str(tmp_path / "docs_stream")
-    # 6 files + maxFilesPerTrigger=4 → the drain spans >1 micro-batch, so
-    # cross-batch state accumulation is actually exercised
-    docs.repartition(6).write.mode("overwrite").parquet(path)
-
-    stream_docs = streaming_docs_source(spark, path).select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.col("text").alias("extracted_text"),
-    )
-    m_stream = clean_mentions(detect_mentions_native(stream_docs))
-    emitted = run_available_now(
-        streaming_entities(m_stream), "entities_stream", output_mode="update"
-    )
-    got = latest_entities(emitted)
-
-    batch_docs = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.col("text").alias("extracted_text"),
-    )
-    want = build_entities(clean_mentions(detect_mentions_native(batch_docs)))
-    key = lambda r: (r["name"], r["concept_type"])  # noqa: E731
-    g = {key(r): tuple(r)[2:] for r in got.collect()}
-    w = {key(r): tuple(r)[2:] for r in want.collect()}
-    assert g == w and len(g) > 5
-    # entity_id column parity too
-    assert set(got.columns) == set(want.columns)
-
-
 def test_y4m_roundtrip_and_frame_sampling(spark):
     from agenticknowledgegraphconstructionsystem_spark.operators.multimodal import (
         decode_video_frames,
@@ -522,17 +344,13 @@ def test_checkpointed_drain_is_exactly_once_incremental(spark, tmp_path):
     checkpoint: the second drain processes only the newly-landed files,
     and the union of sink output equals the batch run over all input —
     no duplicates, no gaps (source offsets + sink commit log)."""
+    from agenticknowledgegraphconstructionsystem_spark.gate import drain_to_parquet
     from agenticknowledgegraphconstructionsystem_spark.operators.mentions import (
-        clean_mentions,
         detect_mentions_native,
     )
     from agenticknowledgegraphconstructionsystem_spark.sources.pages import (
         PAGES_SCHEMA,
         synthetic_pages_rows,
-    )
-    from agenticknowledgegraphconstructionsystem_spark.streaming.ops import (
-        drain_to_parquet,
-        streaming_mentions,
     )
 
     rows = synthetic_pages_rows(40)
@@ -547,8 +365,10 @@ def test_checkpointed_drain_is_exactly_once_incremental(spark, tmp_path):
     b1.write.mode("append").parquet(in_dir)
 
     def stream():
-        return streaming_mentions(
-            spark.readStream.schema(PAGES_SCHEMA).parquet(in_dir)
+        return detect_mentions_native(
+            spark.readStream.schema(PAGES_SCHEMA)
+            .parquet(in_dir)
+            .select("url", F.col("text").alias("extracted_text"))
         )
 
     drain_to_parquet(stream(), out_dir, ck_dir)

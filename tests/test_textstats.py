@@ -7,9 +7,9 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from agenticknowledgegraphconstructionsystem_spark.operators.textstats import (
-    add_language,
-    add_quality,
+    detect_language,
     fingerprint,
+    quality_columns,
     token_counts,
 )
 
@@ -27,13 +27,19 @@ def test_language_id(spark):
             Row(doc_id=5, text=None),
         ]
     )
-    got = {r["doc_id"]: r["detected_lang"] for r in add_language(docs).collect()}
+    got = {
+        r["doc_id"]: r["detected_lang"]
+        for r in docs.select(
+            "doc_id", detect_language(F.col("text")).alias("detected_lang")
+        ).collect()
+    }
     assert got == {0: "en", 1: "de", 2: "fr", 3: "es", 4: "und", 5: "und"}
 
 
 def test_quality_metrics(spark):
     docs = spark.createDataFrame([Row(doc_id=0, text="The quick brown fox. It runs!")])
-    r = add_quality(docs).collect()[0]
+    cols = quality_columns(F.col("text"))
+    r = docs.select(*[c.alias(n) for n, c in cols.items()]).collect()[0]
     assert r["n_chars"] == 29
     assert r["n_words"] == 6
     assert r["n_alpha"] == 22  # letters only

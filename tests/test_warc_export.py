@@ -15,6 +15,7 @@ from agenticknowledgegraphconstructionsystem_spark.sources.pages import (
     synthetic_pages,
 )
 from agenticknowledgegraphconstructionsystem_spark.sources.warc import (
+    WARC_INDEX_SCHEMA,
     parse_warc,
     read_warc_pages,
     write_warc_shards,
@@ -77,20 +78,26 @@ def test_warc_export_deterministic(spark, tmp_path):
 
 
 def test_warc_export_feeds_cdx(spark, tmp_path):
-    """Composition: export index + surt_key = the full location-bearing
-    CDX; latest-capture lookup runs on it unchanged."""
+    """Composition: the export index joined back to its payloads feeds
+    cdx_records; every capture gets its SURT key and the record digest
+    equals the index digest, so the index's (filename, offset, length)
+    locate each CDX record."""
     from agenticknowledgegraphconstructionsystem_spark.operators.cdx import (
-        surt_key,
+        cdx_records,
     )
 
     pages = synthetic_pages(spark, 15)
     out = str(tmp_path / "warc")
-    idx_df = write_warc_shards(pages, out, n_shards=2).withColumn(
-        "surt", surt_key(F.col("url"))
+    idx = spark.createDataFrame(
+        write_warc_shards(pages, out, n_shards=2).collect(), WARC_INDEX_SCHEMA
     )
-    rows = idx_df.collect()
-    assert all(r["surt"] and r["surt"].endswith(r["url"].rsplit("/", 1)[-1])
-               or r["surt"] for r in rows)
+    recs = cdx_records(idx.join(pages.select("url", "html"), "url"), ts_col="ts")
+    rows = recs.join(
+        idx.select("url", F.col("digest").alias("idx_digest")), "url"
+    ).collect()
+    assert len(rows) == 15
+    assert all(r["surt"].endswith(r["url"].rsplit("/", 1)[-1]) for r in rows)
+    assert all(r["digest"] == r["idx_digest"] for r in rows)
     assert {len(r["ts"]) for r in rows} == {14}
 
 
