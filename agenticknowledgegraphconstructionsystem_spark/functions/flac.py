@@ -15,8 +15,8 @@ three integrity checks: CRC-8, CRC-16, MD5).
 The reference never decodes media (its first mile is PyMuPDF text,
 extract_and_populate.py:36-71); a Common-Crawl-style multimodal corpus
 carries audio payloads, and FLAC is the lossless format web archives
-actually hold.  Wired into operators/multimodal.decode_audio and
-media_metadata like WAV/MP3.
+actually hold.  Wired into operators/multimodal.decode_audio next to
+WAV.
 
 Only decode-side surprises a crawl can hit raise honestly:
 non-STREAMINFO-first files, reserved codes, and CRC/MD5 mismatches all

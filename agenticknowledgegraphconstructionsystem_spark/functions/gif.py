@@ -16,8 +16,8 @@ animated decode path a web crawl needs:
 ``decode_gif`` (first composited frame, RGB rows) plugs into
 operators/multimodal.py's ``decode_image_any`` contract;
 ``decode_gif_frames`` gives the animated tier a REAL compressed codec
-for frame sampling (``decode_video_frames``); ``gif_meta`` is the
-header-only probe for ``media_metadata``.
+for frame sampling (``decode_video_frames``); ``gif_meta`` walks the
+block framing for frame count and duration without inflating LZW.
 
 ``encode_gif`` is an original LZW compressor used as the test-fixture
 writer; tests/test_gif.py roundtrips it, pins hand-built bitstreams,

@@ -24,11 +24,7 @@ from .operators.mentions import clean_mentions, detect_mentions_native
 from .session import spread_scan
 from .operators.relationships import discover_relationships
 from .operators.triples import build_triples
-from .operators.validation import (
-    entity_findings,
-    relationship_findings,
-    validation_summary,
-)
+from .operators.validation import entity_findings, relationship_findings
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed metadata.
+"""Multimodal columns: image/audio/video as opaque binary payloads.
 
 The Spark-side plumbing (schemas, Arrow batch shapes, partition-count
 preservation, mapInPandas iterator contracts) is real and tested.  Decode
@@ -7,12 +7,12 @@ has two honest tiers:
 * ``fake=False`` REALLY decodes the formats that are parseable with
   stdlib + numpy alone — 24-bit BI_RGB BMP (:func:`decode_bmp`), 8-bit
   RGB/RGBA non-interlaced PNG (:func:`decode_png` — DEFLATE is stdlib
-  zlib), baseline JPEG (functions/jpeg.py — full sequential-DCT decode:
-  Huffman → dequant → IDCT → chroma upsample → YCbCr), GIF
-  (functions/gif.py), 16-bit PCM WAV (:func:`decode_wav`) and Y4M video
-  (:func:`decode_y4m`) — pixel/sample/frame values pytest-pinned — and raises
-  ``NotImplementedError`` for anything else (MP3/H.264/...
-  need libvips/librosa/ffmpeg, which this container does not ship).
+  zlib), GIF (functions/gif.py), 16-bit PCM WAV (:func:`decode_wav`),
+  FLAC (functions/flac.py) and Y4M video (:func:`decode_y4m`) —
+  pixel/sample/frame values pytest-pinned — and raises
+  ``NotImplementedError`` for anything else (lossy image, audio and
+  video codecs need libvips/librosa/ffmpeg, which this container does
+  not ship).
 * ``decode_images(..., fake=True)`` substitutes a deterministic
   content-hash "decode" so the pipeline shape is exercised end to end on
   arbitrary payloads.
@@ -110,9 +110,7 @@ def decode_png(payload: bytes) -> tuple[int, int, list[list[tuple[int, int, int]
     concatenated IDAT stream + per-scanline unfilter (None/Sub/Up/
     Average/Paeth — the five filters of the PNG spec §9).  Raises
     ValueError for palette/gray/16-bit/interlaced flavors and corrupt
-    streams.  DEFLATE is stdlib zlib, so PNG decodes without native libs;
-    baseline JPEG has its own stdlib decoder (functions/jpeg.py) dispatched
-    via decode_image_any."""
+    streams.  DEFLATE is stdlib zlib, so PNG decodes without native libs."""
     if len(payload) < 8 or payload[:8] != _PNG_SIG:
         raise ValueError("not a PNG payload")
     pos = 8
@@ -315,28 +313,22 @@ def decode_image_any(
     payload: bytes,
 ) -> tuple[int, int, list[list[tuple[int, int, int]]]]:
     """Magic-byte dispatch over the real-decode image tier: BMP
-    (:func:`decode_bmp`), PNG (:func:`decode_png`), baseline or
-    progressive JPEG (functions/jpeg.py), or GIF87a/89a (functions/gif.py,
-    first composited frame) → (w, h, rows).  Raises ValueError for
-    anything else; arithmetic-coded JPEG raises NotImplementedError from
-    its codec."""
+    (:func:`decode_bmp`), PNG (:func:`decode_png`) or GIF87a/89a
+    (functions/gif.py, first composited frame) → (w, h, rows).  Raises
+    ValueError for anything else."""
     if payload[:2] == b"BM":
         return decode_bmp(payload)
     if payload[:8] == _PNG_SIG:
         return decode_png(payload)
-    if payload[:3] == b"\xff\xd8\xff":
-        from ..functions.jpeg import decode_jpeg
-
-        return decode_jpeg(payload)
     if payload[:6] in (b"GIF87a", b"GIF89a"):
         from ..functions.gif import decode_gif
 
         return decode_gif(payload)
-    raise ValueError("not a BMP, PNG, JPEG, or GIF payload")
+    raise ValueError("not a BMP, PNG, or GIF payload")
 
 
 def _bmp_features(payload: bytes, dim: int) -> tuple[int, int, int, list[float]]:
-    """Real decode + feature-extract for BMP/PNG/JPEG payloads: features[0:3]
+    """Real decode + feature-extract for BMP/PNG/GIF payloads: features[0:3]
     are the channel means in [0,1]; the remaining dim-3 slots are a
     normalized luminance histogram.  Pure pixel arithmetic — pinned by a
     pytest with hand-computed values."""
@@ -363,9 +355,9 @@ def decode_images(media: DataFrame, dim: int = 16, fake: bool = True) -> DataFra
 
     ``fake=False`` really decodes uncompressed 24-bit BMP payloads
     (stdlib ``struct``, :func:`decode_bmp`), 8-bit RGB/RGBA
-    non-interlaced PNG (stdlib ``zlib``, :func:`decode_png`), baseline
-    JPEG (functions/jpeg.py) and GIF (functions/gif.py), and raises
-    ``NotImplementedError`` for unrecognized formats."""
+    non-interlaced PNG (stdlib ``zlib``, :func:`decode_png`) and GIF
+    (functions/gif.py), and raises ``NotImplementedError`` for
+    unrecognized formats."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -382,7 +374,7 @@ def decode_images(media: DataFrame, dim: int = 16, fake: bool = True) -> DataFra
                     except ValueError as e:
                         raise NotImplementedError(
                             "real decode supports uncompressed 24-bit BMP, "
-                            "8-bit RGB/RGBA PNG, baseline JPEG, and GIF "
+                            "8-bit RGB/RGBA PNG, and GIF "
                             "(stdlib+numpy); other "
                             "formats need PIL/libvips — "
                             f"payload rejected: {e}"
@@ -414,11 +406,10 @@ def resize_images(
     media: DataFrame, width: int = 32, height: int = 32, fake: bool = True
 ) -> DataFrame:
     """mapInPandas image resize.  ``fake=False`` really resizes
-    uncompressed 24-bit BMP, 8-bit RGB/RGBA PNG, and baseline JPEG
-    payloads — :func:`decode_image_any` → nearest-neighbor resample →
-    re-encode in the SAME container (BMP→BMP, PNG→PNG, JPEG→JPEG — the
-    JPEG leg is lossy twice, like any thumbnailer), all stdlib+numpy —
-    and raises ``NotImplementedError`` for other formats.  The fake path
+    uncompressed 24-bit BMP and 8-bit RGB/RGBA PNG payloads —
+    :func:`decode_image_any` → nearest-neighbor resample → re-encode as
+    PNG for a PNG source and as BMP otherwise, all stdlib+numpy — and
+    raises ``NotImplementedError`` for other formats.  The fake path
     emits a deterministic pseudo-thumbnail (content digest tiled to
     width·height bytes) so batch shape, schema, and payload-size
     discipline are exercised on arbitrary payloads: output payloads are
@@ -427,7 +418,6 @@ def resize_images(
 
     def _resize_bmp(p: bytes) -> bytes:
         is_png = p[:8] == _PNG_SIG
-        is_jpeg = p[:3] == b"\xff\xd8\xff"
         w0, h0, rows = decode_image_any(p)
         out_rows = [
             [rows[y * h0 // height][x * w0 // width] for x in range(width)]
@@ -435,10 +425,6 @@ def resize_images(
         ]
         if is_png:
             return encode_png(out_rows)
-        if is_jpeg:
-            from ..functions.jpeg import encode_jpeg
-
-            return encode_jpeg(out_rows)
         return encode_bmp(out_rows)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -456,9 +442,9 @@ def resize_images(
                         out.append(_resize_bmp(bytes(p)))
                     except ValueError as e:
                         raise NotImplementedError(
-                            "real resize supports uncompressed 24-bit BMP, "
-                            "8-bit RGB/RGBA PNG, and baseline JPEG (stdlib+"
-                            "numpy); other formats need PIL/libvips — "
+                            "real resize supports uncompressed 24-bit BMP "
+                            "and 8-bit RGB/RGBA PNG (stdlib+numpy); other "
+                            "formats need PIL/libvips — "
                             f"payload rejected: {e}"
                         ) from e
             yield pd.DataFrame(
@@ -745,135 +731,3 @@ def decode_video_frames(
     return media.where(F.col("kind") == "video").mapInPandas(
         fn, VIDEO_FRAMES_SCHEMA
     )
-
-
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("format", T.StringType(), False),
-        T.StructField("n_bytes", T.LongType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-        T.StructField("bitrate_kbps", T.LongType(), True),
-        T.StructField("sample_rate", T.LongType(), True),
-        T.StructField("n_tracks", T.IntegerType(), True),
-        T.StructField("codecs", T.StringType(), True),
-    ]
-)
-
-
-def _probe_one(p: bytes) -> tuple:
-    """(format, width, height, duration_ms, bitrate_kbps, sample_rate,
-    n_tracks, codecs) from container headers only — no pixel/sample
-    decode.  'unknown' row (all-NULL metrics) for unrecognized bytes:
-    a catalog pass must not fail the job on the long tail of formats."""
-    from ..functions.mediameta import parse_mp4, probe_image_dims, scan_mp3
-
-    try:
-        fmt, w, h = probe_image_dims(p)
-    except ValueError:
-        pass
-    else:
-        if fmt != "gif":
-            return (fmt, w, h, None, None, None, None, None)
-        # GIF: the 6-byte signature alone proves nothing — the
-        # block-framing walk (never inflates LZW) is the validator and
-        # yields frame count + summed GCE delays, like Y4M's FRAME
-        # count; an unwalkable body degrades to the unknown tail below
-        from ..functions.gif import gif_meta
-
-        try:
-            _w, _h, n_frames, dur = gif_meta(p)
-            return ("gif", w, h, dur if dur else None, None, None,
-                    n_frames, "gif-lzw")
-        except ValueError:
-            pass
-    if p[:4] == b"OggS":
-        try:
-            from ..functions.mediameta import scan_ogg
-
-            codec, channels, rate, dur = scan_ogg(p)
-        except ValueError:
-            return ("unknown", None, None, None, None, None, None, None)
-        kbps = len(p) * 8 // dur if dur else None
-        return ("ogg", None, None, dur or None, kbps, rate, channels, codec)
-    if p[:4] == b"fLaC":
-        # STREAMINFO walk only (decode_flac would materialize all samples)
-        try:
-            from ..functions.flac import _parse_streaminfo
-
-            si, _off = _parse_streaminfo(p)
-        except ValueError:
-            return ("unknown", None, None, None, None, None, None, None)
-        dur = (
-            si["total_samples"] * 1000 // si["sample_rate"]
-            if si["sample_rate"] and si["total_samples"]
-            else None
-        )
-        kbps = len(p) * 8 // dur if dur else None
-        return ("flac", None, None, dur, kbps, si["sample_rate"],
-                si["channels"], "flac")
-    if p[:4] == b"RIFF" and p[8:12] == b"WAVE":
-        # fmt-chunk walk only (decode_wav would materialize all samples)
-        pos, rate, channels, data_len = 12, None, None, 0
-        while pos + 8 <= len(p):
-            cid = p[pos : pos + 4]
-            size = struct.unpack_from("<I", p, pos + 4)[0]
-            if cid == b"fmt ":
-                _f, channels, rate = struct.unpack_from("<HHI", p, pos + 8)
-            elif cid == b"data":
-                data_len = size
-            pos += 8 + size + (size & 1)
-        if rate:
-            dur = data_len * 1000 // (rate * (channels or 1) * 2)
-            return ("wav", None, None, dur, rate * (channels or 1) * 16 // 1000,
-                    rate, channels, "pcm_s16le")
-        return ("unknown", None, None, None, None, None, None, None)
-    if p[:9] == b"YUV4MPEG2":
-        hdr = p[: p.find(b"\n")].decode("ascii", "replace").split(" ")
-        w = next((int(t[1:]) for t in hdr if t.startswith("W")), None)
-        h = next((int(t[1:]) for t in hdr if t.startswith("H")), None)
-        return ("y4m", w, h, None, None, None, p.count(b"FRAME"), "rawvideo")
-    if p[:3] == b"ID3" or (len(p) >= 2 and p[0] == 0xFF and (p[1] & 0xE0) == 0xE0):
-        try:
-            dur, kbps, rate, _n = scan_mp3(p)
-            return ("mp3", None, None, dur, kbps, rate, 1, "mp3")
-        except ValueError:
-            return ("unknown", None, None, None, None, None, None, None)
-    if len(p) >= 12 and p[4:8] == b"ftyp":
-        try:
-            dur, tracks = parse_mp4(p)
-        except ValueError:
-            return ("unknown", None, None, None, None, None, None, None)
-        vids = [t for t in tracks if t["handler"] == "vide"]
-        w = vids[0]["width"] if vids else None
-        h = vids[0]["height"] if vids else None
-        codecs = ",".join(sorted({t["codec"] for t in tracks if t["codec"]}))
-        return ("mp4", w, h, dur, None, None, len(tracks), codecs or None)
-    return ("unknown", None, None, None, None, None, None, None)
-
-
-def media_metadata(media: DataFrame) -> DataFrame:
-    """Header-only media catalog: every payload → (format, dimensions,
-    duration, bitrate, sample rate, track count, codec list) WITHOUT
-    decoding samples (functions/mediameta.py parsers + the image-dim
-    probes).  This is the pass a 100 TB corpus runs FIRST — it reads a
-    few hundred bytes per payload, never raises on unknown formats, and
-    its output drives which payloads are worth a real decode.  Pure
-    mapInPandas projection: zero shuffle, constant memory per Arrow
-    batch."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                if p is None:
-                    rows.append((mid, "missing", None) + (None,) * 7)
-                    continue
-                b = bytes(p)
-                probed = _probe_one(b)
-                rows.append((mid, probed[0], len(b)) + probed[1:])
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_META_SCHEMA])
-
-    return media.mapInPandas(fn, MEDIA_META_SCHEMA)

@@ -205,7 +205,7 @@ def ivf_ann_topk(
     )
     # deterministic sample: smallest (A·pmod(id, P) + B) mod P, tie on id.
     # The id is reduced mod P BEFORE the affine multiply — raw ids beyond
-    # ~9e9 (stable_id()'s ~2^60 keys, xxhash64-derived keys, negative ids)
+    # ~9e9 (xxhash64-derived 64-bit keys, negative ids)
     # would overflow A·id in int64 (silent wrap under non-ANSI Spark, an
     # error in the DuckDB oracle); pmod keeps the operand < P ≈ 2^30 so the
     # product stays < 2^60 for ANY input id, and the oracle SQL applies the

@@ -141,9 +141,26 @@ def apply_validated_flags(edges: DataFrame, rel_findings: DataFrame) -> DataFram
     )
 
 
-def _summary_from_totals(
-    ent_findings: DataFrame, rel_findings: DataFrame, totals: DataFrame
+def validation_summary_lazy(
+    ent_findings: DataFrame,
+    rel_findings: DataFrame,
+    entities: DataFrame,
+    rels: DataFrame,
 ) -> DataFrame:
+    """A11 rollup (validation-agent.ts:398-439) as one aggregation per
+    kind, with IN-PLAN totals: the entity/relationship row counts come
+    from two 1-row aggregates unioned inside the same plan instead of
+    driver-side ``.count()`` actions — one action end-to-end, no extra
+    driver round-trips."""
+    totals = (
+        entities.agg(F.count("*").cast("long").alias("total"))
+        .select(F.lit("entity").alias("item_kind"), "total")
+        .unionByName(
+            rels.agg(F.count("*").cast("long").alias("total")).select(
+                F.lit("relationship").alias("item_kind"), "total"
+            )
+        )
+    )
     counts = (
         ent_findings.unionByName(rel_findings)
         .groupBy("item_kind")
@@ -167,41 +184,3 @@ def _summary_from_totals(
             "warnings",
         )
     )
-
-
-def validation_summary(
-    ent_findings: DataFrame,
-    rel_findings: DataFrame,
-    n_entities: int,
-    n_relationships: int,
-) -> DataFrame:
-    """A11 rollup (validation-agent.ts:398-439) as one aggregation per kind
-    — totals supplied by the caller (already-materialized stage counts)."""
-    totals = ent_findings.sparkSession.createDataFrame(
-        [("entity", n_entities), ("relationship", n_relationships)],
-        "item_kind string, total long",
-    )
-    return _summary_from_totals(ent_findings, rel_findings, totals)
-
-
-def validation_summary_lazy(
-    ent_findings: DataFrame,
-    rel_findings: DataFrame,
-    entities: DataFrame,
-    rels: DataFrame,
-) -> DataFrame:
-    """A11 rollup with IN-PLAN totals: the entity/relationship row counts
-    come from two 1-row aggregates unioned inside the same plan instead
-    of driver-side ``.count()`` actions — one action end-to-end, no extra
-    driver round-trips (the gate path; the pipeline uses the eager
-    variant because its stage counts are already materialized)."""
-    totals = (
-        entities.agg(F.count("*").cast("long").alias("total"))
-        .select(F.lit("entity").alias("item_kind"), "total")
-        .unionByName(
-            rels.agg(F.count("*").cast("long").alias("total")).select(
-                F.lit("relationship").alias("item_kind"), "total"
-            )
-        )
-    )
-    return _summary_from_totals(ent_findings, rel_findings, totals)

@@ -28,7 +28,6 @@ DuckDB and Python agree bit-for-bit; divide by 100.0 only at the edge.
 
 from __future__ import annotations
 
-import hashlib
 import re
 from dataclasses import dataclass
 
@@ -756,17 +755,6 @@ def extract_open_triples(
                     if any(pa < pk < pb for pk in kw_pos[t]):
                         out.setdefault((a, t, b), si)
     return [(s, p, o, si) for (s, p, o), si in sorted(out.items())]
-
-
-# ---------------------------------------------------------------------------
-# Deterministic keys (SURVEY §1.2: never monotonically_increasing_id)
-# ---------------------------------------------------------------------------
-
-def stable_id(*parts: str) -> int:
-    """Deterministic 63-bit id from md5 (md5 exists in Spark AND DuckDB, so
-    oracle SQL can reproduce ids when needed)."""
-    h = hashlib.md5("\x1f".join(parts).encode("utf-8")).hexdigest()
-    return int(h[:15], 16)
 
 
 # ---------------------------------------------------------------------------

@@ -286,8 +286,12 @@ class StageStore:
         if prev.get("snapshot_id") == snapshot_id:
             return
         target = self._resolve(stage, snapshot_id)
+        # the target's layout comes back with its data dirs: a schema or
+        # partition spec kept from the current snapshot would misread them
+        layout = ("schema", "partition_by")
         manifest = {
-            **{k: v for k, v in prev.items() if k != "history"},
+            **{k: v for k, v in prev.items() if k != "history" and k not in layout},
+            **{k: target[k] for k in layout if k in target},
             "rows": target.get("rows"),
             "committed_at": time.time(),
             "snapshot_id": self._next_id(stage),
@@ -306,8 +310,6 @@ class StageStore:
         """A snapshot's data dirs as one DataFrame, read with the schema
         its manifest records (see commit)."""
         paths = [os.path.join(self._path(stage), rel) for rel in snap["paths"]]
-        if not snap.get("schema"):  # a store written before manifests kept it
-            return self.spark.read.parquet(*paths)
         sch = T.StructType.fromJson(snap["schema"])
         out = self.spark.read.schema(sch).parquet(*paths)
         # partition columns are read last: restore the declared order

@@ -2,9 +2,9 @@
 over every subframe type / stereo decorrelation / rice partition order,
 pinned CRC test vectors, a fully hand-assembled bitstream (independent
 of the encoder), wasted-bits and escape-partition paths, the format's
-three integrity checks, and the Spark wiring (decode_audio mapInPandas,
-media_metadata STREAMINFO probe).  No FLAC library exists on this host
-(round-state memory), so these self-fixtures are the differential."""
+three integrity checks, and the Spark wiring (decode_audio mapInPandas).
+No FLAC library exists on this host, so these self-fixtures are the
+differential."""
 
 from __future__ import annotations
 
@@ -200,19 +200,3 @@ def test_decode_audio_real_flac_through_mapinpandas(spark):
         assert abs(a - b) < 1e-6
     # and the FLAC payload is smaller than its PCM twin (it compressed)
     assert got[2]["n_bytes"] < got[1]["n_bytes"]
-
-
-def test_media_metadata_probes_flac(spark):
-    from agenticknowledgegraphconstructionsystem_spark.operators.multimodal import (
-        media_metadata,
-    )
-
-    payload = encode_flac([_mono(8000, seed=1)], rate=8000)
-    media = spark.createDataFrame(
-        [Row(media_id=3, kind="audio", mime="audio/flac",
-             payload=payload, meta="{}")]
-    )
-    got = media_metadata(media).collect()[0]
-    assert got["format"] == "flac" and got["codecs"] == "flac"
-    assert got["sample_rate"] == 8000 and got["n_tracks"] == 1
-    assert got["duration_ms"] == 1000

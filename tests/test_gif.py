@@ -431,28 +431,3 @@ def test_video_frame_sampling_animated_gif(spark):
     assert [bytes(r["y_plane"]) for r in got] == [
         bytes(4), bytes([lum_green] * 4), bytes(4)]
     assert [r["y_mean_x1000"] for r in got] == [0, lum_green * 1000, 0]
-
-
-def test_media_metadata_real_gif(spark):
-    from agenticknowledgegraphconstructionsystem_spark.operators.multimodal import (
-        media_metadata,
-    )
-
-    anim = encode_gif(
-        (6, 3),
-        [{"rows": [[1] * 6] * 3, "delay_cs": 10},
-         {"rows": [[2] * 6] * 3, "delay_cs": 25}],
-        global_palette=PAL4,
-    )
-    media = spark.createDataFrame(
-        [(1, "image", "image/gif", anim, "{}"),
-         (2, "image", "image/gif", b"GIF89a..corrupt-body..", "{}")],
-        schema="media_id long, kind string, mime string, payload binary, meta string",
-    )
-    got = {r["media_id"]: r for r in media_metadata(media).collect()}
-    assert got[1]["format"] == "gif"
-    assert (got[1]["width"], got[1]["height"]) == (6, 3)
-    assert got[1]["duration_ms"] == 350
-    assert got[1]["n_tracks"] == 2 and got[1]["codecs"] == "gif-lzw"
-    # a GIF signature over a garbage body degrades to unknown, never throws
-    assert got[2]["format"] == "unknown" and got[2]["width"] is None

@@ -37,8 +37,8 @@ ENTRY_GLOBS = (
     "scripts/scaling_bench.py",
 )
 
-# The media-codec tier is unreached as well, but its ~90 codec tests
-# leave with it, so it is deleted in slices.  This set may only shrink:
+# The media-codec tier is unreached as well, but its codec tests leave
+# with it, so it is deleted in slices.  This set may only shrink:
 # a module listed here that disappears or becomes reachable fails
 # test_pending_deletions_are_current until it is taken off.
 PENDING_DELETION = frozenset(
@@ -46,8 +46,6 @@ PENDING_DELETION = frozenset(
     for m in (
         "functions.flac",
         "functions.gif",
-        "functions.jpeg",
-        "functions.mediameta",
         "operators.multimodal",
     )
 )
@@ -212,13 +210,12 @@ def test_every_package_import_resolves():
 # with the reason it stays.  An entry that disappears or gains a
 # production reference fails test_pending_dead_defs_are_current.
 KEPT_BY_DESIGN = {
-    "semantics.affine_hash": "Python spec of functions/hashing.affine_col",
+    "semantics.affine_hash": "Python spec of functions/hashing.affine_col; the tri-engine hash test",
     "semantics.char_ngrams": "Python spec of the linking name shingles; test_linking's brute force",
     "semantics.extraction_stats": "Python spec of the S8 extract stats; test_extract's oracle",
-    "semantics.is_valid": "Python spec of the validated-edge error rule in operators/validation",
+    "semantics.is_valid": "Python spec of the validated-edge error rule in operators/validation; test_validated_flag",
     "semantics.poly_hash": "Python spec of functions/hashing.poly_hash_col; the tri-engine hash test",
-    "semantics.should_flag_for_review": "Python spec of the review-flag rule in operators/validation",
-    "semantics.stable_id": "Python spec of the md5-derived 63-bit ids",
+    "semantics.should_flag_for_review": "Python spec of the review-flag rule in operators/validation; test_validated_flag",
     "semantics.word_ngrams": "Python spec of dedup.word_ngram_shingles; test_dedup_similarity's brute force",
     "operators.similarity.cosine_topk": "exact top-k ground truth for the ANN recall tests",
     "functions.pdf.build_pdf": "fixture writer for the PDF extraction tests",
@@ -238,11 +235,13 @@ PENDING_DEAD_DEFS = frozenset(
 
 
 def _used_names(path: Path) -> set[str]:
-    """Identifiers ``path`` uses: names, attribute names and imported
-    names, each outside the body of a function of the same name (a
-    recursive call does not keep a def alive).  Docstrings and comments
-    are not uses."""
+    """Identifiers ``path`` uses: names and attribute names, each outside
+    the body of a function of the same name (a recursive call does not
+    keep a def alive).  Docstrings, comments and imports are not uses: an
+    imported name counts only where the file's code names it, under its
+    ``as`` alias if it has one."""
     used: set[str] = set()
+    aliases: dict[str, str] = {}
 
     def walk(node: ast.AST, inside: frozenset[str]) -> None:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
@@ -255,13 +254,13 @@ def _used_names(path: Path) -> set[str]:
             name = None
         if name is not None and name not in inside:
             used.add(name)
-        if isinstance(node, (ast.Import, ast.ImportFrom)):
-            used.update(a.name.rpartition(".")[2] for a in node.names)
+        if isinstance(node, ast.ImportFrom):
+            aliases.update((a.asname, a.name) for a in node.names if a.asname)
         for child in ast.iter_child_nodes(node):
             walk(child, inside)
 
     walk(ast.parse(path.read_text(), str(path)), frozenset())
-    return used
+    return used | {name for alias, name in aliases.items() if alias in used}
 
 
 @functools.cache

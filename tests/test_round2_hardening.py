@@ -78,6 +78,7 @@ def test_poly_hash_tri_engine_property(spark):
     import duckdb
 
     from agenticknowledgegraphconstructionsystem_spark.functions.hashing import (
+        affine_col,
         poly_hash_col,
     )
 
@@ -100,9 +101,19 @@ def test_poly_hash_tri_engine_property(spark):
 
     py = {s: S.poly_hash(s) for s in cases}
     df = spark.createDataFrame([Row(s=s) for s in cases])
-    got_spark = {
-        r["s"]: r["h"] for r in df.select("s", poly_hash_col(F.col("s")).alias("h")).collect()
-    }
+    ks = (0, 1, len(S.MINHASH_A) - 1)
+    h = poly_hash_col(F.col("s"))
+    rows = df.select(
+        "s", h.alias("h"),
+        *(affine_col(h, S.MINHASH_A[k], S.MINHASH_B[k]).alias(f"a{k}") for k in ks),
+    ).collect()
+    got_spark = {r["s"]: r["h"] for r in rows}
+    # and the minhash permutations over those hashes: affine_col is
+    # semantics.affine_hash
+    for r in rows:
+        for k in ks:
+            want = S.affine_hash(py[r["s"]], S.MINHASH_A[k], S.MINHASH_B[k])
+            assert r[f"a{k}"] == want, (repr(r["s"]), k)
     con = duckdb.connect()
     q = (
         f"SELECT list_reduce(list_prepend(CAST({S.POLY_SEED0} AS BIGINT), "

@@ -47,6 +47,28 @@ def test_commit_append_rollback_roundtrip(spark, tmp_path):
     store.append("t", spark.range(100, 105).withColumnRenamed("id", "k"))
     assert store.manifest("t")["rows"] == 15
 
+    # rollback restores the target's schema, not the current snapshot's
+    store.commit("s", spark.createDataFrame([(1,)], "a int"), run_id="r1")
+    s0 = store.manifest("s")["snapshot_id"]
+    store.commit("s", spark.createDataFrame([(1, "x")], "a int, b string"), run_id="r2")
+    store.rollback("s", s0)
+    assert store.read("s").collect() == store.read("s", as_of=s0).collect()
+    assert store.read("s").columns == ["a"]
+
+    # ... and its partition spec: a Hive-partitioned base stays closed to
+    # append after a rollback from an unpartitioned snapshot
+    from pyspark.sql import functions as F
+
+    part = base.select("k", (F.col("k") % 2).alias("shard"))
+    store.commit("p", part, run_id="r1", partition_by=["shard"])
+    p0 = store.manifest("p")["snapshot_id"]
+    store.commit("p", base, run_id="r2")
+    store.rollback("p", p0)
+    assert store.manifest("p")["partition_by"] == ["shard"]
+    assert _rows(store.read("p")) == _rows(part)
+    with pytest.raises(ValueError, match="partition"):
+        store.append("p", part.limit(2))
+
 
 def test_append_to_partitioned_stage_raises(spark, tmp_path):
     """Delta dirs are written unpartitioned; silently appending one under

@@ -36,7 +36,8 @@ def test_decode_images_real_path_raises(spark, unsupported_image_headers):
     docs = spark.createDataFrame([Row(doc_id=0, text="x", n_chars=1)])
     with pytest.raises(Exception, match="NotImplementedError|real image decode"):
         decode_images(media_from_documents(docs), fake=False).collect()
-    # TIFF and WebP fall through decode_image_any's dispatch unrecognized
+    # TIFF, WebP and image/jpeg fall through decode_image_any's dispatch
+    # unrecognized
     for payload in unsupported_image_headers:
         media = spark.createDataFrame(
             [Row(media_id=1, kind="image", mime="image/x", payload=payload, meta="{}")]

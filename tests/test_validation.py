@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import Row
 
+from agenticknowledgegraphconstructionsystem_spark import semantics as S
 from agenticknowledgegraphconstructionsystem_spark.operators.validation import (
     apply_validated_flags,
     entity_findings,
@@ -96,6 +97,16 @@ def test_validated_flag(spark):
         ]
     )
     rf = relationship_findings(rels)
-    flags = {r["target_url"]: r["validated"]
-             for r in apply_validated_flags(rels, rf).collect()}
+    out = apply_validated_flags(rels, rf).collect()
+    flags = {r["target_url"]: r["validated"] for r in out}
     assert flags == {"j": True, "c": False, "e": False}
+    # the Spark flag is the Python spec: valid and not flagged for review
+    for r in out:
+        iss = S.relationship_findings(
+            r["source_url"], r["target_url"], r["rel_type"],
+            r["confidence_pct"], r["explanation"],
+        )
+        spec = S.is_valid(iss) and not S.should_flag_for_review(
+            r["confidence_pct"], iss
+        )
+        assert r["validated"] == spec, (r["target_url"], iss)
