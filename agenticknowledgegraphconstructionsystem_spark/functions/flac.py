@@ -7,10 +7,10 @@ coded frame numbers, CRC-8 frame headers, CRC-16 frame footers, and the
 STREAMINFO MD5 over the decoded stream — plus the fixture ENCODER
 subset (verbatim / fixed / explicit-coefficient LPC subframes, every
 stereo decorrelation, configurable rice partition order) the tests
-round-trip against, the same two-way discipline as functions/gif.py (no
-FLAC library exists on this host, so the differential is
-decoder-vs-own-encoder plus hand-built bitstreams and the format's
-three integrity checks: CRC-8, CRC-16, MD5).
+round-trip against, a two-way discipline (no FLAC library exists on
+this host, so the differential is decoder-vs-own-encoder plus
+hand-built bitstreams and the format's three integrity checks: CRC-8,
+CRC-16, MD5).
 
 The reference never decodes media (its first mile is PyMuPDF text,
 extract_and_populate.py:36-71); a Common-Crawl-style multimodal corpus

@@ -18,8 +18,8 @@ gives crawled ``%PDF-`` payloads the same treatment without native deps:
 
 Page assembly (:func:`extract_pdf_text`) reuses
 ``semantics.assemble_page_texts`` so PDF and HTML extraction share the
-byte-identical S7 invariant.  :func:`build_pdf` is the ``encode_bmp``-
-style fixture writer: a minimal valid PDF (catalog, page tree, Helvetica,
+byte-identical S7 invariant.  :func:`build_pdf` is the matching
+fixture writer: a minimal valid PDF (catalog, page tree, Helvetica,
 Flate or raw content streams, correct xref offsets) the tests roundtrip
 through the extractor.
 """
@@ -262,7 +262,7 @@ def _escape_literal(s: str) -> bytes:
 def build_pdf(pages: list[list[str]], compress: bool = True) -> bytes:
     """Minimal valid single-font PDF: ``pages`` is a list of pages, each a
     list of text lines.  Correct xref offsets; Flate or raw content
-    streams.  The test sibling of ``encode_bmp``/``write_warc``."""
+    streams.  The test sibling of ``write_warc``."""
     objs: list[bytes] = []  # bodies; object number = index + 1
     n_pages = len(pages)
     font_num = 3 + 2 * n_pages

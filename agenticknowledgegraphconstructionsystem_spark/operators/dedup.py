@@ -37,7 +37,7 @@ from ..semantics import threshold_fraction as _threshold_fraction
 #: test scales produce, so correctness gates are unaffected.
 DEFAULT_MAX_BUCKET = 10_000
 
-#: intermediates persisted by :func:`_maybe_persist` that have not been
+#: intermediates persisted by :func:`_persist_tracked` that have not been
 #: released yet — see :func:`unpersist_tracked`.  DRIVER-GLOBAL state,
 #: intentionally: persists live on the (one) SparkContext, so the registry
 #: mirrors that scope.  Two interleaved pipelines in one driver would
@@ -47,8 +47,8 @@ DEFAULT_MAX_BUCKET = 10_000
 _PERSISTED: list[DataFrame] = []
 
 
-def _maybe_persist(df: DataFrame, flag: bool) -> DataFrame:
-    """Lazy MEMORY_AND_DISK persist for an intermediate referenced by
+def _persist_tracked(df: DataFrame) -> DataFrame:
+    """MEMORY_AND_DISK persist for an intermediate referenced by
     several plan branches (sizes + both self-join sides + verify): Spark
     performs no cross-branch common-subexpression elimination, so without
     this the shingle/signature subtree is re-evaluated per branch
@@ -70,15 +70,14 @@ def _maybe_persist(df: DataFrame, flag: bool) -> DataFrame:
     bench, a session-scoped pytest SparkSession) should call
     :func:`unpersist_tracked` after the final action on each result, or the
     cached blocks accumulate until driver GC happens to drop them."""
-    if flag:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        _PERSISTED.append(df)
-        df.count()
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _PERSISTED.append(df)
+    df.count()
     return df
 
 
 def unpersist_tracked() -> int:
-    """Release every intermediate :func:`_maybe_persist` cached since the
+    """Release every intermediate :func:`_persist_tracked` cached since the
     last call (safe any time after the caller's final action — Spark will
     just recompute if a plan is re-run).  Returns the number released."""
     n = 0
@@ -235,12 +234,11 @@ def minhash_banded_signatures(
     n: int = 5,
     num_hashes: int = 32,
     bands: int = 16,
-    persist: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """→ (shingles, banded): per-doc MinHash signature exploded to one row
-    per band, using the portable poly/affine hash family.  ``persist``
-    lazily caches the shingle table — it feeds the signature aggregation
-    AND the verify step's three branches (see _maybe_persist).
+    per band, using the portable poly/affine hash family.  The shingle
+    table is persisted — it feeds the signature aggregation AND the
+    verify step's three branches (see _persist_tracked).
 
     Per (doc, shingle): one char-fold poly_hash, then ``num_hashes`` affine
     permutations reduced by min() — a single map-side-combinable
@@ -252,9 +250,8 @@ def minhash_banded_signatures(
     rows_per_band = num_hashes // bands
     assert rows_per_band <= 2, "band packing is base-P in a 63-bit long"
     assert num_hashes <= S.NUM_MINHASHES
-    sh = _maybe_persist(
-        word_ngram_shingles(docs, key, text_col, n).where(F.col("shingle") != ""),
-        persist,
+    sh = _persist_tracked(
+        word_ngram_shingles(docs, key, text_col, n).where(F.col("shingle") != "")
     )
     hs = sh.select(F.col(key), poly_hash_col(F.col("shingle")).alias("h"))
     sig = hs.groupBy(key).agg(
@@ -299,7 +296,7 @@ def minhash_near_duplicates(
     # aggregation's map side).  One (key, band_id, band_hash) row per doc
     # band is corpus-linear and orders of magnitude narrower than the
     # shingle table already persisted above.
-    banded = _maybe_persist(banded, True)
+    banded = _persist_tracked(banded)
     cand = capped_band_pairs(banded, key, max_bucket)
     return _jaccard_verify(cand, sh, key, threshold)
 
@@ -339,7 +336,7 @@ def winnow_near_duplicates(
     # persist BEFORE the df branch: the winnowing expression (per-gram char
     # folds) is the expensive subtree and feeds both the df count and the
     # filtered fp table
-    fp = _maybe_persist(winnow_fingerprints(docs, key, text_col, k, w), True)
+    fp = _persist_tracked(winnow_fingerprints(docs, key, text_col, k, w))
     if max_df is not None:
         # exclude via the HOT-fp complement (bounded: at most |fp|/max_df
         # entries) with an anti-join per consuming branch: the filtered
@@ -349,12 +346,11 @@ def winnow_near_duplicates(
         # cache materialization of the corpus-sized filtered table —
         # each branch then reads the (already cached) raw fp table plus
         # a small anti join.
-        hot = _maybe_persist(
+        hot = _persist_tracked(
             fp.groupBy("fp")
             .agg(F.count("*").alias("_df"))
             .where(F.col("_df") > max_df)
-            .select("fp"),
-            True,
+            .select("fp")
         )
         fp = fp.join(hot, "fp", "left_anti")
     sizes = fp.groupBy(key).agg(F.count("*").alias("sz"))
@@ -447,7 +443,7 @@ def simhash_near_duplicates(
     hot 16-bit buckets are capped exactly like the MinHash bands."""
     # persist: the signature aggregation feeds the banding AND both join
     # sides of the pair verify
-    sig = _maybe_persist(simhash_signatures(docs, key, text_col), True)
+    sig = _persist_tracked(simhash_signatures(docs, key, text_col))
     quarters = F.array(
         *[
             F.shiftrightunsigned(F.col("simhash"), 16 * q)

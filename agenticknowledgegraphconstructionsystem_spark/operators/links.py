@@ -172,20 +172,18 @@ def anchor_text_profile(
     )
 
 
-def host_rollup(edges: DataFrame, include_intra: bool = False) -> DataFrame:
+def host_rollup(edges: DataFrame) -> DataFrame:
     """Distinct page-level (src, dst) edges → (src_domain, dst_domain,
-    n_links) at registered-domain granularity.  ``include_intra=False``
-    (default) drops same-domain edges, the usual ranking convention
-    (nav/self links dominate otherwise).  Map-side partial agg over the
-    already-distinct edge list; the output feeds
+    n_links) at registered-domain granularity.  Same-domain edges are
+    dropped, the usual ranking convention (nav/self links dominate
+    otherwise).  Map-side partial agg over the already-distinct edge
+    list; the output feeds
     graph.pagerank_fixed_point(src='src_domain', dst='dst_domain')
     directly."""
     rolled = edges.select(
         registered_domain(F.col("src")).alias("src_domain"),
         registered_domain(F.col("dst")).alias("dst_domain"),
-    )
-    if not include_intra:
-        rolled = rolled.where(F.col("src_domain") != F.col("dst_domain"))
+    ).where(F.col("src_domain") != F.col("dst_domain"))
     return rolled.groupBy("src_domain", "dst_domain").agg(
         F.count(F.lit(1)).alias("n_links")
     )
@@ -195,11 +193,7 @@ def host_graph(
     pages: DataFrame,
     url_col: str = "url",
     html_col: str = "html",
-    include_intra: bool = False,
 ) -> DataFrame:
     """pages → host-level link graph in one call:
     host_rollup(link_edges(pages))."""
-    return host_rollup(
-        link_edges(pages, url_col=url_col, html_col=html_col),
-        include_intra=include_intra,
-    )
+    return host_rollup(link_edges(pages, url_col=url_col, html_col=html_col))

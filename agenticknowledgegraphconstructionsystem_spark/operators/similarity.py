@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from .. import semantics as S
 from ..functions.vector import pairwise_cosine_udf, rhp_signature_udf
-from .dedup import DEFAULT_MAX_BUCKET, _maybe_persist, capped_band_pairs
+from .dedup import DEFAULT_MAX_BUCKET, _persist_tracked, capped_band_pairs
 
 
 def _dot(a, b):
@@ -333,7 +333,7 @@ def embedding_near_duplicates(
     # Spark does no cross-branch CSE) — persist the narrow (id, band)
     # rows so the signature ArrowEval runs once, not once per branch
     # (sf1 plan before: 20 ArrowEvalPython nodes for one logical pass).
-    banded = _maybe_persist(
+    banded = _persist_tracked(
         corpus.select(
             F.col(id_col),
             sig_udf(F.col(vec_col).cast("array<double>")).alias("_sig"),
@@ -342,8 +342,7 @@ def embedding_near_duplicates(
             F.posexplode(_band_arr(F.col("_sig"), num_planes, bands)).alias(
                 "band_id", "band_hash"
             ),
-        ),
-        True,
+        )
     )
     # dedup=False: a pair sharing k bands is scored k times by the cheap
     # codegen'd cosine and collapsed AFTER the selective >= threshold cut,

@@ -23,7 +23,6 @@ def sessionize_batch(
     key: str = "user_id",
     ts_col: str = "ts",
     value_col: str = "value",
-    order_tiebreak: str = "event_id",
 ) -> DataFrame:
     """Gap-based sessionization (30-minute default gap): a new session
     starts at the first event of a key and whenever the gap to the
@@ -34,14 +33,14 @@ def sessionize_batch(
     Mechanics: lag() marks session starts, a running sum over the marks
     numbers the sessions (the standard "gaps and islands" shape), one
     aggregation closes them.  Timestamps compare as unix_micros (int64) —
-    no float time arithmetic.  Ordering is (ts, tiebreak): unique, so the
+    no float time arithmetic.  Ordering is (ts, event_id): unique, so the
     running sum is frame-deterministic.
     """
     gap_us = gap_minutes * 60 * 1_000_000
     # parquet timestamps load as TIMESTAMP_NTZ; the session tz is UTC, so
     # the cast is a pure reinterpretation and matches DuckDB epoch_us()
     us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    w = Window.partitionBy(key).orderBy(ts_col, order_tiebreak)
+    w = Window.partitionBy(key).orderBy(ts_col, "event_id")
     new_sess = (
         F.when(F.lag(us).over(w).isNull(), F.lit(1))
         .when(us - F.lag(us).over(w) > gap_us, F.lit(1))
@@ -74,7 +73,6 @@ def interval_join(
     ts_col: str = "ts",
     start_col: str = "session_start",
     end_col: str = "session_end",
-    bucket_minutes: int = 60,
 ) -> DataFrame:
     """Point-in-interval join: every left row matched to the right
     interval(s) [start, end] containing its timestamp, per key — the
@@ -83,18 +81,18 @@ def interval_join(
     Naively this is a non-equi theta join (Spark would pick
     BroadcastNestedLoop or a cartesian per key).  The scale shape here is
     LSH-style blocking on TIME: each right interval explodes to the
-    fixed-width buckets it overlaps, the left row maps to its single
+    60-minute buckets it overlaps, the left row maps to its single
     bucket, and an equi join on (key, bucket) prunes the pair space to
     same-bucket candidates before the exact range filter.  Cost is
     O(|left| + Σ interval_span/bucket) join rows instead of |left|×|right|
-    per key; pick ``bucket_minutes`` near the typical interval length so
+    per key; the bucket width is near the typical session length, so
     most intervals explode to ~2 buckets.
 
     Matches use inclusive bounds (start <= ts <= end), duplicates
     impossible because a left row lives in exactly one bucket.
     """
     us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    b_us = bucket_minutes * 60 * 1_000_000
+    b_us = 60 * 60 * 1_000_000
     l_b = left.withColumn("_bucket", F.floor(us / b_us))
     s_us = F.unix_micros(F.col(start_col).cast("timestamp"))
     e_us = F.unix_micros(F.col(end_col).cast("timestamp"))
@@ -114,12 +112,11 @@ def as_of_join(
     on: list[str],
     ts_col: str = "ts",
     payloads: list[str] | None = None,
-    suffix: str = "_asof",
 ) -> DataFrame:
-    """Backward as-of join: every left row picks up the payload of the
-    LATEST right row with ``right.ts <= left.ts`` per key (NULL when no
-    prior right row exists) — the quotes-onto-trades join Spark has no
-    built-in for.
+    """Backward as-of join: every left row picks up the payload (as
+    ``<payload>_asof``) of the LATEST right row with ``right.ts <=
+    left.ts`` per key (NULL when no prior right row exists) — the
+    quotes-onto-trades join Spark has no built-in for.
 
     Spark-first implementation (no per-row Python, no broadcast of the
     big side): tag and union the two inputs, one ordered window per key
@@ -140,7 +137,7 @@ def as_of_join(
         *on,
         F.col(ts_col),
         F.lit(0).alias("_asof_side"),
-        *[F.col(p).alias(f"{p}{suffix}") for p in payloads],
+        *[F.col(p).alias(f"{p}_asof") for p in payloads],
     )
     l_tagged = left.withColumn("_asof_side", F.lit(1))
     u = l_tagged.unionByName(r, allowMissingColumns=True)
@@ -152,11 +149,11 @@ def as_of_join(
     carried = u.select(
         "*",
         *[
-            F.last(f"{p}{suffix}", ignorenulls=True).over(w).alias(f"_c_{p}")
+            F.last(f"{p}_asof", ignorenulls=True).over(w).alias(f"_c_{p}")
             for p in payloads
         ],
     )
     return carried.where(F.col("_asof_side") == 1).select(
         *left.columns,
-        *[F.col(f"_c_{p}").alias(f"{p}{suffix}") for p in payloads],
+        *[F.col(f"_c_{p}").alias(f"{p}_asof") for p in payloads],
     )

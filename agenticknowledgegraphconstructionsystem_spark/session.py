@@ -20,7 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
-def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
+def cut_lineage(df: DataFrame) -> DataFrame:
     """Truncate ``df``'s lineage for iterative algorithms (PageRank /
     connected-components rounds, triangle-edge reuse, incremental deltas).
 
@@ -32,11 +32,12 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     local[k], where losing "an executor" is losing the whole JVM anyway).
     On a 1000-executor run of the O(log d) pointer-jumping loop, a single
     lost executor under localCheckpoint kills the job — reliable
-    checkpoints make each round restartable from storage instead.
+    checkpoints make each round restartable from storage instead.  The
+    cut is eager: it materializes ``df`` with one job.
     """
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
-        return df.checkpoint(eager)
-    return df.localCheckpoint(eager)
+        return df.checkpoint()
+    return df.localCheckpoint()
 
 
 #: rows per spread partition: sized so a compute-heavy per-row stage

@@ -203,7 +203,6 @@ class StageStore:
         stage: str,
         df: DataFrame,
         run_id: str,
-        meta: dict | None = None,
         partition_by: list[str] | None = None,
     ) -> DataFrame:
         """Write stage output as a fresh full snapshot, then atomically mark
@@ -240,7 +239,6 @@ class StageStore:
             "paths": [rel],
             "schema": df.schema.jsonValue(),
             **({"partition_by": partition_by} if partition_by else {}),
-            **(meta or {}),
         }
         self._write_manifest(stage, manifest, prev)
         return self._load(stage, manifest)

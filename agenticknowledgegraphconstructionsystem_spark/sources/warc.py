@@ -245,7 +245,6 @@ def read_warc_pages(
     path: str,
     http_aware: bool = False,
     statuses: tuple[int, ...] = (200,),
-    mime_prefixes: tuple[str, ...] = ("text/html",),
 ) -> DataFrame:
     """WARC file(s) → the canonical pages DataFrame (url, warc_ts, html,
     text=NULL, lang=NULL).  ``binaryFile`` brings each WARC in as one
@@ -253,8 +252,8 @@ def read_warc_pages(
 
     ``http_aware=True`` runs the real crawl first mile per record
     (sources/http_meta.py): parse the HTTP status line + headers, gate
-    on ``statuses`` and ``mime_prefixes`` BEFORE paying anything
-    downstream (records with no parseable status line or no
+    on ``statuses`` and a ``text/html`` Content-Type BEFORE paying
+    anything downstream (records with no parseable status line or no
     Content-Type pass the gate — on crawl data absence of evidence must
     not drop pages), undo chunked transfer- and gzip/deflate
     content-coding, detect the charset (BOM → header → meta prescan →
@@ -278,7 +277,7 @@ def read_warc_pages(
                         if status is not None and status not in statuses:
                             continue
                         if ctype is not None and not ctype.strip().lower().startswith(
-                            mime_prefixes
+                            "text/html"
                         ):
                             continue
                         text, _cs = decode_html_payload(raw, ctype)

@@ -15,10 +15,11 @@ import hashlib
 import os
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from __spark_entry__ import oracle_sql, queries  # noqa: E402
 

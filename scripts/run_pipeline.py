@@ -9,7 +9,7 @@
       --pages <iceberg-table-or-parquet-path> \
       --out <warehouse-path> --run-id <id> [--resume]
 
-Packaging: `cd /root/repo && zip -r kgspark.zip
+Packaging: from the repository root, `zip -r kgspark.zip
 agenticknowledgegraphconstructionsystem_spark` — the package must reach the
 executors because the Arrow UDFs import `semantics` there (the
 byte-identical-extraction contract depends on driver and executors running
@@ -23,8 +23,9 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def main() -> None:

@@ -9,6 +9,7 @@ from __future__ import annotations
 import subprocess
 import sys
 import textwrap
+from pathlib import Path
 
 import pytest
 
@@ -78,7 +79,7 @@ def test_pagerank_reliable_checkpoint_bit_identical(spark, tmp_path):
     script = textwrap.dedent(
         f"""
         import json, os, sys
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, {str(Path(__file__).resolve().parents[1])!r})
         from pyspark.sql import Row
         from agenticknowledgegraphconstructionsystem_spark.session import get_spark
         from agenticknowledgegraphconstructionsystem_spark.operators.graph import pagerank_fixed_point

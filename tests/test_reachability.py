@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import ast
 import functools
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -45,7 +46,6 @@ PENDING_DELETION = frozenset(
     f"{PKG}.{m}"
     for m in (
         "functions.flac",
-        "functions.gif",
         "operators.multimodal",
     )
 )
@@ -153,6 +153,25 @@ IMPORTER_GLOBS = (
     "perfbench/*.py",
     "__spark_entry__.py",
 )
+
+
+def test_no_file_names_a_checkout_directory():
+    """A hard-coded checkout path (``sys.path.insert(0, "<abs dir>")``,
+    ``REPO = Path("<abs dir>")``) makes tests, the gate or the CLI run
+    from any other checkout silently import that checkout's package.
+    Every absolute path written in a package, script or test file
+    (code, strings, comments) must not name a directory that holds
+    this package; such files derive the root from ``__file__``."""
+    token = re.compile(r"(?<![\w.~/:])(?:/[\w.-]+)+")
+    found = [
+        f"{p.relative_to(ROOT)}:{n}: {m}"
+        for g in (f"{PKG}/**/*.py", "scripts/*.py", "tests/*.py")
+        for p in sorted(ROOT.glob(g))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        for m in token.findall(line)
+        if (Path(m) / PKG / "__init__.py").is_file()
+    ]
+    assert not found, "absolute checkout paths: " + ", ".join(found)
 
 
 def _top_level_names(path: Path) -> set[str]:

@@ -322,7 +322,6 @@ def test_pipeline_exact_dedup_stage(spark, tmp_path):
 def test_resize_and_audio_plumbing(spark):
     from agenticknowledgegraphconstructionsystem_spark.operators.multimodal import (
         decode_audio,
-        resize_images,
     )
 
     media = spark.createDataFrame(
@@ -332,14 +331,6 @@ def test_resize_and_audio_plumbing(spark):
             Row(media_id=3, kind="image", mime="image/png", payload=None, meta="{}"),
         ]
     )
-    resized = {r["media_id"]: r for r in resize_images(media, width=8, height=4).collect()}
-    assert set(resized) == {1, 3}  # image rows only
-    assert len(resized[1]["payload"]) == 8 * 4  # bounded by target dims
-    assert resized[3]["payload"] is None
-    # deterministic: same input -> same pseudo-thumbnail
-    again = {r["media_id"]: r for r in resize_images(media, width=8, height=4).collect()}
-    assert again[1]["payload"] == resized[1]["payload"]
-
     audio = {r["media_id"]: r for r in decode_audio(media).collect()}
     assert set(audio) == {2}
     assert audio[2]["duration_ms"] == (3 * 3200) // 16
@@ -347,8 +338,6 @@ def test_resize_and_audio_plumbing(spark):
 
     import pytest
 
-    with pytest.raises(Exception, match="NotImplementedError|real image resize"):
-        resize_images(media, fake=False).collect()
     with pytest.raises(Exception, match="NotImplementedError|real audio decode"):
         decode_audio(media, fake=False).collect()
 

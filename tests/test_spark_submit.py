@@ -17,7 +17,7 @@ from pathlib import Path
 
 import pytest
 
-REPO = Path("/root/repo")
+REPO = Path(__file__).resolve().parents[1]
 SPARK_SUBMIT = "/opt/spark/bin/spark-submit"
 
 _DRIVER = """
