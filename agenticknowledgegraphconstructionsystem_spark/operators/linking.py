@@ -11,17 +11,22 @@ Spark-first, as ONE path that the kg_canonicalize DuckDB twin replays
    exactly 1, still join-blocked (never all pairs).  Shingles present in
    more than ``max_df`` names are cut from *pairing* only, so a
    stop-trigram cannot emit df² candidate rows.
-2. **Exact Jaccard verify** on the candidate pairs via a shingle
-   intersection count, thresholded by integer cross-multiplication.
+2. **Exact Jaccard verify** on the distinct candidate pairs: each pair
+   picks up both names' shingle sets (sorted arrays, broadcast — the
+   vocabulary is small), so ``|A∩B|`` is one
+   ``size(array_intersect(a, b))`` projection per pair, thresholded by
+   integer cross-multiplication.
 3. **Connected components** by iterative min-label propagation (the
-   GraphFrames-style algorithm, hand-rolled as join + min-agg per
-   round with cut_lineage to cut lineage).  The min() aggregation is
-   combiner-friendly, so hot (high-degree) vertices partial-aggregate
-   map-side — the built-in analog of the explicit salt used in the entity
-   aggregation stage.
+   GraphFrames-style algorithm, hand-rolled): the symmetric edges plus a
+   self-loop per node are cut once, and each round is one min aggregate
+   over that adjacency joined to the labels, cut with cut_lineage.  No
+   explicit salt: min() is combiner-friendly, so a hot (high-degree)
+   vertex's labels partial-aggregate map-side (``build_entities``'
+   distinct count, which cannot combine that way, keeps its salt).
 4. **Canonical name** per component = member with the highest
    mention_count, tie-broken lexicographically (deterministic; never
-   partition order).
+   partition order): one window ``min(struct(-mention_count, name))``
+   over the component.
 
 At 10^12 docs the entity-name universe is orders of magnitude smaller than
 the doc corpus (vocabulary-sized), so these stages run on the *entities*
@@ -31,16 +36,17 @@ join against the name→canonical mapping.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..session import cut_lineage
 
 
 def name_shingles(entities: DataFrame, n: int = 3) -> DataFrame:
-    """→ (name, shingle) distinct, plus set size. Shingles are char n-grams
-    of ' ' + lower(name) + ' ' (semantics.char_ngrams), built natively:
-    sequence → transform → explode stays in codegen."""
+    """→ (name, sh): each name's distinct shingles as one sorted array.
+    Shingles are char n-grams of ' ' + lower(name) + ' '
+    (semantics.char_ngrams), built natively: sequence → transform stays
+    in codegen."""
     # padded name bound to a column first (HOF-binding lesson, PLANS.md
     # round 5): embedded in the lambda, concat+lower+trim would re-run
     # per gram position; length() in the sequence bound is the second
@@ -51,10 +57,7 @@ def name_shingles(entities: DataFrame, n: int = 3) -> DataFrame:
         f"transform(sequence(1, greatest(length(_pn) - {n - 1}, 1)), "
         f"i -> substring(_pn, i, {n}))"
     )
-    return (
-        bound.select("name", F.explode(F.array_distinct(grams)).alias("shingle"))
-        .distinct()
-    )
+    return bound.select("name", F.array_sort(F.array_distinct(grams)).alias("sh"))
 
 
 #: df cap for the exact-blocking candidate path: char-3grams present in
@@ -65,12 +68,13 @@ def name_shingles(entities: DataFrame, n: int = 3) -> DataFrame:
 DEFAULT_NAME_SHINGLE_MAX_DF = 10_000
 
 
-def dropped_name_shingles(sh: DataFrame, max_df: int) -> DataFrame:
-    """Audit view for the exact-blocking df cut: the (shingle, df) rows
-    excluded from pairing — same never-silent contract as
-    dedup.dropped_band_buckets."""
+def dropped_name_shingles(sets: DataFrame, max_df: int) -> DataFrame:
+    """Audit view for the exact-blocking df cut over :func:`name_shingles`
+    sets: the (shingle, df) rows excluded from pairing — same never-silent
+    contract as dedup.dropped_band_buckets."""
     return (
-        sh.groupBy("shingle")
+        sets.select(F.explode("sh").alias("shingle"))
+        .groupBy("shingle")
         .agg(F.count("*").alias("df"))
         .where(F.col("df") > max_df)
     )
@@ -83,7 +87,9 @@ def similarity_edges(
 ) -> DataFrame:
     """→ (name_a, name_b, jaccard) for the name pairs with exact char-3gram
     Jaccard >= threshold.  Candidates are every pair sharing >= 1 shingle
-    (recall exactly 1, join-blocked, never all pairs).
+    (recall exactly 1, join-blocked, never all pairs).  ``entities`` holds
+    one vocabulary-sized row per name (:func:`canonicalize` collapses its
+    input first): its shingle sets are broadcast to the candidate pairs.
 
     ``max_df`` is the hot-shingle cut: a shingle shared by df names emits
     df² candidate rows, and at a 10^6-name vocabulary stop-trigrams reach
@@ -95,33 +101,25 @@ def similarity_edges(
     Audit with :func:`dropped_name_shingles`; None disables.  The default
     cap is sized far above gate-scale dfs, so the kg_canonicalize oracle
     sees the uncut pair space."""
-    sh = name_shingles(entities)
-    sizes = sh.groupBy("name").agg(F.count("*").alias("sz"))
-    pair_sh = sh
+    sets = name_shingles(entities)
+    sh = sets.select("name", F.explode("sh").alias("shingle"))
     if max_df is not None:
-        dfc = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
-        pair_sh = sh.join(dfc.where(F.col("_df") <= max_df), "shingle").drop("_df")
-    a = pair_sh.select(F.col("name").alias("name_a"), "shingle")
-    b = pair_sh.select(F.col("name").alias("name_b"), F.col("shingle").alias("shingle_x"))
+        # a window count partitions by shingle, the self-join's key, so
+        # the join below adds no exchange of its own
+        df_ = F.count("*").over(Window.partitionBy("shingle"))
+        sh = sh.withColumn("_df", df_).where(F.col("_df") <= max_df)
+    a = sh.select(F.col("name").alias("name_a"), "shingle")
+    b = sh.select(F.col("name").alias("name_b"), F.col("shingle").alias("shingle_b"))
     cand = (
-        a.join(b, F.col("shingle") == F.col("shingle_x"))
+        a.join(b, F.col("shingle") == F.col("shingle_b"))
         .where(F.col("name_a") < F.col("name_b"))
         .select("name_a", "name_b")
         .distinct()
     )
-    sh_b = sh.select(
-        F.col("name").alias("nb"), F.col("shingle").alias("shingle_b")
-    )
-    inter = (
-        cand.join(sh.withColumnRenamed("name", "name_a"), "name_a")
-        .join(
-            sh_b,
-            (F.col("name_b") == F.col("nb"))
-            & (F.col("shingle") == F.col("shingle_b")),
-        )
-        .groupBy("name_a", "name_b")
-        .agg(F.count("*").alias("inter"))
-    )
+    # each distinct pair picks up both shingle sets, so |A∩B| is one
+    # projection: no shingle re-join, no intersection count aggregate
+    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
+    union = (F.size("sh_a") + F.size("sh_b")).cast("long") - inter
     # threshold as exact integer cross-multiplication (den·inter >= num·union)
     # so the DuckDB canonicalization oracle replicates the cut bit-for-bit;
     # threshold_fraction bounds the denominator (a non-terminating threshold
@@ -129,13 +127,14 @@ def similarity_edges(
     from ..semantics import threshold_fraction
 
     num, den = threshold_fraction(threshold)
-    union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
+    sets_a = sets.withColumnsRenamed({"name": "name_a", "sh": "sh_a"})
+    sets_b = sets.withColumnsRenamed({"name": "name_b", "sh": "sh_b"})
     return (
-        inter.join(sizes.withColumnsRenamed({"name": "name_a", "sz": "sz_a"}), "name_a")
-        .join(sizes.withColumnsRenamed({"name": "name_b", "sz": "sz_b"}), "name_b")
-        .where(F.col("inter") * den >= F.lit(num) * union)
-        .withColumn("jaccard", F.col("inter") / union)
-        .select("name_a", "name_b", "jaccard")
+        cand.join(F.broadcast(sets_a), "name_a")
+        .join(F.broadcast(sets_b), "name_b")
+        .select("name_a", "name_b", inter.alias("inter"), union.alias("union"))
+        .where(F.col("inter") * den >= F.lit(num) * F.col("union"))
+        .select("name_a", "name_b", (F.col("inter") / F.col("union")).alias("jaccard"))
     )
 
 
@@ -162,57 +161,46 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     pytest-pinned).  The
     default max_iter=20 therefore covers any component a real corpus can
     produce; :func:`canonicalize` exposes it for pathological graphs.
-    cut_lineage every round cuts the lineage chain (reliable checkpoint
-    under a configured checkpoint dir, localCheckpoint otherwise) (SURVEY §4:
-    driver-side loop over DataFrame ops, checkpointed).
-    Each round's checkpoint job also observes how many labels moved, so
-    convergence costs no action of its own.
+
+    Eager, not lazy: the call itself runs Spark jobs — one cut of the
+    adjacency at entry and one cut per round (reliable checkpoint under a
+    configured checkpoint dir, localCheckpoint otherwise; SURVEY §4:
+    driver-side loop over DataFrame ops, checkpointed).  Local checkpoint
+    blocks stay in the session until Spark's context cleaner collects
+    the frames that reference them.  Each round's checkpoint job also
+    observes how many labels moved, so convergence costs no action of
+    its own.
     """
     max_iter = max(int(max_iter), 1)  # the for/else warning needs >= 1 round
-    # materialize the caller's edge pipeline ONCE before fanning out: the
-    # symmetrizing union references it twice and the labels cut below is
-    # a separate job, so an uncut (typically expensive — shingle blocking
-    # + Jaccard verify) edge plan was re-evaluated ~4x before the first
-    # round even ran (measured: CC over the same edges checkpointed 3.1 s
-    # vs 7.7 s lazy at sf1) — the q_pagerank/q_triangles edge-build
-    # discipline, applied at the operator boundary.  ``sym`` itself is
-    # two projections of this cut, so it needs no cut of its own.
-    edges = cut_lineage(edges)
-    sym = edges.select(
-        F.col("name_a").alias("src"), F.col("name_b").alias("dst")
-    ).unionByName(
-        edges.select(F.col("name_b").alias("src"), F.col("name_a").alias("dst"))
-    )
-    labels = (
-        sym.select(F.col("src").alias("name"))
+    # the adjacency: both directions of every edge plus a self-loop per
+    # node, materialized ONCE before the rounds fan out over it.  The
+    # self-loop makes a node's own label one of the values its round
+    # minimizes over, so a round is a single min aggregate (no join back
+    # onto the label table), and it carries the previous label as _old.
+    # min() partial-aggregates map-side, so a hot (high-degree) vertex's
+    # incoming labels are already combined before the shuffle.
+    e = edges.select(F.col("name_a").alias("src"), F.col("name_b").alias("dst"))
+    loops = (
+        e.select(F.col("src").alias("n"))
+        .union(e.select(F.col("dst").alias("n")))
         .distinct()
-        .withColumn("component", F.xxhash64("name"))
-        .transform(cut_lineage)
+        .select(F.col("n").alias("src"), F.col("n").alias("dst"))
     )
+    adj = cut_lineage(
+        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).union(loops)
+    )
+    labels = None
     for it in range(max_iter):
-        # explicit salting + two-phase min per north_rule: a hot (high-
-        # degree) vertex's incoming labels first reduce within
-        # (dst, hash(src) % 16) groups, then across salts — min() already
-        # partial-aggregates map-side, so this is belt-and-braces for the
-        # pathological case where one dst dominates a shuffle partition
-        salted = sym.join(labels, sym.src == labels.name).withColumn(
-            "salt", F.pmod(F.xxhash64("src"), F.lit(16))
-        )
-        partial = salted.groupBy("dst", "salt").agg(
-            F.min("component").alias("pmin")
-        )
-        neighbor_min = partial.groupBy("dst").agg(F.min("pmin").alias("nbr_min"))
-        # ``_old`` carries the previous label through the round, so the
-        # convergence count rides the round's own checkpoint job
-        new_labels = (
-            labels.join(neighbor_min, labels.name == neighbor_min.dst, "left")
-            .select(
-                "name",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-                ).alias("component"),
-                F.col("component").alias("_old"),
+        if labels is None:  # round 0: every node starts as its own hash
+            carried = adj.select("src", "dst", F.xxhash64("src").alias("c"))
+        else:
+            carried = adj.join(
+                labels.select(F.col("name").alias("src"), F.col("component").alias("c")),
+                "src",
             )
+        new_labels = carried.groupBy(F.col("dst").alias("name")).agg(
+            F.min("c").alias("component"),
+            F.min(F.when(F.col("src") == F.col("dst"), F.col("c"))).alias("_old"),
         )
         # pointer jump through the PREVIOUS (checkpointed) label table:
         # component is xxhash64 of some member node, so look that node up
@@ -279,33 +267,34 @@ def canonicalize(
     ``entities`` may hold a name more than once (``build_entities`` rows
     are keyed by (name, concept_type)); it is collapsed to one row per
     name with its max mention_count — the count the election would pick
-    anyway — so the mapping holds one row per name."""
-    entities = entities.groupBy("name").agg(
-        F.max("mention_count").alias("mention_count")
+    anyway — so the mapping holds one row per name.  That vocabulary is
+    cut once: the similarity edges and the election both read the cut,
+    never the caller's (mention-sized) plan."""
+    vocab = cut_lineage(
+        entities.groupBy("name").agg(F.max("mention_count").alias("mention_count"))
     )
-    edges = similarity_edges(entities, threshold)
-    comp = connected_components(edges, max_iter=max_iter)
-    members = entities.join(comp, "name", "left").withColumn(
-        "component", F.coalesce(F.col("component"), F.xxhash64("name"))
+    comp = connected_components(similarity_edges(vocab, threshold), max_iter=max_iter)
+    # the labels cover only the linked names, a subset of the vocabulary:
+    # broadcast them rather than shuffle both sides
+    members = vocab.join(F.broadcast(comp), "name", "left").select(
+        "name",
+        "mention_count",
+        F.coalesce(F.col("component"), F.xxhash64("name")).alias("component"),
     )
-    # canonical member = highest mention_count, tie-break smallest name —
-    # ONE map-side-combinable aggregate: min(struct(-mc, name)) orders by
-    # mention_count DESC then name ASC, so b.nm IS the canonical name.
-    # A NULL count is coalesced to 0: struct ordering puts NULL first, so
-    # an uncoalesced NULL would win the election over every real count.
-    # (Replaces the former three-step max-struct → top-count join → min
-    # agg: same deterministic winner, two fewer shuffles and one fewer
-    # evaluation of the members subtree.)
-    canon = members.groupBy("component").agg(
-        F.min(
-            F.struct(
-                (-F.coalesce(F.col("mention_count"), F.lit(0))).alias("negmc"),
-                F.col("name").alias("nm"),
-            )
-        ).alias("b")
-    ).select("component", F.col("b.nm").alias("canonical_name"))
-    return members.join(canon, "component").select(
-        "name", "canonical_name", "component"
+    # canonical member = highest mention_count, tie-break smallest name:
+    # min(struct(-mc, name)) over the component orders by mention_count
+    # DESC then name ASC, so its nm IS the canonical name — one window,
+    # no aggregate joined back onto the members.  A NULL count is
+    # coalesced to 0: struct ordering puts NULL first, so an uncoalesced
+    # NULL would win the election over every real count.
+    best = F.min(
+        F.struct(
+            (-F.coalesce(F.col("mention_count"), F.lit(0))).alias("negmc"),
+            F.col("name").alias("nm"),
+        )
+    ).over(Window.partitionBy("component"))
+    return members.select(
+        "name", best.getField("nm").alias("canonical_name"), "component"
     )
 
 

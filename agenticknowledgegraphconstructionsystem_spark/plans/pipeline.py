@@ -18,7 +18,10 @@ The set-at-a-time lift of the reference's per-paper ``extraction_logs``
 (db_init.py:150-159).  A killed run re-enters at the first uncommitted
 stage; committed stages are read back, not recomputed (D8 resume,
 database.ts:66-81), and their inputs are not even planned: a resumed
-stage costs a manifest check and one lazy read.
+stage costs a manifest check and one lazy read, and a fully resumed run
+submits no Spark job (pytest-pinned).  Shared inputs — the re-pointed
+mentions (:meth:`Pipeline.canonical_mentions`), the relationship edges —
+are built once, by the first stage that computes.
 """
 
 from __future__ import annotations
@@ -39,7 +42,7 @@ from ..session import cut_lineage
 from ..operators.entities import (
     build_doc_concept_edges,
     build_entities,
-    build_entities_with_context,
+    entity_first_context,
 )
 from ..operators.extract import extract_docs, with_stats
 from ..operators.linking import (
@@ -62,9 +65,9 @@ STAGES = (
     "dedup",
     "curate",
     "mentions",
-    "entities",
     "canonical_map",
     "edges",
+    "entities",
     "relationships",
     "triples",
     "findings",
@@ -200,6 +203,7 @@ class Pipeline:
         self.mixture_targets = mixture_targets
         self.assemble_shards = assemble_shards
         self._recomputed: list[str] = []
+        self._canonical: DataFrame | None = None
 
     # -- lineage ---------------------------------------------------------
     def _lineage_rows(
@@ -407,6 +411,22 @@ class Pipeline:
         return with_stats(kept.withColumn("extracted_text", redacted))
 
     # -- per-doc incremental ingest (D8 at row granularity) ---------------
+    def _pending_path(self) -> str:
+        return os.path.join(self.store.base_dir, "_mentions_pending")
+
+    def _drop_unappended_mentions(self) -> None:
+        """An incremental ingest marks ``mentions`` pending before its
+        extract append and clears the mark once the delta mentions are
+        appended (or there were none).  A mark left behind means the
+        ingest stopped in between, perhaps after the extract delta was
+        published: the committed mentions may lack the new docs, so they
+        and every stage after them are uncommitted, and the next run
+        re-detects them from the whole extract table."""
+        if os.path.exists(self._pending_path()):
+            for stage in STAGES[STAGES.index("mentions") :]:
+                self.store.uncommit(stage)
+            os.remove(self._pending_path())
+
     def ingest_increment(self, pages: DataFrame) -> DataFrame:
         """database.ts:66-81 semantics lifted to sets: extract ONLY pages
         whose url has no committed extract output (J7 anti-join), append,
@@ -417,38 +437,37 @@ class Pipeline:
         not recompute the other 99.9%):
 
         * **extract** — delta-only by construction (the resume anti-join),
-          with lineage rows for the first commit and for each append.
-        * **mentions** — per-doc, so the delta's mentions are detected and
-          APPENDED to the committed mentions table (with lineage rows for
-          the delta partitions); the full corpus is never re-detected.
-          Only possible when no dedup stage sits between extract and
-          mentions — a near-dup family can span old+new docs, so any
-          ``dedup_mode`` forces the corpus-wide dedup (and hence mention
-          re-detection) to rerun.
-        * **entities / canonical_map / edges / relationships / triples /
+          written once by the append (no checkpoint, no count: the row
+          count comes from the delta's parquet footers), with lineage rows
+          for the first commit and for each append.
+        * **mentions** — per-doc, so the delta's mentions are detected from
+          the published extract delta and APPENDED to the committed
+          mentions table (with lineage rows for the delta partitions); the
+          full corpus is never re-detected.  Only possible when no dedup
+          stage sits between extract and mentions — a near-dup family can
+          span old+new docs, so any ``dedup_mode`` forces the corpus-wide
+          dedup (and hence mention re-detection) to rerun.
+        * **canonical_map / edges / entities / relationships / triples /
           findings / validated_edges** — re-aggregated from the enlarged
           mentions table on the next run().  These are corpus-level
           aggregates and joins; entities re-aggregate cheaply (one
           shuffle over mentions), while linking/CC genuinely needs the
           rebuild (a new surface form can bridge two existing
           components).
-        * a no-op increment (every url already extracted) invalidates
-          NOTHING — downstream outputs are provably unchanged.
+        * a no-op increment (every url already extracted) publishes
+          nothing, leaves no delta dir and invalidates NOTHING —
+          downstream outputs are provably unchanged.
         """
         t0 = time.time()
+        self._canonical = None
         if not self.store.is_committed("extract"):
             self.store.commit("extract", extract_docs(pages), self.run_id)
             # extract is one row per page, so rows in = the commit's rows
             n = self.store.manifest("extract")["rows"]
             self._lineage_rows("extract", n, int((time.time() - t0) * 1000))
             return self.store.read("extract")
-        committed = self.store.read("extract")
-        todo = resume_inputs(pages, committed, "url")
-        # one materialization serves the append AND the delta detection
-        new_docs = extract_docs(todo).transform(cut_lineage)
-        n_new = new_docs.count()
-        if n_new == 0:
-            return new_docs
+        self._drop_unappended_mentions()
+        todo = resume_inputs(pages, self.store.read("extract"), "url")
         # corpus-wide stages between extract and mentions (dedup OR
         # curation) force re-detection: a near-dup family can span
         # old+new docs, and delta mentions must never be detected from
@@ -458,30 +477,63 @@ class Pipeline:
             and not self.curate
             and self.store.is_committed("mentions")
         )
-        # Crash ordering: invalidate the corpus-level stages BEFORE any
-        # append lands — a crash after the appends but before the
-        # uncommits would otherwise leave stale downstream commits over an
-        # enlarged extract table.  With this order a crash at any point
-        # either (a) loses the whole increment (downstream rebuilds from
-        # the old tables — consistent, the increment is retryable via the
-        # same anti-join) or (b) lands the appends with downstream already
-        # invalidated.  The appends themselves go through Spark's file
-        # output committer, so an aborted job leaves no visible partial
-        # part-files.
+        # Crash ordering: the extract append lands its delta, THEN
+        # uncommits the corpus-level stages, THEN publishes — so a crash
+        # before the publish loses the whole increment (downstream
+        # rebuilds from the old tables, or is still committed over them;
+        # the increment is retryable via the same anti-join), and a crash
+        # after it leaves the delta with downstream already invalidated.
+        # The mentions append publishes after the extract's: the pending
+        # mark covers that window (_drop_unappended_mentions).  Appends go
+        # through Spark's file output committer, so an aborted job leaves
+        # no visible partial part-files.
         keep = {"extract"} | ({"mentions"} if incremental_mentions else set())
-        for stage in STAGES:
-            if stage not in keep:
-                self.store.uncommit(stage)
-        self.store.append("extract", new_docs)
-        self._lineage_rows("extract", n_new, int((time.time() - t0) * 1000))
         if incremental_mentions:
-            t0 = time.time()
-            self.store.append("mentions", clean_mentions(detect_mentions_native(new_docs)))
-            self._lineage_rows("mentions", n_new, int((time.time() - t0) * 1000))
+            open(self._pending_path(), "w").close()
+        new_docs = extract_docs(todo)
+        n_new = self.store.append(
+            "extract", new_docs, uncommit=tuple(s for s in STAGES if s not in keep)
+        )
+        if n_new:
+            self._lineage_rows("extract", n_new, int((time.time() - t0) * 1000))
+            new_docs = self.store.read_delta("extract")
+            if incremental_mentions:
+                t0 = time.time()
+                delta = clean_mentions(detect_mentions_native(new_docs))
+                if self.store.append("mentions", delta):
+                    self._lineage_rows("mentions", n_new, int((time.time() - t0) * 1000))
+        if incremental_mentions:
+            os.remove(self._pending_path())
         return new_docs
 
     # -- the pipeline ----------------------------------------------------
+    def canonical_mentions(self) -> DataFrame:
+        """The mentions edges, entities, relationships and graph_metrics
+        are built from.  With ``link`` on: the committed mentions
+        re-pointed at their canonical names, one row per (url, name),
+        built on the first call after the mentions and canonical_map
+        stages commit — by the first stage that computes, or by a caller —
+        and materialized with one cut_lineage that later calls share; a
+        fully resumed run never builds it.  With ``link`` off: the
+        committed mentions table as it is."""
+        if self._canonical is None:
+            mentions = self.store.read("mentions")
+            if self.link:
+                # merged surface forms leave duplicate (url, name) rows —
+                # collapse to the best row per key before entities and
+                # relationships (else sum_relevance double-counts and the
+                # shared-concept join inflates multiplicatively)
+                mentions = cut_lineage(
+                    dedup_repointed_mentions(
+                        repoint_mentions(mentions, self.store.read("canonical_map"))
+                    )
+                )
+            self._canonical = mentions
+        return self._canonical
+
     def run(self, pages: DataFrame) -> dict[str, DataFrame]:
+        self._canonical = None
+        self._drop_unappended_mentions()
         docs = self._stage("extract", lambda: extract_docs(pages))
         if self.dedup_mode in ("minhash", "winnow"):
             docs = self._stage("dedup", lambda: self._near_dedup(docs))
@@ -498,30 +550,28 @@ class Pipeline:
         # a stage's derived inputs are built inside its build lambda, so a
         # committed stage costs its manifest check and a lazy read, no plan
         if self.link:
-            mapping = self._stage(
+            self._stage(
                 "canonical_map",
                 lambda: canonicalize(
                     build_entities(raw_mentions).select("name", "mention_count"),
                     threshold=self.link_threshold,
                 ),
             )
-            # merged surface forms leave duplicate (url, name) rows —
-            # collapse to the best row per key before entities/relationships
-            # (else sum_relevance double-counts and the shared-concept join
-            # inflates multiplicatively)
-            mentions = dedup_repointed_mentions(
-                repoint_mentions(raw_mentions, mapping)
-            )
-        else:
-            mentions = raw_mentions
-        # entities carry the keep-first description payload
-        # (concepts.description, database.ts:109) via the deduped edge table
-        entities = self._stage(
-            "entities", lambda: build_entities_with_context(mentions)
+        edges = self._stage(
+            "edges", lambda: build_doc_concept_edges(self.canonical_mentions())
         )
-        edges = self._stage("edges", lambda: build_doc_concept_edges(mentions))
+        # entities carry the keep-first description payload
+        # (concepts.description, database.ts:109), read off the committed
+        # edge table instead of re-deriving it
+        entities = self._stage(
+            "entities",
+            lambda: build_entities(self.canonical_mentions()).join(
+                entity_first_context(edges), "name", "left"
+            ),
+        )
         rels = self._stage(
-            "relationships", lambda: discover_relationships(docs, mentions)
+            "relationships",
+            lambda: discover_relationships(docs, self.canonical_mentions()),
         )
 
         @functools.cache
@@ -543,7 +593,9 @@ class Pipeline:
         )
         gm = None
         if self.graph_metrics:
-            gm = self._stage("graph_metrics", lambda: self._graph_metrics(mentions))
+            gm = self._stage(
+                "graph_metrics", lambda: self._graph_metrics(self.canonical_mentions())
+            )
         lg = hr = None
         if self.link_graph:
             from ..operators.links import link_edges
@@ -589,14 +641,12 @@ class Pipeline:
             )
         self._results = {
             "docs": docs,
-            "mentions": mentions,
             "entities": entities,
             "relationships": rels,
             "findings": findings,
         }
         out = {
             "docs": docs,
-            "mentions": mentions,
             "entities": entities,
             "edges": edges,
             "relationships": rels,

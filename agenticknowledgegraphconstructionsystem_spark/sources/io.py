@@ -243,11 +243,18 @@ class StageStore:
         self._write_manifest(stage, manifest, prev)
         return self._load(stage, manifest)
 
-    def append(self, stage: str, df: DataFrame) -> int:
+    def append(self, stage: str, df: DataFrame, uncommit: tuple[str, ...] = ()) -> int:
         """Iceberg-style append: land a delta data dir, then publish a new
         snapshot referencing previous dirs + the delta.  Existing files are
         never rewritten, so every retained snapshot stays readable.
-        Returns the number of appended rows."""
+        Returns the number of appended rows, read from the delta's footers
+        (no counting job).
+
+        An empty delta publishes nothing: its dir is removed and 0 is
+        returned.  Otherwise the ``uncommit`` stages are uncommitted after
+        the data has landed and before the snapshot is published, so no
+        crash can leave the new snapshot published beside a still
+        committed ``uncommit`` stage."""
         prev = self.manifest(stage)  # raises if not committed — appends need a base
         if prev.get("partition_by"):
             # delta dirs are written unpartitioned; mixing them under a
@@ -263,6 +270,11 @@ class StageStore:
         path = os.path.join(self._path(stage), rel)
         df.write.mode("overwrite").parquet(path)
         added = sum(written_rows(path).values())
+        if added == 0:
+            shutil.rmtree(path, ignore_errors=True)
+            return 0
+        for other in uncommit:
+            self.uncommit(other)
         manifest = {
             **{k: v for k, v in prev.items() if k != "history"},
             "rows": int(prev.get("rows", 0)) + added,
@@ -304,6 +316,12 @@ class StageStore:
         """Read the current snapshot, or any retained one via ``as_of``."""
         return self._load(stage, self._resolve(stage, as_of))
 
+    def read_delta(self, stage: str) -> DataFrame:
+        """The current snapshot's newest data dir alone: after an append,
+        exactly the appended rows."""
+        m = self.manifest(stage)
+        return self._load(stage, {**m, "paths": m["paths"][-1:]})
+
     def _load(self, stage: str, snap: dict) -> DataFrame:
         """A snapshot's data dirs as one DataFrame, read with the schema
         its manifest records (see commit)."""
@@ -333,5 +351,6 @@ def merge_by_key(
 
 def resume_inputs(inputs: DataFrame, committed: DataFrame, key: str) -> DataFrame:
     """J7 anti-join resume (database.ts:66-81): rows whose key already
-    appears in committed output are skipped."""
-    return inputs.join(committed.select(key).distinct(), key, "left_anti")
+    appears in committed output are skipped.  A left-anti join only tests
+    that a key exists, so duplicate committed keys need no distinct."""
+    return inputs.join(committed.select(key), key, "left_anti")

@@ -11,8 +11,10 @@ versions within ONE session, minutes apart, and take min-of-rounds per
     round 3: A sweep, B sweep
 
 Each sweep is a fresh subprocess (own JVM) that resolves query names via
-that tree's ``__spark_entry__.queries()``, warms up, and runs each query
-once, noop-sink forced.  A calibration wall (fixed CPU workload) is taken
+that tree's ``__spark_entry__.queries()``, then through this checkout's
+``bench_extra.legs()`` (bench.py's own legs such as
+``kg_canonicalize_20x``, run over that tree's package), warms up, and
+runs each query once, noop-sink forced.  A calibration wall (fixed CPU workload) is taken
 before every sweep so noisy windows are flagged in the output.
 
 Usage:
@@ -30,6 +32,7 @@ import argparse
 import json
 import math
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -48,29 +51,27 @@ DEFAULT_QUERIES = [
 ]
 
 _WORKER = r"""
-import json, sys, time
-tree, sf_dir, cpus, names = sys.argv[1], sys.argv[2], sys.argv[3], sys.argv[4].split(",")
+import importlib.util, json, sys, time
+tree, sf_dir, cpus, names, tool = sys.argv[1], sys.argv[2], sys.argv[3], sys.argv[4].split(","), sys.argv[5]
 sys.path.insert(0, tree)
 from agenticknowledgegraphconstructionsystem_spark.session import get_spark
 import __spark_entry__ as E
 spark = get_spark(app_name="ab-bench", cores=cpus)
 spark.sparkContext.setLogLevel("ERROR")
 qs = E.queries()
-# micro-gates folded into suites (e.g. td_simhash_sigs since round 6) stay
-# A/B-addressable: merge the sweep registries without clobbering queries()
-try:
-    from agenticknowledgegraphconstructionsystem_spark.gate_textdata import TEXT_MICRO_QUERIES
-    for k, v in TEXT_MICRO_QUERIES.items():
-        qs.setdefault(k, v)
-except Exception:
-    pass
-try:
-    from agenticknowledgegraphconstructionsystem_spark.gate_curation import CURATION_MICRO_QUERIES
-    for k, v in CURATION_MICRO_QUERIES.items():
-        qs.setdefault(k, v)
-except Exception:
-    pass
+# every other leg bench_extra.py can time (folded micro-gates, bench.py's
+# own legs such as kg_canonicalize_20x) stays A/B-addressable: the
+# registry comes from this tool's checkout and runs over the swept tree's
+# package, already imported above; queries() entries keep precedence
+spec = importlib.util.spec_from_file_location("bench_extra", tool + "/bench_extra.py")
+bench_extra = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(bench_extra)
+legs, shared_mentions = bench_extra.legs()
+extra = {k: v for k, v in legs.items() if k not in qs}
+qs.update(extra)
 spark.read.parquet(sf_dir + "/customer.parquet").count()  # JVM warm-up
+if any(n in extra for n in names):
+    shared_mentions(spark, sf_dir)  # bench.py's shared mentions, untimed
 walls = {}
 for name in names:
     fn = qs[name]
@@ -89,7 +90,7 @@ spark.stop()
 
 def sweep(tree: str, sf_dir: str, cpus: str, names: list[str]) -> dict[str, float]:
     out = subprocess.run(
-        [sys.executable, "-c", _WORKER, tree, sf_dir, cpus, ",".join(names)],
+        [sys.executable, "-c", _WORKER, tree, sf_dir, cpus, ",".join(names), REPO],
         capture_output=True,
         text=True,
         timeout=3600,
@@ -121,13 +122,13 @@ def main() -> None:
     ref_sha = subprocess.run(
         ["git", "rev-parse", args.ref], capture_output=True, text=True, cwd=REPO
     ).stdout.strip()
+    # the ref's committed files, unpacked into a scratch dir (no worktree
+    # metadata is left in the repository)
     wt = tempfile.mkdtemp(prefix=f"ab-{ref_sha[:8]}-")
-    subprocess.run(
-        ["git", "worktree", "add", "--detach", wt, ref_sha],
-        check=True,
-        capture_output=True,
-        cwd=REPO,
-    )
+    archive = subprocess.run(
+        ["git", "archive", ref_sha], check=True, capture_output=True, cwd=REPO
+    ).stdout
+    subprocess.run(["tar", "-x", "-C", wt], input=archive, check=True)
     try:
         rounds: list[dict] = []
         for i in range(args.rounds):
@@ -172,11 +173,7 @@ def main() -> None:
             json.dump(result, f, indent=1)
         print(json.dumps(result))
     finally:
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", wt],
-            capture_output=True,
-            cwd=REPO,
-        )
+        shutil.rmtree(wt, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -177,7 +177,7 @@ def main() -> None:
         "export_wet": "export_wet_records",
         "assembly": "assembly_rows",
     }
-    counts = {"mentions": res["mentions"].count()}
+    counts = {"mentions": p.canonical_mentions().count()}
     for stage, key in summary_keys.items():
         if stage in res:
             counts[key] = p.store.manifest(stage)["rows"]

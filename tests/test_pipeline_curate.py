@@ -82,7 +82,7 @@ def test_curate_stage_drops_and_redacts(spark, tmp_path):
     assert "<EMAIL>" in text and "<PHONE>" in text
     assert "a.b@example.com" not in text and "555-123-4567" not in text
     # masked text is what mention detection saw: no mention row carries PII
-    leaked = res["mentions"].where(F.col("context").contains("a.b@example.com"))
+    leaked = p.canonical_mentions().where(F.col("context").contains("a.b@example.com"))
     assert leaked.count() == 0
     assert "curate" in p._recomputed
     # lineage rows landed for the stage

@@ -99,7 +99,8 @@ def test_noop_rerun_recomputes_nothing(spark, tmp_path):
 
 def test_full_resume_plans_nothing_and_submits_no_job(spark, tmp_path, monkeypatch):
     """A re-run over a store holding every stage builds no stage input
-    (the builders are patched to raise) and submits no Spark job."""
+    (the builders, the mention re-pointing included, are patched to raise)
+    and submits no Spark job."""
     pages = synthetic_pages(spark, 20)
     out = str(tmp_path / "kg")
     Pipeline(spark, out, run_id="a").run(pages)
@@ -107,7 +108,13 @@ def test_full_resume_plans_nothing_and_submits_no_job(spark, tmp_path, monkeypat
     def refuse(*_args, **_kwargs):
         raise AssertionError("a resumed run built a stage input")
 
-    for name in ("build_entities", "upsert_relationship_edges", "canonicalize"):
+    for name in (
+        "build_entities",
+        "upsert_relationship_edges",
+        "canonicalize",
+        "repoint_mentions",
+        "dedup_repointed_mentions",
+    ):
         monkeypatch.setattr(pipeline, name, refuse)
     sc = spark.sparkContext
     sc.setJobGroup("full-resume", "re-run over a fully committed store")
@@ -118,7 +125,7 @@ def test_full_resume_plans_nothing_and_submits_no_job(spark, tmp_path, monkeypat
         sc._jsc.clearJobGroup()
     assert p._recomputed == []
     assert sc.statusTracker().getJobIdsForGroup("full-resume") == []
-    assert set(res) >= {"mentions", "triples", "validated_edges"}
+    assert set(res) >= {"entities", "triples", "validated_edges"}
 
 
 def test_session_call_site_capture_off(spark):

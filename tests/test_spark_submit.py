@@ -31,11 +31,12 @@ from agenticknowledgegraphconstructionsystem_spark.sources.pages import syntheti
 
 spark = SparkSession.builder.getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
-res = Pipeline(spark, sys.argv[1], run_id="submit0").run(synthetic_pages(spark, 60))
+p = Pipeline(spark, sys.argv[1], run_id="submit0")
+res = p.run(synthetic_pages(spark, 60))
 print("RESULT_JSON:" + json.dumps({
     "pkg_file": pkg.__file__,
     "triples": res["triples"].count(),
-    "mentions": res["mentions"].count(),
+    "mentions": p.canonical_mentions().count(),
     "entities": res["entities"].count(),
 }))
 spark.stop()
